@@ -169,17 +169,8 @@ class LexicalGraphQueryEngine:
                 self.config,
                 query_vector=pseudo_embedding(query_text, _embed_dim(self.graph)),
             )
-        from graphrag_toolkit_spark.operators import processors as P
-        from graphrag_toolkit_spark.operators.rollup import nest_results
-
-        flat = self._retriever(self.graph, query_text, self.config)
-        flat = P.dedup_results(flat)
-        flat = P.rescore_results(flat)
-        flat = P.truncate_statements(self.config.max_statements_per_topic)(flat)
-        flat = P.truncate_results(self.config.max_search_results)(flat)
-        return nest_results(
-            flat.drop("result_score"),
-            max_results=self.config.max_search_results,
+        return query_engine.processor_tail(
+            self._retriever(self.graph, query_text, self.config), self.config
         )
 
     def query(self, query_text: str) -> Response:

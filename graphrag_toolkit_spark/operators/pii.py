@@ -26,18 +26,6 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def detect_pii(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(id, n_email, n_ip, n_phone) — match counts per PII class."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        *[
-            F.regexp_count(t, F.lit(pat)).alias(f"n_{label}")
-            for label, pat, _ in PII_PATTERNS
-        ],
-    )
-
-
 def scrub_expr(text: Column) -> Column:
     """The redacted-text expression: sequential replace in PII_PATTERNS
     order (same chain the oracle runs)."""

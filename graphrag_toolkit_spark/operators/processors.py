@@ -1,10 +1,15 @@
-"""Result-processor chain (SURVEY.md §2.4 A5-A6, §2.7 T1-T9).
+"""Result-processor chain (SURVEY.md §2.4 A5-A6, §2.7 T2-T11).
 
 The reference applies an ordered list of processors to the nested
 SearchResultCollection (``traversal_based_base_retriever.py:24-46``). Here
-every processor is a ``DataFrame -> DataFrame`` over the FLAT statement rows
-(see ``rollup.py`` for the flat-then-nest rationale), so the whole chain
-fuses into one Catalyst plan — no materialization between steps.
+every processor is a lazy ``DataFrame -> DataFrame`` over the FLAT statement
+rows (see ``rollup.py`` for the flat-then-nest rationale), so the whole chain
+fuses into one Catalyst plan — no materialization between steps. A
+processor that reads its input twice (a keep-set or scalar aggregate joined
+back) re-reads it inside that plan, which is cheap over a materialized
+input, so materialization is the caller's: ``query_engine`` checkpoints each
+retrieval chain's deduped statement pool once (seed-bounded, see its module
+docstring), and every processor after that reads the checkpoint.
 
 Flat row contract: columns at least
 ``source_id, topic_id, topic, chunk_id, statement_id, value, details, facts,
@@ -55,13 +60,7 @@ def rescore_results(flat: DataFrame) -> DataFrame:
     """A6: append ``result_score`` = mean over the source's topics of the max
     statement score. Reference: ``retrieval/processors/rescore_results.py:39-80``."""
     per_topic = Window.partitionBy("source_id", "topic_id")
-    per_source = Window.partitionBy("source_id")
-    # with_max feeds the topic-mean aggregate AND the final join: truncate
-    # the lineage so everything upstream (often a whole processor chain) is
-    # planned and computed once, not once per reference (guide §3.3)
-    with_max = flat.withColumn(
-        "_topic_max", F.max("score").over(per_topic)
-    ).localCheckpoint(eager=False)
+    with_max = flat.withColumn("_topic_max", F.max("score").over(per_topic))
     # mean over DISTINCT topics: average the per-topic max once per topic
     topic_means = (
         with_max.select("source_id", "topic_id", "_topic_max")
@@ -70,13 +69,6 @@ def rescore_results(flat: DataFrame) -> DataFrame:
         .agg(F.avg("_topic_max").alias("result_score"))
     )
     return with_max.drop("_topic_max").join(topic_means, "source_id")
-
-
-def sort_results(flat: DataFrame) -> DataFrame:
-    """T1: deterministic presentation order."""
-    cols = ["score", "statement_id"]
-    order = [F.desc("result_score")] if "result_score" in flat.columns else []
-    return flat.orderBy(*order, F.asc("source_id"), F.desc(cols[0]), F.asc(cols[1]))
 
 
 def truncate_statements(max_per_topic: int = 10) -> Processor:
@@ -99,8 +91,6 @@ def truncate_results(max_results: int = 5) -> Processor:
     Reference: ``processors/truncate_results.py``."""
 
     def _p(flat: DataFrame) -> DataFrame:
-        # keep-set aggregate + the final semi-join both read flat (§3.3)
-        flat = flat.localCheckpoint(eager=False)
         keep = (
             flat.groupBy("source_id")
             .agg(F.sum("score").alias("_s"))
@@ -160,29 +150,11 @@ def prune_statements(factor: float = 0.05) -> Processor:
         # scalar-aggregate broadcast instead of max() OVER () — the empty
         # window spec single-partitions the whole frame; the one-row cross
         # join costs an extra (fully parallel) pass and stays bounded at
-        # any input size. The checkpoint stops the max leg and the filter
-        # leg from each re-planning the upstream chain (§3.3).
-        flat = flat.localCheckpoint(eager=False)
+        # any input size.
         mx = flat.agg(F.max("score").alias("_max"))
         return (
             flat.crossJoin(F.broadcast(mx))
             .filter(F.col("score") >= factor * F.col("_max"))
-            .drop("_max")
-        )
-
-    return _p
-
-
-def prune_results(threshold: float = 0.08) -> Processor:
-    """T6: drop whole sources whose result_score falls below ``threshold ×
-    best result_score`` (requires ``rescore_results`` first)."""
-
-    def _p(flat: DataFrame) -> DataFrame:
-        flat = flat.localCheckpoint(eager=False)  # see prune_statements
-        mx = flat.agg(F.max("result_score").alias("_max"))
-        return (
-            flat.crossJoin(F.broadcast(mx))
-            .filter(F.col("result_score") >= threshold * F.col("_max"))
             .drop("_max")
         )
 
@@ -199,11 +171,6 @@ def union_weighted(branches: list[tuple[DataFrame, float]]) -> DataFrame:
         scaled = df.withColumn("score", F.col("score") * F.lit(float(weight)))
         out = scaled if out is None else out.unionByName(scaled)
     return out
-
-
-def distinct_ids(flat: DataFrame, col: str = "statement_id") -> DataFrame:
-    """T9: set-dedup on an id column."""
-    return flat.dropDuplicates([col])
 
 
 def ordered_dedup(df: DataFrame, key: str, order: str) -> DataFrame:

@@ -32,19 +32,6 @@ def scored_statement_context(g: SparkGraphTables, statement_ids: DataFrame) -> D
     )
 
 
-def source_topic_scores(flat: DataFrame) -> DataFrame:
-    """A1 scoring leg: per (source, topic): distinct chunks + statement count;
-    per source: score = Σ_topics (n_statements / n_chunks).
-    Reference: ``traversal_based_base_retriever.py:153-189``."""
-    per_topic = flat.groupBy("source_id", "topic_id").agg(
-        F.countDistinct("chunk_id").alias("n_chunks"),
-        F.count(F.lit(1)).alias("n_statements"),
-    )
-    return per_topic.groupBy("source_id").agg(
-        F.sum(F.col("n_statements") / F.col("n_chunks")).alias("source_score")
-    )
-
-
 def nest_results(flat: DataFrame, max_results: int = 10) -> DataFrame:
     """A1 assembly: flat rows → one row per source with the nested topic tree,
     ordered by source score desc (deterministic tie-break on source_id).

@@ -139,13 +139,16 @@ def tfidf_cosine_scores(
     spark = docs.sparkSession
     if n_docs is None:
         n_docs = docs.count()
-    caller_tokens = doc_tokens is not None
-    if not caller_tokens:
-        # the token table feeds BOTH remaining consumers (idf stats and the
-        # fused norm+dot aggregate): materialize the row-local tokenizer once
-        # instead of re-running it per consumer
+    # only checkpoint=True materializes the scores, so only then can this
+    # call release a token cache before returning: persist only then
+    owned = checkpoint and doc_tokens is None
+    if doc_tokens is None:
         doc_tokens = tokenize(docs, text_col, id_col)
-        doc_tokens.persist()
+        if owned:
+            # the token table feeds BOTH remaining consumers (idf stats and
+            # the fused norm+dot aggregate): materialize the row-local
+            # tokenizer once instead of re-running it per consumer
+            doc_tokens.persist()
     # idf table = corpus vocabulary (Heaps-law growth) — no hint; AQE
     # broadcasts while small, shuffle-joins on token when it is not
     idf = idf_table(doc_tokens, n_docs)
@@ -178,7 +181,7 @@ def tfidf_cosine_scores(
     if qnorm == 0.0:
         if checkpoint:
             idf.unpersist()
-            if not caller_tokens:
+            if owned:
                 doc_tokens.unpersist()
         return docs.select(F.col(id_col).alias("id"), F.lit(0.0).alias("tfidf_score"))
 
@@ -206,7 +209,7 @@ def tfidf_cosine_scores(
     if checkpoint:
         scores = scores.localCheckpoint(eager=True)
         idf.unpersist()  # both consumers have materialized
-        if not caller_tokens:
+        if owned:
             doc_tokens.unpersist()
     return (
         docs.select(F.col(id_col).alias("id"))
@@ -299,12 +302,14 @@ def bm25_scores(
     """
     if n_docs is None:
         n_docs = docs.count()
-    caller_tokens = doc_tokens is not None
-    if not caller_tokens:
+    # persisted only where this call also releases it (see tfidf above)
+    owned = checkpoint and doc_tokens is None
+    if doc_tokens is None:
         # dl rides along row-locally (with_dl) — no groupBy over the token
         # table just to recover each doc's own length
         doc_tokens = tokenize(docs, text_col, id_col, with_dl=True)
-        doc_tokens.persist()
+        if owned:
+            doc_tokens.persist()
 
     total_row = doc_tokens.agg(
         F.sum("tf").cast("double").alias("s"),
@@ -317,6 +322,8 @@ def bm25_scores(
         {t for t in __import__("re").split(r"[^0-9a-z]+", query_text.lower()) if t}
     )
     if not q_terms or avgdl == 0.0:
+        if owned:
+            doc_tokens.unpersist()
         return docs.select(F.col(id_col).alias("id"), F.lit(0.0).alias("bm25"))
     spark = docs.sparkSession
     qdf = F.broadcast(
@@ -359,7 +366,7 @@ def bm25_scores(
         # (same cache-hygiene rationale as tfidf_cosine_scores above);
         # checkpoint=False keeps the full lazy plan visible for plan tests
         scores = scores.localCheckpoint(eager=True)
-        if not caller_tokens:
+        if owned:
             doc_tokens.unpersist()
     return (
         docs.select(F.col(id_col).alias("id"))

@@ -10,6 +10,16 @@ Pipeline, matching the reference's query flow without any LLM/service stage:
       → rescore (A6) → truncate per topic (T2) → truncate results (T3)
     → nested SearchResult rows (A1)
 
+Each chain materializes one frame, its deduped statement pool
+(``_deduped_pool``), and every processor is a lazy transform
+(``processors.py``), so the rest of the chain runs inside the caller's one
+final action. The pool is seed-bounded (≤ ``intermediate_limit`` rows per
+query) and it is the frame several reads share: in ``chunk_search_flat`` the
+TF-IDF rerank's vocabulary, idf and query-norm jobs; in ``processor_tail``
+the rescore and truncate steps, whose column-pruned reads would each re-run
+the un-materialized upstream. The checkpoint is eager, because under AQE a
+lazy local checkpoint runs its map stages at construction anyway.
+
 Fully deterministic — the correctness suite runs it against golden
 brute-force oracles; no model in the loop (keyword/entity providers in
 passthru mode, reference ``processor_args.py:81-82``).
@@ -17,7 +27,7 @@ passthru mode, reference ``processor_args.py:81-82``).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame
 
@@ -137,13 +147,33 @@ def chunk_search_flat(
     flat = scored_statement_context(g, stmt_ids)
 
     # processor chain (flat rows; see processors.py)
-    flat = P.dedup_results(flat)
-    flat = rerank_by_tfidf(flat, query_text, alpha=cfg.tfidf_alpha)
+    flat = rerank_by_tfidf(_deduped_pool(flat), query_text, alpha=cfg.tfidf_alpha)
     flat = P.prune_statements(cfg.prune_factor)(flat)
+    return _rescore_truncate(flat, cfg)
+
+
+def _deduped_pool(flat: DataFrame) -> DataFrame:
+    """dedup (A5), checkpointed: the chain's one materialization."""
+    return P.dedup_results(flat).localCheckpoint(eager=True)
+
+
+def _rescore_truncate(flat: DataFrame, cfg: RetrievalConfig) -> DataFrame:
+    """rescore (A6) → truncate per topic (T2) → truncate results (T3)."""
     flat = P.rescore_results(flat)
     flat = P.truncate_statements(cfg.max_statements_per_topic)(flat)
-    flat = P.truncate_results(cfg.max_search_results)(flat)
-    return flat
+    return P.truncate_results(cfg.max_search_results)(flat)
+
+
+def _nested(flat: DataFrame, cfg: RetrievalConfig) -> DataFrame:
+    """A1 — nested assembly, capped at ``max_search_results``."""
+    return nest_results(flat.drop("result_score"), max_results=cfg.max_search_results)
+
+
+def processor_tail(flat: DataFrame, cfg: RetrievalConfig) -> DataFrame:
+    """The processor tail for flat rows merged from several branches or
+    produced by a custom retriever: materialized dedup (A5) →
+    rescore/truncate → nested rows."""
+    return _nested(_rescore_truncate(_deduped_pool(flat), cfg), cfg)
 
 
 def chunk_based_search(
@@ -154,9 +184,7 @@ def chunk_based_search(
 ) -> DataFrame:
     """End-to-end chunk-based traversal search → nested SearchResult rows."""
     cfg = config or RetrievalConfig()
-    flat = chunk_search_flat(g, query_text, cfg, query_vector)
-    # A1 — nested assembly
-    return nest_results(flat.drop("result_score"), max_results=cfg.max_search_results)
+    return _nested(chunk_search_flat(g, query_text, cfg, query_vector), cfg)
 
 
 def composite_search(
@@ -166,21 +194,15 @@ def composite_search(
 ) -> DataFrame:
     """T8 + §3.2 stage 4: weighted union of per-query retrieval branches.
     The reference fans retrievers out over a thread pool and merges; here
-    every branch is a sub-DAG of ONE plan — `union` → shared dedup (scores
-    sum across branches) → rescore/truncate → nested rows. Reference:
+    every branch is a ``chunk_search_flat`` chain and the merge is one
+    ``processor_tail`` — `union` → shared dedup (scores sum across branches)
+    → rescore/truncate → nested rows. Reference:
     ``composite_traversal_based_retriever.py:128-205``."""
     cfg = config or RetrievalConfig()
     flats = [
         (chunk_search_flat(g, q, cfg).drop("result_score"), w) for q, w in branches
     ]
-    merged = P.union_weighted(flats)
-    merged = P.dedup_results(merged)
-    merged = P.rescore_results(merged)
-    merged = P.truncate_statements(cfg.max_statements_per_topic)(merged)
-    merged = P.truncate_results(cfg.max_search_results)(merged)
-    return nest_results(
-        merged.drop("result_score"), max_results=cfg.max_search_results
-    )
+    return processor_tail(P.union_weighted(flats), cfg)
 
 
 def query_mode(llm: LLM, query_text: str) -> str:
@@ -226,21 +248,13 @@ def multipart_search(
 
     mode = query_mode(llm, query_text) if enable_multipart else "simple"
     if mode == "simple":
-        flat = retrieve(g, query_text, cfg)
-        return nest_results(
-            flat.drop("result_score"), max_results=cfg.max_search_results
-        )
+        return _nested(retrieve(g, query_text, cfg), cfg)
 
     keywords = llm_keywords(llm, query_text) or [query_text]
     scaled = int(cfg.max_search_results / len(keywords)) + 1
-    sub_cfg = RetrievalConfig(
-        vss_top_k=cfg.vss_top_k,
-        vss_diversity_factor=cfg.vss_diversity_factor,
-        intermediate_limit=cfg.intermediate_limit,
+    sub_cfg = replace(
+        cfg,
         max_search_results=scaled,
-        max_statements_per_topic=cfg.max_statements_per_topic,
-        prune_factor=cfg.prune_factor,
-        tfidf_alpha=cfg.tfidf_alpha,
         extra=dict(cfg.extra, keyword_provider="passthru"),
     )
     flats = [retrieve(g, k, sub_cfg).drop("result_score") for k in keywords]
@@ -250,7 +264,7 @@ def multipart_search(
     # concatenation parity: no cross-branch dedup/rescore; the nested
     # assembly caps at the ORIGINAL max_search_results like the reference's
     # downstream consumer
-    return nest_results(merged, max_results=cfg.max_search_results)
+    return _nested(merged, cfg)
 
 
 def decomposed_search(

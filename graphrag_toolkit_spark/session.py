@@ -148,22 +148,13 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    legacy = os.environ.get("SPARK_GRAFT_WARMUP", "") == "legacy"
-
     # 1. fixture tables: full-column decode (a bare count() prunes every
     #    column and skips the data pages entirely)
     for t in TESTDATA_TABLES:
         try:
-            if legacy:
-                load(spark, sf_dir, t).count()
-            else:
-                load(spark, sf_dir, t).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+            load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
         except Exception:
             pass
-    if legacy:  # A/B instrument: the pre-round-9 warm-up, nothing else
-        return
 
     n = spark.sparkContext.defaultParallelism
     try:
@@ -216,15 +207,6 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     except Exception:
         pass  # warm-up must never fail a run
     release_blocks(spark)
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    """Register the driver's parquet fixtures as temp views named like the
-    DuckDB oracle's views (TESTDATA.md)."""
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            load(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str):

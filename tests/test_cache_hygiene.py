@@ -14,7 +14,7 @@ from __future__ import annotations
 import pytest
 
 from graphrag_toolkit_spark.operators import dedup
-from graphrag_toolkit_spark.operators.tfidf import tfidf_cosine_scores
+from graphrag_toolkit_spark.operators.tfidf import bm25_scores, tfidf_cosine_scores
 from graphrag_toolkit_spark.session import load
 
 
@@ -38,8 +38,17 @@ class TestNoPersistLeak:
         assert _df_cache_empty(spark)
 
     def test_tfidf_releases_token_cache(self, spark, docs):
-        tfidf_cosine_scores(docs, "spark filter join", "text", "doc_id").count()
-        assert _df_cache_empty(spark)
+        # both scorers, both checkpoint modes, and "!!!" — a query with no
+        # terms, which takes each scorer's early return
+        for scorer in (tfidf_cosine_scores, bm25_scores):
+            for checkpoint in (True, False):
+                for query in ("spark filter join", "!!!"):
+                    scorer(
+                        docs, query, "text", "doc_id", checkpoint=checkpoint
+                    ).count()
+                    assert _df_cache_empty(spark), (
+                        scorer.__name__, checkpoint, query
+                    )
 
     def test_connected_components_releases_edges(self, spark):
         pairs = spark.createDataFrame(
@@ -62,8 +71,7 @@ class TestNoPersistLeak:
 
 class TestWarmUp:
     """warm_up (bench/bench_one pre-measurement phase) must be side-effect
-    free: no cached frames, no persistent RDD blocks left behind, and the
-    legacy variant must stay available as the A/B instrument."""
+    free: no cached frames, no persistent RDD blocks left behind."""
 
     def test_warm_up_leaves_no_blocks(self, spark, sf_dir):
         from graphrag_toolkit_spark.session import warm_up
@@ -74,11 +82,3 @@ class TestWarmUp:
         assert (
             spark.sparkContext._jsc.getPersistentRDDs().size() == 0
         ), "warm_up must release every block it materializes"
-
-    def test_warm_up_legacy_toggle(self, spark, sf_dir, monkeypatch):
-        from graphrag_toolkit_spark.session import warm_up
-
-        monkeypatch.setenv("SPARK_GRAFT_WARMUP", "legacy")
-        spark.catalog.clearCache()
-        warm_up(spark, sf_dir)  # count()-only path; must also be clean
-        assert _df_cache_empty(spark)
