@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.fixtures import SparkGraphTables
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
 from graphrag_toolkit_spark.functions.vector import (
     cosine_score_prequantized,
     cosine_similarity,
@@ -175,14 +176,10 @@ def beam_search(
                 .filter(F.col("_rn") == 1)
                 .select("node_id", "score")
             )
-        best = (
-            dedup.orderBy(F.desc("score"), F.asc("node_id"))
-            .limit(beam_width)
-            # lazy + count: one job per depth instead of eager-checkpoint
-            # job + isEmpty job (same blocks; the _cc_star fusion)
-            .localCheckpoint(eager=False)
+        best = checkpoint_nonempty(
+            dedup.orderBy(F.desc("score"), F.asc("node_id")).limit(beam_width)
         )
-        if best.count() == 0:
+        if best is None:
             break
         visited = visited.unionByName(best.withColumn("depth", F.lit(depth)))
         frontier = best

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
+
 
 def schema_relations(triples: DataFrame) -> DataFrame:
     """Graph 'schema' = distinct relation labels (J12 companion)."""
@@ -52,18 +54,16 @@ def multi_hop(
         acc = None
         cur = frontier.select("node_id").distinct()
         for _ in range(hops):
-            # LAZY checkpoint + count: the count is the materializing action,
-            # so checkpoint-job + emptiness-job collapse into one job per hop
-            # with identical blocks (the _cc_star fusion). step empty ⇔ the
-            # next frontier (a projection+distinct of step) empty, so the
-            # count also replaces the old cur.isEmpty() — one fewer pass.
-            step = one_hop(t, cur).localCheckpoint(eager=False)
-            n_step = step.count()
-            acc = step if acc is None else acc.unionByName(step)
-            if n_step == 0:
+            # step empty ⇔ the next frontier (a projection + distinct of
+            # step) is empty, so one emptiness test per hop suffices
+            step = checkpoint_nonempty(one_hop(t, cur))
+            if step is None:
                 break
+            acc = step if acc is None else acc.unionByName(step)
             cur = step.select(F.col("dst").alias("node_id")).distinct()
-        return acc.distinct() if acc is not None else triples.limit(0)
+        if acc is None:
+            return triples.select("src", "rel", "dst").limit(0)
+        return acc.distinct()
     finally:
         t.unpersist()
 
@@ -85,15 +85,14 @@ def follow_metapath(
             step = t.filter(F.col("rel") == rel).select(
                 F.col("src").alias("cur_id"), F.col("dst").alias("nxt_id")
             )
-            cur = (
+            level = (
                 cur.join(step, "cur_id")
                 .select("start_id", F.col("nxt_id").alias("cur_id"))
                 .distinct()
-                # lazy + count: one job per level instead of eager-checkpoint
-                # job + isEmpty job (same blocks; the _cc_star fusion)
-                .localCheckpoint(eager=False)
             )
-            if cur.count() == 0:
+            cur = checkpoint_nonempty(level)
+            if cur is None:
+                cur = level.limit(0)
                 break
         return cur.select("start_id", F.col("cur_id").alias("end_id"))
     finally:
@@ -155,7 +154,7 @@ def shortest_paths(
             # max level width.
             .join(settled.select("node_id"), "node_id", "left_anti")
         )
-        nxt = (
+        nxt = checkpoint_nonempty(
             cand.withColumn(
                 "_rn",
                 F.row_number().over(
@@ -164,13 +163,8 @@ def shortest_paths(
             )
             .filter(F.col("_rn") == 1)
             .select("node_id", F.lit(depth).alias("dist"), "path")
-            # lazy + count: one job per level instead of eager-checkpoint
-            # job + isEmpty job (same blocks; the _cc_star fusion). The
-            # union into `settled` and the next level's frontier broadcast
-            # both read the blocks the count materialized.
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
+        if nxt is None:
             break
         # nxt is already checkpointed and disjoint from settled (anti-join
         # above), so the union needs no re-checkpoint and no dedup: lineage

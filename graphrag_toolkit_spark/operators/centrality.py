@@ -16,25 +16,131 @@ Two exactness regimes, one per algorithm family:
   (each halving hits an even number by induction) — bit-identical in any
   engine and partitioning; the final divide by 2^(b·K) is an exact
   power-of-two double op.
-- PageRank (``pagerank`` below) DOES divide by out-degree, which no integer
-  trick can absorb — so each per-edge message is quantized to the
-  6-decimal grid immediately after the one double division (both operands
-  exactly representable, so quotient + half-up rounding are
-  engine-identical) and everything else stays exact decimal arithmetic.
-  Same discipline as ``textstats.word_entropy``.
+- PageRank (``pagerank`` below) DOES divide by out-weight, which no
+  power-of-two trick can absorb — so its loop runs in scaled integers on
+  the 10⁻⁶ grid with floor division; every op stays integer (see
+  `pagerank`).
 
-Scale shape: the classic message-passing loop — per iteration one
-edge⋈ranks equi-join and one sum per destination (map-side partial
-aggregation applies; longs sum associatively). Ranks are localCheckpointed
-per round to keep lineage flat; the edge table is persisted across rounds.
-Skewed in-degree is ordinary aggregation skew (AQE / two-phase salting via
+Scale shape: the classic message-passing loop, run by one superstep
+kernel (`_propagate`) for `katz_centrality`, `personalized_katz` and
+`pagerank`. A round joins the ranks onto the persisted, src-partitioned
+edge table (only the rank rows move), unions in the per-node restart rows
+and sums per destination: one hash exchange per round (map-side partial
+aggregation applies; longs sum associatively). Each round's ranks are
+localCheckpointed lazily to keep the plan round-sized. Under AQE a lazy
+checkpoint still plans its round at once and runs the round's shuffle-map
+stages as jobs right then; only the last stage waits for the consumer.
+Measured: the traced `katz_centrality_graph` query (perfbench batch,
+sf0.001) submits 22 jobs while its frame is built and 1 at the action; on
+the 500-edge graph of tests/test_plans.py, `katz_centrality` builds in 7
+jobs at iters=1 and 11 at iters=3 (two per round), then collects in 1. Skewed in-degree is
+ordinary aggregation skew (AQE / two-phase salting via
 `functions/skew.py` if a hub dominates).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def _superstep(
+    e: DataFrame,
+    ranks: DataFrame,
+    restart: DataFrame,
+    message: Column,
+    update: Column,
+    n_salts: int | None = None,
+) -> DataFrame:
+    """One un-checkpointed round: ``ranks(node_id, r)`` joins ``e`` on
+    ``src`` (and ``_salt``, with ``n_salts``: the rank rows replicate once
+    per salt), each edge sends ``message`` to its ``dst`` as ``m``, the
+    ``restart(node_id, m)`` rows join the per-node sum, and ``update`` (an
+    aggregate over ``m``) is the node's new ``r``. Restart rows cost no
+    second shuffle and give every node they list a rank row, in-edges or
+    not."""
+    r_side = ranks.withColumnRenamed("node_id", "src")
+    keys = ["src"]
+    if n_salts:
+        r_side = r_side.withColumn(
+            "_salt",
+            F.explode(
+                F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>")
+            ),
+        )
+        keys.append("_salt")
+    return (
+        e.join(r_side, keys)
+        .select(F.col("dst").alias("node_id"), message.alias("m"))
+        .unionByName(restart)
+        .groupBy("node_id")
+        .agg(update.cast("long").alias("r"))
+    )
+
+
+def _propagate(
+    e: DataFrame,
+    ranks: DataFrame,
+    restart: DataFrame,
+    message: Column,
+    update: Column,
+    iters: int,
+    n_salts: int | None = None,
+) -> DataFrame:
+    """The superstep kernel: ``iters`` `_superstep` rounds, each lazily
+    localCheckpointed so the plan stays round-sized. ``e`` must be
+    persisted and hash-partitioned on the join keys, so no round
+    re-shuffles it. The lazy checkpoint runs no eager job of its own, but
+    AQE runs the round's shuffle-map stages when the checkpoint plans it
+    (see the module docstring)."""
+    for _ in range(iters):
+        ranks = _superstep(
+            e, ranks, restart, message, update, n_salts
+        ).localCheckpoint(eager=False)
+    return ranks
+
+
+def _node_set(e: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
+    """``(node_id)``: the endpoints ``src ∪ dst`` of ``e``, or the caller's
+    ``nodes`` (see `katz_centrality` for that contract), eagerly
+    checkpointed once."""
+    if nodes is None:
+        nodes = (
+            e.select(F.col("src").alias("node_id"))
+            .unionByName(e.select(F.col("dst").alias("node_id")))
+            .distinct()
+        )
+    return nodes.select("node_id").localCheckpoint(eager=True)
+
+
+def _weighted(
+    edges: DataFrame, src: str, dst: str, weight_col: str | None
+) -> DataFrame:
+    """``(src, dst, w)`` with BIGINT weights, 1 when ``weight_col`` is None."""
+    w = F.col(weight_col) if weight_col else F.lit(1)
+    return edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), w.cast("long").alias("w")
+    )
+
+
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """``(a, b)``: the undirected simple graph of ``edges`` — each edge once
+    as a < b, self-loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    """``(v, w)``: both orientations of every ``(a, b)`` edge of ``e``."""
+    return e.select(F.col("a").alias("v"), F.col("b").alias("w")).unionByName(
+        e.select(F.col("b").alias("v"), F.col("a").alias("w"))
+    )
 
 
 def katz_centrality(
@@ -80,70 +186,27 @@ def katz_centrality(
     if iters < 0 or alpha_log2 < 1:
         raise ValueError("iters must be >= 0 and alpha_log2 >= 1")
     scale = 1 << (alpha_log2 * iters)
-    # pre-shuffle the (loop-invariant) edge table by the join key ONCE:
-    # the persisted hash distribution satisfies every round's join
-    # requirement, so only the (much smaller) rank table moves per round.
-    wcol = (
-        F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
-    )
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst"), wcol.alias("w")
-    )
+    e = _weighted(edges, src, dst, weight_col)
     if n_salts:
         e = e.withColumn(
             "_salt", F.pmod(F.xxhash64(F.col("dst")), F.lit(n_salts))
         ).repartition(F.col("src"), F.col("_salt"))
-        join_keys = ["src", "_salt"]
     else:
         e = e.repartition(F.col("src"))
-        join_keys = ["src"]
     e.persist()
     try:
-        nodes = (
-            e.select(F.col("src").alias("node_id"))
-            .unionByName(e.select(F.col("dst").alias("node_id")))
-            .distinct()
-            if nodes is None
-            else nodes.select("node_id")
-        ).localCheckpoint(eager=True)
-        # zero-contribution row per node folded into the aggregate: one
-        # shuffle per round (the message sum) instead of sum + a second
-        # nodes-left-join shuffle, with identical results (0 adds nothing,
-        # but guarantees every node — in-edges or not — gets a rank row).
-        zeros = nodes.withColumn("r", F.lit(0).cast("long"))
-        ranks = nodes.withColumn("r", F.lit(scale).cast("long"))
-        for _ in range(iters):
-            r_side = ranks.withColumnRenamed("node_id", "src")
-            if n_salts:
-                r_side = r_side.withColumn(
-                    "_salt",
-                    F.explode(
-                        F.sequence(
-                            F.lit(0), F.lit(n_salts - 1)
-                        ).cast("array<bigint>")
-                    ),
-                )
-            msgs = e.join(r_side, join_keys).select(
-                F.col("dst").alias("node_id"),
-                (F.col("w") * F.col("r")).alias("r"),
-            )
-            ranks = (
-                msgs.unionByName(zeros)
-                .groupBy("node_id")
-                .agg(
-                    (
-                        F.lit(scale)
-                        + F.expr(f"sum(r) div {1 << alpha_log2}")
-                    ).cast("long").alias("r")
-                )
-                # LAZY checkpoint: still truncates lineage (plans stay
-                # round-sized) but materializes inside the NEXT round's job
-                # instead of forcing one eager job per round — ranks has a
-                # single consumer, so eagerness bought nothing (measured
-                # ~6% at sf0.1; the real cost is the per-round shuffle,
-                # which the algorithm needs)
-                .localCheckpoint(eager=False)
-            )
+        nodes = _node_set(e, nodes)
+        ranks = _propagate(
+            e,
+            nodes.withColumn("r", F.lit(scale).cast("long")),
+            # restart message S·2^b, S the rank scale: a multiple of 2^b,
+            # so (Σm + S·2^b) div 2^b = S + Σm div 2^b exactly
+            nodes.withColumn("m", F.lit(scale << alpha_log2).cast("long")),
+            F.col("w") * F.col("r"),
+            F.expr(f"sum(m) div {1 << alpha_log2}"),
+            iters,
+            n_salts,
+        )
         return ranks.select(
             "node_id",
             (F.col("r").cast("double") / F.lit(float(scale))).alias("katz"),
@@ -185,40 +248,17 @@ def personalized_katz(
         base = (
             seeds.select(F.col(seed_col).alias("node_id"))
             .distinct()
-            .select(
-                "node_id",
-                F.lit(0).cast("long").alias("m"),
-                F.lit(scale).cast("long").alias("b"),
-            )
             .localCheckpoint(eager=True)
         )
-        ranks = base.select(
-            "node_id", (F.col("m") + F.col("b")).alias("r")
+        ranks = _propagate(
+            e,
+            base.withColumn("r", F.lit(scale).cast("long")),
+            # seed-only restart, same S·2^b trick as katz_centrality
+            base.withColumn("m", F.lit(scale << alpha_log2).cast("long")),
+            F.col("r"),
+            F.expr(f"sum(m) div {1 << alpha_log2}"),
+            iters,
         )
-        for _ in range(iters):
-            # two-field accumulator in ONE shuffle: message mass `m` gets
-            # attenuated, seed restart mass `b` does not
-            msgs = e.join(
-                ranks.withColumnRenamed("node_id", "src"), "src"
-            ).select(
-                F.col("dst").alias("node_id"),
-                F.col("r").alias("m"),
-                F.lit(0).cast("long").alias("b"),
-            )
-            ranks = (
-                msgs.unionByName(base)
-                .groupBy("node_id")
-                .agg(
-                    (
-                        F.sum("b")
-                        + F.expr(f"sum(m) div {1 << alpha_log2}")
-                    ).cast("long").alias("r")
-                )
-                # LAZY: same rationale as katz_centrality — single consumer
-                # per round, so an eager per-round job buys nothing; lineage
-                # still truncates to round size
-                .localCheckpoint(eager=False)
-            )
         return ranks.select(
             "node_id",
             (F.col("r").cast("double") / F.lit(float(scale))).alias("score"),
@@ -278,16 +318,20 @@ def pagerank(
     dst: str = "dst",
     iters: int = 4,
     nodes: DataFrame | None = None,
+    weight_col: str | None = None,
 ) -> DataFrame:
     """Truncated PageRank (d = 0.85, unnormalized start r₀ = 1) over a
     directed simple graph — the canonical web-graph importance signal
     alongside the Katz family:
 
-        r_{t+1}(v) = 0.15 + 0.85 · Σ_{(u,v)∈E} q(r_t(u) / outdeg(u))
+        r_{t+1}(v) = 0.15 + 0.85 · Σ_{(u,v,w)∈E} q(w · r_t(u) / W(u))
 
-    Dangling mass (nodes with no out-edges) is dropped, not redistributed
-    — the "simple" variant; ranks are therefore comparable within a run,
-    not a probability distribution.
+    with W(u) the node's total out-weight. ``weight_col`` (positive INTEGER
+    edge weights: order multiplicity, click counts) splits a node's rank
+    across its out-edges by weight; without it every weight is 1 and W(u)
+    is the out-degree. Dangling mass (nodes with no out-edges) is dropped,
+    not redistributed — the "simple" variant; ranks are therefore
+    comparable within a run, not a probability distribution.
 
     EXACTNESS (the hash-gate discipline): division by out-degree breaks
     Katz's pure-power-of-two trick, and quantizing the double quotient
@@ -295,65 +339,43 @@ def pagerank(
     by small integers land exactly ON half-boundaries (1.234567/2 =
     .6172835), where the engines' double-rounding paths disagree. So the
     whole loop runs in SCALED INTEGERS on the 10⁻⁶ grid with FLOOR
-    semantics: r₆ holds rank·10⁶ as BIGINT, a message is ``r₆ div deg``
-    (exact integer floor), and the update is
+    semantics: r₆ holds rank·10⁶ as BIGINT, a message is ``(w · r₆) div W``
+    (one integer multiply before the exact integer floor; with unit
+    weights exactly ``r₆ div deg``), and the update is
     ``150000 + (85 · Σm) div 100`` — every op is integer, so scores are
     bit-identical in any engine and partitioning by construction. The
     systematic truncation error is < iters·10⁻⁶, far below any ranking
     use; the final ``r₆/10⁶`` is one exact-operand IEEE division.
 
-    Scale shape = katz_centrality's: the (edge ⋈ outdeg) table is built
-    once, repartitioned on the join key and persisted; only rank rows move
-    per round; zero-contribution rows fold the no-in-edge nodes into the
-    same single shuffle; lazy localCheckpoint keeps plans round-sized."""
+    Scale shape: `_propagate` over the (edge, W) table, built once,
+    repartitioned on src and persisted; zero-contribution restart rows fold
+    the no-in-edge nodes into the round's single shuffle."""
     if iters < 0:
         raise ValueError("iters must be >= 0")
     from pyspark.sql.window import Window
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # out-degree via a src-partitioned window instead of groupBy + re-join:
-    # the old shape read the (possibly expensive) edge build TWICE — once
-    # for the aggregate, once for the join's probe side — and shuffled e a
-    # second time for the loop's repartition. The window's exchange IS a
-    # hash partitioning on src, so one pass attaches deg and establishes
-    # the loop partitioning together (guide §2.4 "window partitioned by
-    # the same key as a preceding aggregation shares the exchange"); count
-    # is integer-exact, so rows are identical to the join form.
+    e = _weighted(edges, src, dst, weight_col)
+    # out-weight via a src-partitioned window, not groupBy + re-join: one
+    # read of the (possibly expensive) edge build instead of two, and the
+    # window's hash exchange on src is also the loop's partitioning (guide
+    # §2.4); the sum is integer-exact, so rows equal the join form's.
     ed = e.withColumn(
-        "deg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        "tw", F.sum("w").over(Window.partitionBy("src"))
     ).repartition(F.col("src"))
     ed.persist()
     try:
-        # see katz_centrality's `nodes` contract (set equality required)
-        nodes = (
-            e.select(F.col("src").alias("node_id"))
-            .unionByName(e.select(F.col("dst").alias("node_id")))
-            .distinct()
-            if nodes is None
-            else nodes.select("node_id")
-        ).localCheckpoint(eager=True)
-        zeros = nodes.withColumn("m", F.lit(0).cast("long"))
-        ranks = nodes.withColumn("r6", F.lit(1_000_000).cast("long"))
-        for _ in range(iters):
-            msgs = ed.join(
-                ranks.withColumnRenamed("node_id", "src"), "src"
-            ).select(
-                F.col("dst").alias("node_id"),
-                F.expr("r6 div deg").alias("m"),
-            )
-            ranks = (
-                msgs.unionByName(zeros)
-                .groupBy("node_id")
-                .agg(
-                    F.expr("150000 + (85 * sum(m)) div 100")
-                    .cast("long")
-                    .alias("r6")
-                )
-                .localCheckpoint(eager=False)
-            )
+        nodes = _node_set(e, nodes)
+        ranks = _propagate(
+            ed,
+            nodes.withColumn("r", F.lit(1_000_000).cast("long")),
+            nodes.withColumn("m", F.lit(0).cast("long")),
+            F.expr("(w * r) div tw"),
+            F.expr("150000 + (85 * sum(m)) div 100"),
+            iters,
+        )
         return ranks.select(
             "node_id",
-            (F.col("r6").cast("double") / F.lit(1_000_000.0)).alias("pagerank"),
+            (F.col("r").cast("double") / F.lit(1_000_000.0)).alias("pagerank"),
         )
     finally:
         ed.unpersist()
@@ -411,14 +433,7 @@ def hits(
     e_by_src = e.repartition(F.col("src")).persist()
     e_by_dst = e.repartition(F.col("dst")).persist()
     try:
-        # see katz_centrality's `nodes` contract (set equality required)
-        nodes = (
-            e.select(F.col("src").alias("node_id"))
-            .unionByName(e.select(F.col("dst").alias("node_id")))
-            .distinct()
-            if nodes is None
-            else nodes.select("node_id")
-        ).localCheckpoint(eager=True)
+        nodes = _node_set(e, nodes)
         zeros = nodes.withColumn("m", F.lit(0).cast("long"))
 
         def _half(scores: DataFrame, join_key: str, out_key: str) -> DataFrame:
@@ -497,14 +512,7 @@ def modularity(
     table, then three map-side-combined aggregates (per-community inside
     counts, per-community degree sums, one global reduce) cross-joined as
     one-row broadcasts — the edge list is scanned once."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     asg = assignments.select(
         F.col(node_col).alias("node"), F.col(comm_col).alias("c")
     )
@@ -573,15 +581,8 @@ def degree_assortativity(
     global reduce with map-side combine. BIGINT-safe while M·Σ(d_u·d_v)
     < 2⁶³ — beyond ~10⁹ heavy-tailed edges switch the two products to
     DECIMAL(38,0)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)  # both degree legs + the ed join read it
-    )
+    # both degree legs + the ed join read it
+    e = _canonical(edges, src, dst).localCheckpoint(eager=False)
     deg = (
         e.select(F.col("a").alias("n"))
         .unionByName(e.select(F.col("b").alias("n")))
@@ -609,78 +610,6 @@ def degree_assortativity(
             "assortativity"
         ),
     )
-
-
-def weighted_pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    weight_col: str = "w",
-    iters: int = 4,
-) -> DataFrame:
-    """Edge-weighted truncated PageRank — `pagerank` where a node's rank
-    splits across out-edges in proportion to INTEGER edge weights (order
-    multiplicity, click counts) instead of uniformly:
-
-        r_{t+1}(v) = 0.15 + 0.85 · Σ_{(u,v,w)∈E} ⌊w · r_t(u) / W(u)⌋
-
-    with W(u) the node's total out-weight. Same scaled-integer floor
-    discipline as `pagerank` (r₆ = rank·10⁶ BIGINT; the per-edge message
-    is ``(w · r6) div W`` — one integer multiply before the floor divide,
-    so weighting adds NO new rounding surface) and the same dangling-mass
-    drop. Weights must be positive integers; the systematic truncation
-    error stays < iters·10⁻⁶ per edge chain.
-
-    Scale shape identical to `pagerank`: (edge ⋈ out-weight) built once,
-    repartitioned on src and persisted; only rank rows move per round."""
-    if iters < 0:
-        raise ValueError("iters must be >= 0")
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight_col).cast("long").alias("w"),
-    )
-    from pyspark.sql.window import Window
-
-    # out-weight via a src-partitioned window — see pagerank: one pass
-    # over the edge build instead of aggregate + re-join (two reads), and
-    # the window's hash exchange doubles as the loop's src partitioning.
-    ed = e.withColumn(
-        "tw", F.sum("w").over(Window.partitionBy("src"))
-    ).repartition(F.col("src"))
-    ed.persist()
-    try:
-        nodes = (
-            e.select(F.col("src").alias("node_id"))
-            .unionByName(e.select(F.col("dst").alias("node_id")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        zeros = nodes.withColumn("m", F.lit(0).cast("long"))
-        ranks = nodes.withColumn("r6", F.lit(1_000_000).cast("long"))
-        for _ in range(iters):
-            msgs = ed.join(
-                ranks.withColumnRenamed("node_id", "src"), "src"
-            ).select(
-                F.col("dst").alias("node_id"),
-                F.expr("(w * r6) div tw").alias("m"),
-            )
-            ranks = (
-                msgs.unionByName(zeros)
-                .groupBy("node_id")
-                .agg(
-                    F.expr("150000 + (85 * sum(m)) div 100")
-                    .cast("long")
-                    .alias("r6")
-                )
-                .localCheckpoint(eager=False)
-            )
-        return ranks.select(
-            "node_id",
-            (F.col("r6").cast("double") / F.lit(1_000_000.0)).alias("pagerank"),
-        )
-    finally:
-        ed.unpersist()
 
 
 def neighborhood_sizes(
@@ -723,8 +652,7 @@ def neighborhood_sizes(
         .localCheckpoint(eager=True)
     )
     und = (
-        e.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .unionByName(e.select(F.col("b").alias("v"), F.col("a").alias("w")))
+        _both_ways(e)
         .unionByName(nodes.select(F.col("n").alias("v"), F.col("n").alias("w")))
         .distinct()
     ).localCheckpoint(eager=False)
@@ -799,11 +727,7 @@ def label_propagation(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    und = (
-        e.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .unionByName(e.select(F.col("b").alias("v"), F.col("a").alias("w")))
-        .localCheckpoint(eager=True)
-    )
+    und = _both_ways(e).localCheckpoint(eager=True)
     nodes = und.select(F.col("v").alias("node_id")).distinct().localCheckpoint(
         eager=True
     )
@@ -857,60 +781,38 @@ def ktruss_peel(
     survivors are localCheckpointed."""
     if k < 2:
         raise ValueError("k must be >= 2")
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    sup_df = None
-    for _ in range(rounds):
-        und = e.select(F.col("a").alias("v"), F.col("b").alias("w")).unionByName(
-            e.select(F.col("b").alias("v"), F.col("a").alias("w"))
-        )
-        wedges = (
+    e = _canonical(edges, src, dst).localCheckpoint(eager=True)
+
+    def _support(e: DataFrame) -> DataFrame:
+        # triangles per edge: wedges on the lower endpoint, closed by a
+        # semi-join back against the adjacency
+        und = _both_ways(e)
+        closed = (
             e.join(und.withColumnsRenamed({"v": "a", "w": "x"}), "a")
             .filter(F.col("x") != F.col("b"))
-        )
-        closed = wedges.join(
-            und.withColumnsRenamed({"v": "b", "w": "x"}), ["b", "x"], "left_semi"
-        )
-        sup_df = (
-            e.join(
-                closed.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support")),
-                ["a", "b"],
-                "left",
-            )
-            .select(
-                "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
+            .join(
+                und.withColumnsRenamed({"v": "b", "w": "x"}),
+                ["b", "x"],
+                "left_semi",
             )
         )
+        return e.join(
+            closed.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support")),
+            ["a", "b"],
+            "left",
+        ).select(
+            "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
+        )
+
+    for _ in range(rounds):
         e = (
-            sup_df.filter(F.col("support") >= k - 2)
+            _support(e)
+            .filter(F.col("support") >= k - 2)
             .select("a", "b")
             .localCheckpoint(eager=True)
         )
     # final support of the SURVIVING edges (post-peel state)
-    und = e.select(F.col("a").alias("v"), F.col("b").alias("w")).unionByName(
-        e.select(F.col("b").alias("v"), F.col("a").alias("w"))
-    )
-    wedges = (
-        e.join(und.withColumnsRenamed({"v": "a", "w": "x"}), "a")
-        .filter(F.col("x") != F.col("b"))
-    )
-    closed = wedges.join(
-        und.withColumnsRenamed({"v": "b", "w": "x"}), ["b", "x"], "left_semi"
-    )
-    return e.join(
-        closed.groupBy("a", "b").agg(F.count(F.lit(1)).alias("support")),
-        ["a", "b"],
-        "left",
-    ).select(
-        "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
-    )
+    return _support(e)
 
 
 def conductance(
@@ -943,14 +845,7 @@ def conductance(
     Scale shape: two equi-joins onto the assignment table, then two
     map-side-combined per-community aggregates; the total volume is a
     one-row broadcast (2m — derived, never a second scan)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _canonical(edges, src, dst)
     asg = assignments.select(
         F.col(node_col).alias("node"), F.col(comm_col).alias("c")
     )
@@ -1018,19 +913,8 @@ def harmonic_2hop(
     Σ_v deg(v)² — wedge count, the same budget every triangle/clustering
     op on this graph already pays) followed by a distinct and an anti-join
     to drop distance-1 pairs."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    und = (
-        e.select(F.col("a").alias("v"), F.col("b").alias("w"))
-        .unionByName(e.select(F.col("b").alias("v"), F.col("a").alias("w")))
-        .localCheckpoint(eager=False)  # both hops + the anti-join read it
-    )
+    e = _canonical(edges, src, dst)
+    und = _both_ways(e).localCheckpoint(eager=False)  # both hops + anti-join
     n1 = und.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("n1"))
     two = (
         und.withColumnsRenamed({"v": "u", "w": "mid"})

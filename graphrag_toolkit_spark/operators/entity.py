@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.fixtures import SparkGraphTables
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
 from graphrag_toolkit_spark.functions.text import search_string
 
 LOCAL_ENTITY = "__Local_Entity__"
@@ -306,7 +307,7 @@ def expand_context(
             .agg(F.count(F.lit(1)).alias("strength"))
         )
         w = Window.partitionBy("src").orderBy(F.desc("strength"), F.asc("dst"))
-        nxt = (
+        nxt = checkpoint_nonempty(
             cand.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= per_node_limit)
             .select(
@@ -326,11 +327,8 @@ def expand_context(
             )
             .filter(F.col("_rn2") == 1)
             .drop("_rn2")
-            # lazy + count: one job per level instead of eager-checkpoint
-            # job + isEmpty job (same blocks; the _cc_star fusion)
-            .localCheckpoint(eager=False)
         )
-        if nxt.count() == 0:
+        if nxt is None:
             break
         acc = acc.unionByName(nxt)
         frontier = nxt.select("entity_id")

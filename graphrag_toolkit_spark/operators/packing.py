@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
 from graphrag_toolkit_spark.operators.sampling import hash_value
 
 
@@ -229,7 +230,8 @@ def bpe_train_merges(
                 ),
             ),
         ).otherwise(F.array().cast("array<string>"))
-        best = (
+        # consumed by the merge table AND every later round's corpus rewrite
+        best = checkpoint_nonempty(
             corpus.select(F.explode(pairs).alias("pair"), F.col("cnt"))
             .groupBy("pair")
             .agg(F.sum("cnt").alias("n"))
@@ -240,13 +242,8 @@ def bpe_train_merges(
                 F.split_part(F.col("pair"), F.lit(" "), F.lit(2)).alias("sym_b"),
                 F.col("n").cast("bigint").alias("n"),
             )
-            # lazy + count: computed once, consumed by the merge table AND
-            # every later round's corpus rewrite; the count below is the
-            # materializing action (one job per round instead of
-            # checkpoint-job + isEmpty job — the _cc_star fusion)
-            .localCheckpoint(eager=False)
         )
-        if best.count() == 0:
+        if best is None:
             break  # no adjacent pairs left (e.g. all-single-symbol words):
             # fewer merges than requested, like any real BPE trainer
         merge_rows.append(

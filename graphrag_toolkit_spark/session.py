@@ -10,9 +10,12 @@ hand-schedule.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 TESTDATA_TABLES = (
     "region",
@@ -153,8 +156,11 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
     for t in TESTDATA_TABLES:
         try:
             load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
+        except Exception as exc:  # warm-up must never fail a run
+            log.warning(
+                "warm_up: skipped fixture table %s: %s: %s",
+                t, type(exc).__name__, exc,
+            )
 
     n = spark.sparkContext.defaultParallelism
     try:
@@ -204,8 +210,10 @@ def warm_up(spark: SparkSession, sf_dir: str) -> None:
         spark.range(0, 4 * n, 1, 4 * n).mapInArrow(
             _imports, "id long"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass  # warm-up must never fail a run
+    except Exception as exc:  # warm-up must never fail a run
+        log.warning(
+            "warm_up: skipped the synthetic jobs: %s: %s", type(exc).__name__, exc
+        )
     release_blocks(spark)
 
 

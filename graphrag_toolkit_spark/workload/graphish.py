@@ -1717,8 +1717,8 @@ WPAGERANK_ITERS = 4
 
 
 def weighted_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge-weighted PageRank (`centrality.weighted_pagerank`) over the
-    order→part multigraph — rank splits by lineitem multiplicity, the
+    """Edge-weighted PageRank (`centrality.pagerank` with ``weight_col``)
+    over the order→part multigraph — rank splits by lineitem multiplicity, the
     weighted twin of `pagerank_graph` (same scaled-integer floor loop,
     one extra integer multiply per message)."""
     from graphrag_toolkit_spark.operators import centrality
@@ -1729,9 +1729,9 @@ def weighted_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_orderkey").cast("long") * 4 + 1).alias("src"),
         (F.col("l_partkey").cast("long") * 4 + 2).alias("dst"),
     ).agg(F.count(F.lit(1)).alias("w"))
-    return centrality.weighted_pagerank(edges, iters=WPAGERANK_ITERS).select(
-        _decode_node("node_id").alias("node_id"), "pagerank"
-    )
+    return centrality.pagerank(
+        edges, iters=WPAGERANK_ITERS, weight_col="w"
+    ).select(_decode_node("node_id").alias("node_id"), "pagerank")
 
 
 def _wpagerank_oracle() -> str:

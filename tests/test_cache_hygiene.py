@@ -11,6 +11,8 @@ the ContextCleaner when it's collected.
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from graphrag_toolkit_spark.operators import dedup
@@ -68,6 +70,32 @@ class TestNoPersistLeak:
         chunk_beam_search(g, qv, seed_top_k=3, beam_width=3, max_depth=1).count()
         assert _df_cache_empty(spark)
 
+    def test_rank_operators_release_edge_tables(self, spark):
+        from graphrag_toolkit_spark.operators import centrality as c
+
+        edges = spark.range(60).selectExpr(
+            "cast(id % 12 as string) src",
+            "cast((id * 5) % 12 as string) dst",
+            "id % 3 + 1 as w",
+        )
+        seeds = spark.createDataFrame([("0",), ("1",)], "node_id string")
+        ops = {
+            "katz": lambda: c.katz_centrality(edges, iters=2),
+            "katz salted": lambda: c.katz_centrality(edges, iters=2, n_salts=3),
+            "personalized katz": lambda: c.personalized_katz(
+                edges, seeds, iters=2
+            ),
+            "pagerank": lambda: c.pagerank(edges, iters=2),
+            "weighted pagerank": lambda: c.pagerank(
+                edges, iters=2, weight_col="w"
+            ),
+            "hits": lambda: c.hits(edges, iters=2),
+        }
+        spark.catalog.clearCache()
+        for name, op in ops.items():
+            op().count()
+            assert _df_cache_empty(spark), name
+
 
 class TestWarmUp:
     """warm_up (bench/bench_one pre-measurement phase) must be side-effect
@@ -82,3 +110,12 @@ class TestWarmUp:
         assert (
             spark.sparkContext._jsc.getPersistentRDDs().size() == 0
         ), "warm_up must release every block it materializes"
+
+    def test_warm_up_logs_missing_tables(self, spark, tmp_path, caplog):
+        from graphrag_toolkit_spark.session import warm_up
+
+        with caplog.at_level(logging.WARNING, logger="graphrag_toolkit_spark"):
+            warm_up(spark, str(tmp_path))
+        assert any(
+            "fixture table region" in r.getMessage() for r in caplog.records
+        ), [r.getMessage() for r in caplog.records]

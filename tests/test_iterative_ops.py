@@ -858,22 +858,19 @@ class TestWeightedPagerank:
         """a→b (w=3), a→c (w=1): a's rank splits 3:1.
         b = 0.15 + 0.85·⌊3/4⌋₆ = 0.15 + 0.85·0.75 = 0.7875;
         c = 0.15 + 0.85·0.25 = 0.3625; a = 0.15."""
-        from graphrag_toolkit_spark.operators.centrality import weighted_pagerank
+        from graphrag_toolkit_spark.operators.centrality import pagerank
 
         edges = spark.createDataFrame(
             [("a", "b", 3), ("a", "c", 1)], "src string, dst string, w long"
         )
         out = {
             r["node_id"]: r["pagerank"]
-            for r in weighted_pagerank(edges, iters=1).collect()
+            for r in pagerank(edges, iters=1, weight_col="w").collect()
         }
         assert out == {"a": 0.15, "b": 0.7875, "c": 0.3625}
 
     def test_uniform_weights_match_unweighted(self, spark):
-        from graphrag_toolkit_spark.operators.centrality import (
-            pagerank,
-            weighted_pagerank,
-        )
+        from graphrag_toolkit_spark.operators.centrality import pagerank
 
         edges = spark.createDataFrame(
             [(f"n{i}", f"n{(i * 7 + 3) % 20}") for i in range(40)],
@@ -883,19 +880,19 @@ class TestWeightedPagerank:
         a = {r["node_id"]: r["pagerank"] for r in pagerank(edges, iters=3).collect()}
         b = {
             r["node_id"]: r["pagerank"]
-            for r in weighted_pagerank(w1, iters=3).collect()
+            for r in pagerank(w1, iters=3, weight_col="w").collect()
         }
         assert a == b
 
     def test_partitioning_invariant(self, spark):
-        from graphrag_toolkit_spark.operators.centrality import weighted_pagerank
+        from graphrag_toolkit_spark.operators.centrality import pagerank
 
         edges = spark.createDataFrame(
             [(f"n{i}", f"n{(i * 11 + 5) % 17}", 1 + i % 4) for i in range(50)],
             "src string, dst string, w long",
         )
-        a = weighted_pagerank(edges, iters=3).collect()
-        b = weighted_pagerank(edges.repartition(13), iters=3).collect()
+        a = pagerank(edges, iters=3, weight_col="w").collect()
+        b = pagerank(edges.repartition(13), iters=3, weight_col="w").collect()
         assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 

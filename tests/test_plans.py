@@ -386,20 +386,128 @@ def test_validate_row_local_rules_single_scan(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_katz_round_reuses_edge_partitioning(spark):
-    """One Katz round: the persisted pre-partitioned edge table must not
-    acquire a second exchange for the join (only ranks move)."""
+def _rank_edges(spark):
+    """The 500-edge, 50-node graph the rank-family plan and job tests use,
+    with integer weights ``id % 3 + 1``."""
+    return spark.range(500).selectExpr(
+        "cast(id % 50 as string) src",
+        "cast((id * 7) % 50 as string) dst",
+        "id % 3 + 1 as w",
+    )
+
+
+def _first_round_plan(monkeypatch, run) -> str:
+    """Formatted plan of the first round ``run()`` sends through the rank
+    kernel, built un-checkpointed while the operator's edge table is still
+    persisted (the rounds the kernel returns are opaque checkpoints)."""
+    from graphrag_toolkit_spark.operators import centrality
+
+    plans = []
+    superstep = centrality._superstep
+
+    def record(*args, **kwargs):
+        if not plans:
+            plans.append(plan_of(superstep(*args, **kwargs)))
+        return superstep(*args, **kwargs)
+
+    monkeypatch.setattr(centrality, "_superstep", record)
+    run()
+    return plans[0]
+
+
+def _assert_one_shuffle_round(plan: str) -> None:
+    """The persisted edge scan reaches the join with no Exchange between
+    them, and the only hash Exchange outside the cached relation is the
+    per-destination aggregate's."""
+    nodes = []  # (indent, node name, node id) per line of the plan tree
+    for line in plan.split("\n\n")[0].splitlines()[1:]:
+        name = line.lstrip(" :|+-")
+        m = re.search(r"\((\d+)\)$", name.strip())
+        if m:
+            nodes.append((len(line) - len(name), name, m.group(1)))
+    scan = next(i for i, n in enumerate(nodes) if "InMemoryTableScan" in n[1])
+    above, indent = [], nodes[scan][0]
+    for n in reversed(nodes[:scan]):
+        if n[0] < indent:
+            above.append(n[1])
+            indent = n[0]
+            if "Join" in n[1]:
+                break
+    assert "HashJoin" in above[-1], above
+    assert not any(n.startswith("Exchange") for n in above), above
+    rel = next(i for i, n in enumerate(nodes) if "InMemoryRelation" in n[1])
+    end = rel + 1
+    while end < len(nodes) and nodes[end][0] > nodes[rel][0]:
+        end += 1
+    exchanges = [
+        n[2] for n in nodes[:rel] + nodes[end:] if n[1].startswith("Exchange")
+    ]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(
+        rf"\({exchanges[0]}\) Exchange\n.*\nArguments: hashpartitioning\(node_id#",
+        plan,
+    ), plan
+    assert "NestedLoop" not in plan and "EvalPython" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_katz_round_reuses_edge_partitioning(spark, monkeypatch):
+    """One Katz round, plain and salted: the persisted pre-partitioned edge
+    table must not acquire a second exchange for the join (only ranks
+    move), and the message sum is the round's one shuffle."""
     from graphrag_toolkit_spark.operators.centrality import katz_centrality
 
-    edges = spark.range(500).selectExpr(
-        "cast(id % 50 as string) src", "cast((id * 7) % 50 as string) dst"
-    )
-    out = katz_centrality(edges, iters=1)
-    try:
-        plan = plan_of(out)
-        assert "NestedLoop" not in plan and "EvalPython" not in plan
-    finally:
-        pass
+    edges = _rank_edges(spark)
+    for kwargs in ({}, {"n_salts": 4}):
+        plan = _first_round_plan(
+            monkeypatch, lambda: katz_centrality(edges, iters=1, **kwargs)
+        )
+        _assert_one_shuffle_round(plan)
+
+
+def test_pagerank_round_stays_integer_jvm_side(spark, monkeypatch):
+    """One PageRank round, plain and weighted: one shuffle, no nested loop,
+    no Python eval, and the message and the rank update compile to integer
+    `div`s (no float division before the final projection)."""
+    from graphrag_toolkit_spark.operators.centrality import pagerank
+
+    edges = _rank_edges(spark)
+    for kwargs in ({}, {"weight_col": "w"}):
+        plan = _first_round_plan(
+            monkeypatch, lambda: pagerank(edges, iters=1, **kwargs)
+        )
+        _assert_one_shuffle_round(plan)
+        assert re.search(r"\) div tw#\d+L\)", plan), plan
+        assert re.search(r"\* 85\) div 100\)", plan), plan
+        assert " / " not in plan
+
+
+def test_rank_family_job_counts(spark, jobs_submitted):
+    """Jobs per call (construction plus collect) of the rank family on the
+    500-edge graph; the bounds are the counts measured before the rank
+    operators shared one kernel. AQE's stage runs make these the real
+    per-round cost, so a rise is a regression even with equal results."""
+    from graphrag_toolkit_spark.operators import centrality as c
+
+    edges = _rank_edges(spark)
+    seeds = spark.createDataFrame([("0",), ("1",), ("2",)], "node_id string")
+    bounds = {
+        "katz": (lambda: c.katz_centrality(edges, iters=3), 12),
+        "katz salted": (
+            lambda: c.katz_centrality(edges, iters=3, n_salts=4), 12
+        ),
+        "personalized katz": (
+            lambda: c.personalized_katz(edges, seeds, iters=3), 11
+        ),
+        "pagerank": (lambda: c.pagerank(edges, iters=3), 11),
+        "weighted pagerank": (
+            lambda: c.pagerank(edges, iters=3, weight_col="w"), 11
+        ),
+        "hits": (lambda: c.hits(edges, iters=2), 29),
+    }
+    for name, (op, bound) in bounds.items():
+        n = jobs_submitted(lambda: op().collect())
+        assert n <= bound, (name, n, bound)
 
 
 def test_partitioned_layout_prunes_partitions(spark, sf_dir, tmp_path):
@@ -485,20 +593,6 @@ def test_hard_negatives_broadcast_anchors_one_corpus_scan(spark, sf_dir):
     # BOUNDED broadcast anchor batch — linear in the corpus, never corpus²
     assert "EvalPython" not in plan
     assert "RunningWindowFunction" in plan or "Window" in plan
-
-
-def test_pagerank_round_stays_integer_jvm_side(spark):
-    """One PageRank round: scaled-integer floor arithmetic end to end — no
-    nested loop, no Python eval, and the rank update compiles to integer
-    `div`s (no float division anywhere before the final projection)."""
-    from graphrag_toolkit_spark.operators.centrality import pagerank
-
-    edges = spark.range(500).selectExpr(
-        "cast(id % 50 as string) src", "cast((id * 7) % 50 as string) dst"
-    )
-    plan = plan_of(pagerank(edges, iters=1))
-    assert "NestedLoop" not in plan and "EvalPython" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_bpe_round_top1_is_take_ordered(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import hashlib
 import json
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,19 +94,6 @@ def _fingerprint(rows) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
-def _jobs_submitted(spark, fn) -> int:
-    """Spark jobs ``fn()`` submits, counted under a fresh job group."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _multipart_llm(prompt: str) -> str:
     return "multipart" if "single or multipart" in prompt else "alpha^gamma delta"
 
@@ -145,7 +131,7 @@ class TestRetrievalChain:
         }[call]
         assert _fingerprint(run().collect()) == self.GOLDEN[call]
 
-    def test_processors_submit_no_jobs(self, spark):
+    def test_processors_submit_no_jobs(self, spark, jobs_submitted):
         from graphrag_toolkit_spark.operators import processors as P
 
         pool = spark.createDataFrame(
@@ -164,9 +150,9 @@ class TestRetrievalChain:
             flat = P.truncate_statements(2)(flat)
             return P.truncate_results(1)(flat)
 
-        assert _jobs_submitted(spark, chain) == 0
+        assert jobs_submitted(chain) == 0
 
-    def test_warm_retrieve_job_count(self, spark, g):
+    def test_warm_retrieve_job_count(self, spark, g, jobs_submitted):
         from graphrag_toolkit_spark.api import LexicalGraphQueryEngine
 
         # another module's cached frames over the same t1 tables would swap
@@ -174,8 +160,6 @@ class TestRetrievalChain:
         spark.catalog.clearCache()
         engine = LexicalGraphQueryEngine.for_traversal_based_search(g)
         engine.retrieve("alpha beta").collect()
-        warm = _jobs_submitted(
-            spark, lambda: engine.retrieve("alpha beta").collect()
-        )
+        warm = jobs_submitted(lambda: engine.retrieve("alpha beta").collect())
         # AQE varies the count by a job or two between identical calls
         assert warm <= 49
