@@ -8,6 +8,9 @@ expressions, JVM-side, whole-stage-codegen friendly — no Python UDFs):
 - ``relationship_name``    ⇔ graph_utils.py:105-119
 - ``verbalize_fact``       ⇔ statement_node_builder.py:165-171
 - ``statement_text``       ⇔ statement_node_builder.py:139-143
+
+``word_grams`` is the one word-n-gram builder every shingling, span and
+n-gram statistic operator shares.
 """
 
 from __future__ import annotations
@@ -51,6 +54,18 @@ def verbalize_fact(
     return F.concat_ws(
         " ", subject, F.concat(F.lit("["), subject_class, F.lit("]")), predicate, obj
     )
+
+
+def word_grams(toks: Column, n: int) -> Column:
+    """Space-joined word n-grams of a token array, in order; an empty
+    ``array<string>`` below ``n`` tokens. ``element_at`` lookups, not
+    ``F.slice``: slice copies n elements per gram. The guard is needed
+    because Spark's ``sequence(1, 0)`` is descending, not empty."""
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
+    )
+    return F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>"))
 
 
 def statement_text(value: Column, details: Column) -> Column:

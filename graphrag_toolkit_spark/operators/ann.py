@@ -232,60 +232,61 @@ def train_centroids_lloyd(
     )
     pool.persist()
 
-    seed_rows = (
-        pool.withColumn("_hv", hash_value(F.col("id")))
-        .orderBy(F.asc("_hv"), F.asc("id"))
-        .limit(n_centroids)
-        .select("qv")
-        .collect()
-    )
-    centroids = [list(r["qv"]) for r in seed_rows]  # list[list[Decimal]]
-
-    for _ in range(iters):
-        # MAP-ONLY assignment (same shape as `ivf_assign`): the centroid
-        # list becomes a ONE-ROW broadcast array of (cid, qc, nc) structs
-        # and each vector picks its argmax with an in-row fold — no n×C
-        # crossJoin and no per-id window Exchange per iteration. The array
-        # must arrive as a broadcast VALUE, not as inline literals: a
-        # 512-literal CreateArray is re-evaluated per row and measured 4×
-        # slower than the whole windowed original.
-        carr = F.broadcast(
-            lit_table(
-                spark, "cid int, qc array<decimal(12,6)>",
-                [(i, c) for i, c in enumerate(centroids)],
-            )
-            .select(
-                F.struct(
-                    "cid", "qc", l2_norm_quantized(F.col("qc")).alias("nc")
-                ).alias("c")
-            )
-            .agg(F.collect_list("c").alias("cs"))
-        )
-        assigned = _with_nearest_cid(pool.crossJoin(carr)).drop("cs")
-        means = (
-            assigned.select("cid", F.posexplode("qv").alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(
-                (F.sum("v").cast("double") / F.count(F.lit(1)))
-                .alias("mean")
-            )
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", "mean"))
-                    ),
-                    lambda s: F.round(s["mean"], 6).cast("decimal(12,6)"),
-                ).alias("qc")
-            )
+    try:
+        seed_rows = (
+            pool.withColumn("_hv", hash_value(F.col("id")))
+            .orderBy(F.asc("_hv"), F.asc("id"))
+            .limit(n_centroids)
+            .select("qv")
             .collect()
         )
-        updated = {r["cid"]: list(r["qc"]) for r in means}
-        centroids = [
-            updated.get(i, centroids[i]) for i in range(n_centroids)
-        ]
+        centroids = [list(r["qv"]) for r in seed_rows]  # list[list[Decimal]]
 
-    pool.unpersist()
+        for _ in range(iters):
+            # MAP-ONLY assignment (same shape as `ivf_assign`): the centroid
+            # list becomes a ONE-ROW broadcast array of (cid, qc, nc) structs
+            # and each vector picks its argmax with an in-row fold — no n×C
+            # crossJoin and no per-id window Exchange per iteration. The array
+            # must arrive as a broadcast VALUE, not as inline literals: a
+            # 512-literal CreateArray is re-evaluated per row and measured 4×
+            # slower than the whole windowed original.
+            carr = F.broadcast(
+                lit_table(
+                    spark, "cid int, qc array<decimal(12,6)>",
+                    [(i, c) for i, c in enumerate(centroids)],
+                )
+                .select(
+                    F.struct(
+                        "cid", "qc", l2_norm_quantized(F.col("qc")).alias("nc")
+                    ).alias("c")
+                )
+                .agg(F.collect_list("c").alias("cs"))
+            )
+            assigned = _with_nearest_cid(pool.crossJoin(carr)).drop("cs")
+            means = (
+                assigned.select("cid", F.posexplode("qv").alias("pos", "v"))
+                .groupBy("cid", "pos")
+                .agg(
+                    (F.sum("v").cast("double") / F.count(F.lit(1)))
+                    .alias("mean")
+                )
+                .groupBy("cid")
+                .agg(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(F.struct("pos", "mean"))
+                        ),
+                        lambda s: F.round(s["mean"], 6).cast("decimal(12,6)"),
+                    ).alias("qc")
+                )
+                .collect()
+            )
+            updated = {r["cid"]: list(r["qc"]) for r in means}
+            centroids = [
+                updated.get(i, centroids[i]) for i in range(n_centroids)
+            ]
+    finally:
+        pool.unpersist()
     return lit_table(
         spark, "cid int, qc array<decimal(12,6)>",
         [(i, c) for i, c in enumerate(centroids)],

@@ -128,50 +128,52 @@ def shortest_paths(
     # materialize the deduped edge table once; every BFS level re-joins it
     edges.persist()
 
-    settled = (
-        sources.select(F.col("node_id"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-        .withColumn("path", F.col("node_id"))
-        .localCheckpoint(eager=True)
-    )
-    frontier = settled
-    for depth in range(1, max_depth + 1):
-        cand = (
-            edges.join(
-                F.broadcast(frontier.select(F.col("node_id").alias("src"), "path")), "src"
-            )
-            .select(
-                F.col("dst").alias("node_id"),
-                F.concat(F.col("path"), F.lit("->"), F.col("dst")).alias("path"),
-            )
-            # NOTE: no broadcast hint on settled — it grows monotonically with
-            # every level (all reached nodes), so forcing a broadcast would
-            # eventually blow the 8 GB broadcast / driver-memory limit on
-            # large dense graphs. AQE picks broadcast while it's small and
-            # falls back to a shuffle anti-join once it isn't. The frontier
-            # broadcast above is safe: one level, bounded by the graph's
-            # max level width.
-            .join(settled.select("node_id"), "node_id", "left_anti")
+    try:
+        settled = (
+            sources.select(F.col("node_id"))
+            .distinct()
+            .withColumn("dist", F.lit(0))
+            .withColumn("path", F.col("node_id"))
+            .localCheckpoint(eager=True)
         )
-        nxt = checkpoint_nonempty(
-            cand.withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("node_id").orderBy(F.asc("path"))
-                ),
+        frontier = settled
+        for depth in range(1, max_depth + 1):
+            cand = (
+                edges.join(
+                    F.broadcast(frontier.select(F.col("node_id").alias("src"), "path")), "src"
+                )
+                .select(
+                    F.col("dst").alias("node_id"),
+                    F.concat(F.col("path"), F.lit("->"), F.col("dst")).alias("path"),
+                )
+                # NOTE: no broadcast hint on settled — it grows monotonically with
+                # every level (all reached nodes), so forcing a broadcast would
+                # eventually blow the 8 GB broadcast / driver-memory limit on
+                # large dense graphs. AQE picks broadcast while it's small and
+                # falls back to a shuffle anti-join once it isn't. The frontier
+                # broadcast above is safe: one level, bounded by the graph's
+                # max level width.
+                .join(settled.select("node_id"), "node_id", "left_anti")
             )
-            .filter(F.col("_rn") == 1)
-            .select("node_id", F.lit(depth).alias("dist"), "path")
-        )
-        if nxt is None:
-            break
-        # nxt is already checkpointed and disjoint from settled (anti-join
-        # above), so the union needs no re-checkpoint and no dedup: lineage
-        # stays flat (a union of ≤max_depth checkpointed pieces)
-        settled = settled.unionByName(nxt)
-        frontier = nxt
-    edges.unpersist()
+            nxt = checkpoint_nonempty(
+                cand.withColumn(
+                    "_rn",
+                    F.row_number().over(
+                        Window.partitionBy("node_id").orderBy(F.asc("path"))
+                    ),
+                )
+                .filter(F.col("_rn") == 1)
+                .select("node_id", F.lit(depth).alias("dist"), "path")
+            )
+            if nxt is None:
+                break
+            # nxt is already checkpointed and disjoint from settled (anti-join
+            # above), so the union needs no re-checkpoint and no dedup: lineage
+            # stays flat (a union of ≤max_depth checkpointed pieces)
+            settled = settled.unionByName(nxt)
+            frontier = nxt
+    finally:
+        edges.unpersist()
     if targets is not None:
         settled = settled.join(
             F.broadcast(targets.select("node_id").distinct()), "node_id"

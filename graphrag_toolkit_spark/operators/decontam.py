@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphrag_toolkit_spark.functions.text import word_grams
+
 
 def _gram_hashes(toks: Column, n: int) -> Column:
     """md5 hashes of word n-grams (space-joined) — empty below n tokens.
@@ -33,13 +35,7 @@ def _gram_hashes(toks: Column, n: int) -> Column:
     and count downstream is unchanged (gram values never reach any result
     — only counts do), while the gram column's shuffle/checkpoint bytes
     halve (guide §2.3 "narrower types")."""
-    gram = lambda i: F.unhex(
-        F.md5(F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]))
-    )
-    grams = F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), gram)
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<binary>")
-    )
+    return F.transform(word_grams(toks, n), lambda g: F.unhex(F.md5(g)))
 
 
 def shingle_hashes(
@@ -136,37 +132,16 @@ def embedding_decontaminate(
     does for the dedup leg.
 
     Returns (test_id, train_id, cos) for every flagged pair."""
-    from graphrag_toolkit_spark.functions.vector import (
-        dot_prequantized,
-        l2_norm_prequantized,
-        prequantize,
-    )
     from graphrag_toolkit_spark.operators import ann
+    from graphrag_toolkit_spark.operators.dedup import (
+        _cosine_at_least,
+        _quantized,
+        _side,
+    )
 
     planes = ann.hyperplanes(n_planes, dim)
-
-    def prep(df: DataFrame, idn: str, qn: str, nn: str) -> DataFrame:
-        # two-step projection: norm and plane dots read the SHARED
-        # quantized array — one quantize pass per row, not three
-        return df.select(
-            F.col(id_col).alias(idn),
-            prequantize(F.col(vec_col)).alias(qn),
-        ).select(
-            idn,
-            qn,
-            l2_norm_prequantized(F.col(qn)).alias(nn),
-            ann.lsh_bucket_prequantized(F.col(qn), planes).alias("bucket"),
-        )
-
-    t = prep(test, "test_id", "qt", "nt")
-    r = prep(train, "train_id", "qr", "nr")
-    return (
-        t.join(r, "bucket")
-        .withColumn(
-            "cos",
-            dot_prequantized(F.col("qt"), F.col("qr"))
-            / (F.col("nt") * F.col("nr")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("test_id", "train_id", "cos")
+    t = _side(_quantized(test, id_col, vec_col, planes=planes), "a", "bucket")
+    r = _side(_quantized(train, id_col, vec_col, planes=planes), "b", "bucket")
+    return _cosine_at_least(t.join(r, "bucket"), threshold).select(
+        F.col("id_a").alias("test_id"), F.col("id_b").alias("train_id"), "cos"
     )

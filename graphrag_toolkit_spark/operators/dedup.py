@@ -7,18 +7,19 @@ Five families, all deterministic and (except where noted) oracle-expressible:
 
 - **exact**: hash-groupBy on md5(text) — one shuffle, keep-min-id survivor.
 - **MinHash + LSH**: shingle → H independent min-hashes → B bands →
-  bucket-join. Hashes are md5 HEX STRINGS (min taken lexicographically):
-  md5 is available and identical in every engine, so signatures — and hence
-  the whole candidate-pair set — are engine-reproducible. At scale the only
+  bucket-join. Each shingle is hashed ONCE (the first 7 hex digits of its
+  md5, a 28-bit integer); min-hash i is the minimum of the affine map
+  (a_i·h + b_i) mod 2³¹−1 over the shingles. md5 and integer arithmetic
+  are identical in every engine, so signatures — and hence the whole
+  candidate-pair set — are engine-reproducible. At scale the only
   shuffles are the band-bucket groupBys; no pairwise stage ever sees rows
   that don't share a bucket.
 - **n-gram Jaccard**: exact verification on candidate pairs via shingle-set
   semi-join (|A∩B| / |A∪B|).
-- **SimHash**: 16-bit signed-projection sketch over token hashes; equal
-  sketches (or ≤ r Hamming distance via band rotation) → candidates.
+- **SimHash**: 16-bit signed-projection sketch over token hashes.
 - **embedding cosine**: decimal-quantized cosine over all pairs above a
   threshold (the exact leg; the LSH-bucketed scale path is
-  ``operators/ann.py``).
+  ``embedding_near_dup_pairs_lsh`` below).
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_toolkit_spark.functions.skew import widen_partitions
+from graphrag_toolkit_spark.functions.text import word_grams
 from graphrag_toolkit_spark.functions.vector import (
     dot_prequantized,
     l2_norm_prequantized,
@@ -68,28 +70,19 @@ def shingles(df: DataFrame, text_col: str, id_col: str, k: int = 1) -> DataFrame
     table, the largest intermediate in the MinHash family — disappears.
     The whole stage is map-only after the widening repartition of the
     compact doc rows."""
-    toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    if k == 1:
-        sh = toks
-    else:
-        # k-grams via index transform over the token array (no explode yet —
-        # stays one row until the distinct explode below). O(1) element_at
-        # lookups, NOT F.slice — slice copies k elements per gram, turning
-        # gram construction O(n·k²)-with-allocations per doc.
-        # Guard: Spark's sequence(1, 0) is a DESCENDING sequence, not empty.
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        )
-        sh = F.when(F.size(toks) >= k, grams).otherwise(
-            F.array().cast("array<string>")
-        )
-    deduped = F.array_distinct(F.filter(sh, lambda g: g != ""))
+    deduped = F.array_distinct(shingle_array(F.col(text_col), k))
     return widen_partitions(df).select(
         F.col(id_col).alias("id"), F.explode(deduped).alias("shingle")
     )
+
+
+def shingle_array(text: Column, k: int = 1) -> Column:
+    """Word k-gram shingles of a text column as an ARRAY expression (narrow,
+    per-row — no explode). Duplicates are kept: every consumer here is
+    duplicate-insensitive (min-hash) or re-distincts itself."""
+    toks = F.split(F.lower(text), r"\s+")
+    grams = toks if k == 1 else word_grams(toks, k)
+    return F.filter(grams, lambda g: g != "")
 
 
 # --- MinHash + LSH -----------------------------------------------------------
@@ -123,26 +116,6 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 12) -> DataFrame:
         for h, (a, b) in enumerate(minhash_coeffs(num_hashes))
     ]
     return sh2.groupBy("id").agg(*aggs)
-
-
-def shingle_array(text: Column, k: int = 1) -> Column:
-    """Word k-gram shingles of a text column as an ARRAY expression (narrow,
-    per-row — no explode). Duplicates are kept: every consumer here is
-    duplicate-insensitive (min-hash) or re-distincts itself."""
-    toks = F.split(F.lower(text), r"\s+")
-    if k == 1:
-        grams = toks
-    else:
-        grams = F.when(
-            F.size(toks) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(toks, i + j) for j in range(k)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    return F.filter(grams, lambda g: g != "")
 
 
 def _bind_once(col: Column, body) -> Column:
@@ -198,17 +171,6 @@ def minhash_signature_array(
         # means the shingle set was empty → null signature
         lambda acc: F.when(F.element_at(acc, 1) < F.lit(MINHASH_PRIME), acc),
     )
-
-
-def minhash_signature_cols(
-    text: Column, k: int = 1, num_hashes: int = 12
-) -> list[Column]:
-    """mh0..mhH-1 as individual columns (test/compat surface). NOTE: each
-    column evaluation re-runs the one-pass signature — fine for fixtures
-    and spot checks; hot paths use ``minhash_signature_array`` /
-    ``banded_bucket_array`` which evaluate it once."""
-    sig = minhash_signature_array(text, k, num_hashes)
-    return [F.element_at(sig, i + 1).alias(f"mh{i}") for i in range(num_hashes)]
 
 
 def banded_bucket_array(
@@ -293,6 +255,22 @@ def lsh_bucket_pairs(
     return banded_pairs(band_signature(sig, num_hashes, bands))
 
 
+def _jaccard(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(id_a, id_b, n_inter) ⋈ per-id shingle counts (id, n) →
+    (id_a, id_b, jaccard): the union by inclusion-exclusion on the sizes,
+    so no set union is ever built. One exact-int/exact-int double
+    division, so results hash-match any engine."""
+    return (
+        inter.join(sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a")
+        .join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
+        .select(
+            "id_a", "id_b",
+            (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
+            .alias("jaccard"),
+        )
+    )
+
+
 def jaccard_on_pairs(
     sh: DataFrame, pairs: DataFrame, broadcast_pairs: bool = True
 ) -> DataFrame:
@@ -321,7 +299,6 @@ def jaccard_on_pairs(
     sh_c = sh.join(maybe_bc(cand_ids), "id", "left_semi").localCheckpoint(
         eager=True
     )
-    sizes = sh_c.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
         sh_c.withColumnRenamed("id", "id_a")
         .join(maybe_bc(pairs), "id_a")
@@ -332,15 +309,56 @@ def jaccard_on_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
-        .select(
-            "id_a", "id_b",
-            (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-            .alias("jaccard"),
+    return _jaccard(inter, sh_c.groupBy("id").agg(F.count(F.lit(1)).alias("n")))
+
+
+def _posting_list_pairs(
+    df: DataFrame, text_col: str, id_col: str, k: int,
+    max_doc_freq: int | None, ordered: bool, score,
+) -> DataFrame:
+    """The inverted-shingle-index pair kernel of ``ngram_jaccard_pairs`` and
+    ``containment_pairs``: ``score(inter, sizes)`` over
+    inter = (id_a, id_b, n_inter) for every pair sharing a shingle and
+    sizes = (id, n) shingles per id, materialized eagerly.
+
+    With ``max_doc_freq`` only shingles in at most that many documents
+    count — hot shingles carry no signal and would blow the self-join up
+    quadratically at corpus scale (the standard posting-list cutoff).
+    ``ordered`` keeps both (a, b) and (b, a); otherwise only id_a < id_b.
+    Shingles are distinct per id, so COUNT(*) per pair of the posting-list
+    self-join is |A∩B|: no separate candidate-distinct stage and no re-join
+    of the shingle table. The (filtered) shingle table feeds both join
+    sides and the size aggregate, so it is persisted; the result is tiny
+    next to it, so the eager checkpoint lets both caches be released here
+    instead of leaking for the session lifetime."""
+    sh = shingles(df, text_col, id_col, k)
+    sh.persist()
+    held = [sh]
+    try:
+        if max_doc_freq is not None:
+            rare = (
+                sh.groupBy("shingle")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") <= max_doc_freq)
+                .select("shingle")
+            )
+            sh = sh.join(rare, "shingle", "left_semi")
+            sh.persist()
+            held.append(sh)
+        a = sh.withColumnRenamed("id", "id_a")
+        b = sh.withColumnRenamed("id", "id_b")
+        keep = F.col("id_a") != F.col("id_b") if ordered else F.col("id_a") < F.col("id_b")
+        inter = (
+            a.join(b, "shingle")
+            .filter(keep)
+            .groupBy("id_a", "id_b")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
         )
-    )
+        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+        return score(inter, sizes).localCheckpoint(eager=True)
+    finally:
+        for t in held:
+            t.unpersist()
 
 
 def ngram_jaccard_pairs(
@@ -349,60 +367,19 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via an inverted shingle index:
     candidates are pairs sharing ≥1 *discriminative* shingle (document
-    frequency ≤ ``max_doc_freq`` — hot shingles carry no signal and would
-    blow the self-join up quadratically at corpus scale; dropping them is
-    the standard posting-list cutoff). Jaccard is computed over the filtered
+    frequency ≤ ``max_doc_freq``). Jaccard is computed over the filtered
     shingle sets, so semantics = "Jaccard over rare k-grams".
 
     Scale shape: one groupBy for doc-frequency, one equi-join on shingle
     (skew bounded by the cutoff), one groupBy per pair — no pair ever forms
     without a shared rare shingle.
     """
-    sh = shingles(df, text_col, id_col, k)
-    sh.persist()
-    sh_rare = None
-    try:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        sh_rare = sh.join(rare, "shingle", "left_semi")
-        # consumed by both sides of the self-join plus the per-id size
-        # aggregate — materialize once
-        sh_rare.persist()
-        # intersection counts fall straight out of the posting-list self-join
-        # (shingles are distinct per id, so COUNT(*) per pair = |A∩B|) — no
-        # separate candidate-distinct stage, no re-join of the shingle table
-        a = sh_rare.withColumnRenamed("id", "id_a")
-        b = sh_rare.withColumnRenamed("id", "id_b")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sizes = sh_rare.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-        out = (
-            inter.join(sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a")
-            .join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
-            .select(
-                "id_a", "id_b",
-                (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-                .alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-        # pair lists are tiny relative to the shingle tables: materialize the
-        # result eagerly so both caches can be released here instead of
-        # leaking for the session lifetime (the returned DF is otherwise lazy
-        # and still references sh/sh_rare)
-        return out.localCheckpoint(eager=True)
-    finally:
-        if sh_rare is not None:
-            sh_rare.unpersist()
-        sh.unpersist()
+    return _posting_list_pairs(
+        df, text_col, id_col, k, max_doc_freq, ordered=False,
+        score=lambda inter, sizes: _jaccard(inter, sizes).filter(
+            F.col("jaccard") >= threshold
+        ),
+    )
 
 
 def containment_pairs(
@@ -423,42 +400,37 @@ def containment_pairs(
     one groupBy per pair, sizes joined after; with ``max_doc_freq`` the
     posting-list cutoff bounds hot shingles. The division is one
     exact-int/exact-int double op, so results hash-match any engine."""
-    sh_all = shingles(df, text_col, id_col, k)
-    sh_all.persist()
-    sh_rare = None
+    return _posting_list_pairs(
+        df, text_col, id_col, k, max_doc_freq, ordered=True,
+        score=lambda inter, sizes: inter.join(
+            sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a"
+        )
+        .withColumn("containment", F.col("n_inter") / F.col("n_a"))
+        .filter(F.col("containment") >= threshold),
+    )
+
+
+def _verified_pairs(
+    sh: DataFrame, candidates, threshold: float
+) -> DataFrame:
+    """The MinHash verify tail: exact Jaccard ≥ ``threshold`` over
+    ``candidates(sh)`` → (id_a, id_b, jaccard), materialized eagerly.
+
+    The shingle table feeds the candidate pipeline AND three joins in the
+    Jaccard verification, so it is persisted once instead of re-running the
+    explode per consumer. Candidate pairs are a vanishing fraction of the
+    corpus but their plan embeds the whole signature pipeline, so they are
+    materialized once and the two broadcast consumers in the verification
+    (pairs, candidate ids) don't each re-run the LSH stages. The verified
+    pair list is tiny: the eager checkpoint lets the shingle cache be
+    released here (a lazy return would leak it)."""
+    sh.persist()
     try:
-        sh = sh_all
-        if max_doc_freq is not None:
-            rare = (
-                sh_all.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_doc_freq)
-                .select("shingle")
-            )
-            sh_rare = sh_all.join(rare, "shingle", "left_semi")
-            sh_rare.persist()
-            sh = sh_rare
-        a = sh.withColumnRenamed("id", "id_a")
-        b = sh.withColumnRenamed("id", "id_b")
-        inter = (
-            a.join(b, "shingle")
-            .filter(F.col("id_a") != F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_a"))
-        out = (
-            inter.join(sizes.withColumnRenamed("id", "id_a"), "id_a")
-            .withColumn(
-                "containment", F.col("n_inter") / F.col("n_a")
-            )
-            .filter(F.col("containment") >= threshold)
-        )
+        cand = candidates(sh).localCheckpoint(eager=True)
+        out = jaccard_on_pairs(sh, cand).filter(F.col("jaccard") >= threshold)
         return out.localCheckpoint(eager=True)
     finally:
-        if sh_rare is not None:
-            sh_rare.unpersist()
-        sh_all.unpersist()
+        sh.unpersist()
 
 
 def minhash_near_dup_pairs(
@@ -469,29 +441,18 @@ def minhash_near_dup_pairs(
     """Full MinHash-LSH pipeline: shingle → signature → banded candidates →
     exact-Jaccard verification ≥ threshold.
 
-    The shingle table feeds the signature pipeline AND three joins in the
-    Jaccard verification; persist it once instead of re-running the
-    explode+distinct shuffle per consumer. (Measured note: the zero-shuffle
-    ``minhash_signature_array`` path is value-identical but ~3× slower here
-    — the per-element H-slot accumulator doesn't whole-stage-codegen the
-    way the explode+hash-aggregate does; it exists for STREAMING, where a
-    pre-stateful aggregation isn't allowed at all.)"""
-    sh = shingles(df, text_col, id_col, k)
-    sh.persist()
-    try:
-        # candidate pairs are a vanishing fraction of the corpus but their
-        # plan embeds the whole signature pipeline — materialize once so the
-        # two broadcast consumers in the verification (pairs, candidate ids)
-        # don't each re-run the LSH stages
-        cand = lsh_bucket_pairs(
+    (Measured note: the zero-shuffle ``minhash_signature_array`` path is
+    value-identical but ~3× slower here — the per-element H-slot
+    accumulator doesn't whole-stage-codegen the way the explode+hash-
+    aggregate does; it exists for STREAMING, where a pre-stateful
+    aggregation isn't allowed at all.)"""
+    return _verified_pairs(
+        shingles(df, text_col, id_col, k),
+        lambda sh: lsh_bucket_pairs(
             minhash_signatures(sh, num_hashes), num_hashes, bands
-        ).localCheckpoint(eager=True)
-        out = jaccard_on_pairs(sh, cand).filter(F.col("jaccard") >= threshold)
-        # verified pair list is tiny — materialize it eagerly so the shingle
-        # cache can be released here (lazy return would leak it)
-        return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+        ),
+        threshold,
+    )
 
 
 def minhash_near_dup_increment(
@@ -527,9 +488,8 @@ def minhash_near_dup_increment(
         F.lit(False).alias("is_new"),
     )
     allp = inc.unionByName(old)
-    sh = shingles(allp, "__text", "id", k)
-    sh.persist()
-    try:
+
+    def candidates(sh: DataFrame) -> DataFrame:
         sig = minhash_signatures(sh, num_hashes).join(
             allp.select("id", "is_new"), "id"
         )
@@ -543,7 +503,7 @@ def minhash_near_dup_increment(
             F.col("id").alias("id_match"), F.col("is_new").alias("match_new"),
             "band", "bh",
         )
-        cand = (
+        return (
             bn.join(ball, ["band", "bh"])
             .filter(
                 (F.col("id_match") != F.col("id_new"))
@@ -553,20 +513,13 @@ def minhash_near_dup_increment(
                 F.col("id_new").alias("id_a"), F.col("id_match").alias("id_b")
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        out = (
-            jaccard_on_pairs(sh, cand)
-            .filter(F.col("jaccard") >= threshold)
-            .select(
-                F.col("id_a").alias("id_new"),
-                F.col("id_b").alias("id_match"),
-                "jaccard",
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+
+    return _verified_pairs(
+        shingles(allp, "__text", "id", k), candidates, threshold
+    ).select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_match"), "jaccard"
+    )
 
 
 # --- near-dup clustering -----------------------------------------------------
@@ -805,19 +758,50 @@ def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return per_doc.select("id", out.alias("simhash"))
 
 
-def simhash_bucket_pairs(sims: DataFrame) -> DataFrame:
-    """Candidate pairs with identical simhash (Hamming distance 0). For
-    distance ≤ r at scale, re-bucket on SIMHASH_BITS/(r+1)-bit bands (same
-    LSH argument as MinHash banding)."""
-    a = sims.withColumnsRenamed({"id": "id_a"})
-    b = sims.withColumnsRenamed({"id": "id_b"})
-    return (
-        a.join(b, "simhash").filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "simhash")
+# --- embedding cosine --------------------------------------------------------
+
+def _quantized(
+    emb: DataFrame, id_col: str, vec_col: str, *carry: Column, planes=None
+) -> DataFrame:
+    """(id, *carry, qv, norm[, bucket]): each vector decimal-quantized once
+    (``functions/vector.prequantize``) with its quantized L2 norm and, given
+    ``planes``, its one-bucket sign-LSH key (``ann.lsh_bucket_prequantized``)
+    — the per-vector half of every quantized-cosine verify, computed before
+    any pair join instead of once per pair side.
+
+    Two projections on purpose: the norm and the bucket read the SHARED
+    quantized array, and CollapseProject keeps a non-cheap alias that is
+    referenced more than once, so the vector is quantized once per row, not
+    once per consumer."""
+    from graphrag_toolkit_spark.operators import ann
+
+    extra = [] if planes is None else [
+        ann.lsh_bucket_prequantized(F.col("qv"), planes).alias("bucket")
+    ]
+    return emb.select(
+        F.col(id_col).alias("id"), *carry, prequantize(F.col(vec_col)).alias("qv"),
+    ).select("*", l2_norm_prequantized(F.col("qv")).alias("norm"), *extra)
+
+
+def _side(prepped: DataFrame, s: str, *keep: str) -> DataFrame:
+    """One pair side of a ``_quantized`` table: (*keep, id_s, qs, ns)."""
+    return prepped.select(
+        *keep, F.col("id").alias(f"id_{s}"), F.col("qv").alias(f"q{s}"),
+        F.col("norm").alias(f"n{s}"),
     )
 
 
-# --- embedding cosine --------------------------------------------------------
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact quantized-cosine verify of pairs carrying both ``_side``s:
+    (id_a, id_b, cos) with cos ≥ ``threshold``."""
+    return (
+        pairs.withColumn(
+            "cos", dot_prequantized(F.col("qa"), F.col("qb")) / (F.col("na") * F.col("nb"))
+        )
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+    )
+
 
 def embedding_near_dup_pairs(
     emb: DataFrame, id_col: str, vec_col: str, threshold: float
@@ -831,25 +815,9 @@ def embedding_near_dup_pairs(
     Norms and decimal quantization are computed ONCE per vector before the
     pair join (3× fewer array folds than quantizing inside the O(n²) stage).
     """
-    prepped = emb.select(
-        F.col(id_col).alias("id"),
-        prequantize(F.col(vec_col)).alias("qv"),
-    ).select(
-        # two-step projection: the norm folds the SHARED quantized array
-        # (CollapseProject keeps multiply-referenced non-cheap aliases), so
-        # quantization runs once per row, not once per consumer
-        "id", "qv", l2_norm_prequantized(F.col("qv")).alias("norm")
-    )
-    a = prepped.withColumnsRenamed({"id": "id_a", "qv": "qa", "norm": "na"})
-    b = prepped.withColumnsRenamed({"id": "id_b", "qv": "qb", "norm": "nb"})
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", dot_prequantized(F.col("qa"), F.col("qb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
+    prepped = _quantized(emb, id_col, vec_col)
+    a, b = _side(prepped, "a"), _side(prepped, "b")
+    return _cosine_at_least(a.join(b, F.col("id_a") < F.col("id_b")), threshold)
 
 
 def embedding_near_dup_pairs_lsh(
@@ -881,32 +849,16 @@ def embedding_near_dup_pairs_lsh(
     """
     from graphrag_toolkit_spark.operators import ann
 
-    planes = ann.hyperplanes(n_planes, dim)
     # quantize + norm + n_planes sign projections are the expensive part of
     # this query (hundreds of decimal ops per row) and feed BOTH sides of
     # the self-join — materialize the projection once instead of running it
     # twice under the join
-    prepped = emb.select(
-        F.col(id_col).alias("id"),
-        prequantize(F.col(vec_col)).alias("qv"),
-    ).select(
-        # norm AND plane dots read the shared quantized array — one
-        # quantize pass per row instead of three (norm, bucket, pair side)
-        "id",
-        "qv",
-        l2_norm_prequantized(F.col("qv")).alias("norm"),
-        ann.lsh_bucket_prequantized(F.col("qv"), planes).alias("bucket"),
+    prepped = _quantized(
+        emb, id_col, vec_col, planes=ann.hyperplanes(n_planes, dim)
     ).localCheckpoint(eager=True)
-    a = prepped.withColumnsRenamed({"id": "id_a", "qv": "qa", "norm": "na"})
-    b = prepped.withColumnsRenamed({"id": "id_b", "qv": "qb", "norm": "nb"})
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos", dot_prequantized(F.col("qa"), F.col("qb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+    a, b = _side(prepped, "a", "bucket"), _side(prepped, "b", "bucket")
+    return _cosine_at_least(
+        a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b")), threshold
     )
 
 
@@ -964,20 +916,11 @@ def embedding_near_dup_pairs_lsh_banded(
         .select("id_a", "id_b")
         .distinct()
     )
-    prepped = emb.select(
-        F.col(id_col).alias("id"),
-        prequantize(F.col(vec_col)).alias("qv"),
-    ).select(
-        "id", "qv", l2_norm_prequantized(F.col("qv")).alias("norm")
-    ).localCheckpoint(eager=True)  # quantize each vector ONCE, not once per pair side
-    return (
-        cand.join(prepped.withColumnsRenamed({"id": "id_a", "qv": "qa", "norm": "na"}), "id_a")
-        .join(prepped.withColumnsRenamed({"id": "id_b", "qv": "qb", "norm": "nb"}), "id_b")
-        .withColumn(
-            "cos", dot_prequantized(F.col("qa"), F.col("qb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+    # quantize each vector ONCE, not once per pair side
+    prepped = _quantized(emb, id_col, vec_col).localCheckpoint(eager=True)
+    return _cosine_at_least(
+        cand.join(_side(prepped, "a"), "id_a").join(_side(prepped, "b"), "id_b"),
+        threshold,
     )
 
 
@@ -1064,14 +1007,9 @@ def semantic_dedup(
     from graphrag_toolkit_spark.operators.ann import ivf_assign
 
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    prepped = assigned.select(
-        "id",
-        "cid",
-        F.col("embedding").alias("dv"),
-        l2_norm(F.col("embedding")).alias("dn"),
-        prequantize(F.col("embedding")).alias("qv"),
-    ).withColumn(
-        "norm", l2_norm_prequantized(F.col("qv"))
+    prepped = _quantized(
+        assigned, "id", "embedding", F.col("cid"),
+        F.col("embedding").alias("dv"), l2_norm(F.col("embedding")).alias("dn"),
     ).localCheckpoint(eager=True)  # quantize/norm each vector ONCE, not per pair
     # The O(cluster²) pair stage carries ONLY the double vectors + norms
     # (guide §8: keep the quadratic stage on the lightest possible rows) —
@@ -1100,24 +1038,10 @@ def semantic_dedup(
         )
         .select("id_a", "id_b")
     )
-    qa = prepped.select(
-        F.col("id").alias("id_a"), F.col("qv").alias("qa"),
-        F.col("norm").alias("na"),
-    )
-    qb = prepped.select(
-        F.col("id").alias("id_b"), F.col("qv").alias("qb"),
-        F.col("norm").alias("nb"),
-    )
-    pairs = (
-        cand.join(qa, "id_a")
-        .join(qb, "id_b")
-        .withColumn(
-            "cos",
-            dot_prequantized(F.col("qa"), F.col("qb")) / (F.col("na") * F.col("nb")),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b")
-    )
+    pairs = _cosine_at_least(
+        cand.join(_side(prepped, "a"), "id_a").join(_side(prepped, "b"), "id_b"),
+        threshold,
+    ).select("id_a", "id_b")
     comps = connected_components(pairs)
     return (
         # prepped IS assigned's (id, cid) — materialized once above; going

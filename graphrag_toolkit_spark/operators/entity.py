@@ -268,74 +268,76 @@ def expand_context(
     else:
         rel = None
         id_type = dict(seed_entities.dtypes)["entity_id"]
-    visited = (
-        seed_entities.select(F.col("entity_id")).distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    acc = visited.select(
-        "entity_id",
-        F.lit(None).cast(id_type).alias("parent_id"),
-        F.lit(0).alias("depth"),
-        F.lit(0).cast("long").alias("strength"),
-    )
-    for depth in range(1, max_depth + 1):
-        # frontier-incident edges, both orientations, parallel edges kept
-        # (multiplicity = strength)
-        if touching_fn is not None:
-            touching = touching_fn(frontier).select("src", "dst")
-        else:
-            touching = (
-                rel.join(
-                    F.broadcast(frontier.withColumnRenamed("entity_id", "src")), "src"
-                )
-                .select("src", "dst")
-                .unionByName(
+    try:
+        visited = (
+            seed_entities.select(F.col("entity_id")).distinct()
+            .localCheckpoint(eager=True)
+        )
+        frontier = visited
+        acc = visited.select(
+            "entity_id",
+            F.lit(None).cast(id_type).alias("parent_id"),
+            F.lit(0).alias("depth"),
+            F.lit(0).cast("long").alias("strength"),
+        )
+        for depth in range(1, max_depth + 1):
+            # frontier-incident edges, both orientations, parallel edges kept
+            # (multiplicity = strength)
+            if touching_fn is not None:
+                touching = touching_fn(frontier).select("src", "dst")
+            else:
+                touching = (
                     rel.join(
-                        F.broadcast(frontier.withColumnRenamed("entity_id", "dst")),
-                        "dst",
-                    ).select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-                )
-            )
-        cand = (
-            touching.join(
-                F.broadcast(visited.withColumnRenamed("entity_id", "dst")),
-                "dst",
-                "left_anti",
-            )
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("strength"))
-        )
-        w = Window.partitionBy("src").orderBy(F.desc("strength"), F.asc("dst"))
-        nxt = checkpoint_nonempty(
-            cand.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= per_node_limit)
-            .select(
-                F.col("dst").alias("entity_id"),
-                F.col("src").alias("parent_id"),
-                F.lit(depth).alias("depth"),
-                F.col("strength"),
-            )
-            # a node reachable from two frontier parents: keep strongest edge
-            .withColumn(
-                "_rn2",
-                F.row_number().over(
-                    Window.partitionBy("entity_id").orderBy(
-                        F.desc("strength"), F.asc("parent_id")
+                        F.broadcast(frontier.withColumnRenamed("entity_id", "src")), "src"
                     )
-                ),
+                    .select("src", "dst")
+                    .unionByName(
+                        rel.join(
+                            F.broadcast(frontier.withColumnRenamed("entity_id", "dst")),
+                            "dst",
+                        ).select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                    )
+                )
+            cand = (
+                touching.join(
+                    F.broadcast(visited.withColumnRenamed("entity_id", "dst")),
+                    "dst",
+                    "left_anti",
+                )
+                .groupBy("src", "dst")
+                .agg(F.count(F.lit(1)).alias("strength"))
             )
-            .filter(F.col("_rn2") == 1)
-            .drop("_rn2")
-        )
-        if nxt is None:
-            break
-        acc = acc.unionByName(nxt)
-        frontier = nxt.select("entity_id")
-        # nxt is checkpointed, per-entity deduped (_rn2), and disjoint from
-        # visited (anti-join above) — the union is already distinct and its
-        # pieces are checkpointed, so no re-checkpoint/dedup per level
-        visited = visited.unionByName(frontier)
-    if rel is not None:
-        rel.unpersist()
+            w = Window.partitionBy("src").orderBy(F.desc("strength"), F.asc("dst"))
+            nxt = checkpoint_nonempty(
+                cand.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") <= per_node_limit)
+                .select(
+                    F.col("dst").alias("entity_id"),
+                    F.col("src").alias("parent_id"),
+                    F.lit(depth).alias("depth"),
+                    F.col("strength"),
+                )
+                # a node reachable from two frontier parents: keep strongest edge
+                .withColumn(
+                    "_rn2",
+                    F.row_number().over(
+                        Window.partitionBy("entity_id").orderBy(
+                            F.desc("strength"), F.asc("parent_id")
+                        )
+                    ),
+                )
+                .filter(F.col("_rn2") == 1)
+                .drop("_rn2")
+            )
+            if nxt is None:
+                break
+            acc = acc.unionByName(nxt)
+            frontier = nxt.select("entity_id")
+            # nxt is checkpointed, per-entity deduped (_rn2), and disjoint from
+            # visited (anti-join above) — the union is already distinct and its
+            # pieces are checkpointed, so no re-checkpoint/dedup per level
+            visited = visited.unionByName(frontier)
+    finally:
+        if rel is not None:
+            rel.unpersist()
     return acc

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
+from graphrag_toolkit_spark.functions.text import word_grams
 from graphrag_toolkit_spark.operators.sampling import hash_value
 
 
@@ -219,17 +220,7 @@ def bpe_train_merges(
     merge_rows = []
     for r in range(1, rounds + 1):
         toks = F.split(F.expr("trim(BOTH '|' FROM w)"), r"\|\|")
-        # guard: Spark's sequence(1, 0) is a DESCENDING sequence, not empty
-        # (same pitfall as dedup.shingles) — single-symbol words pair-free
-        pairs = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.concat(
-                    F.element_at(toks, i), F.lit(" "), F.element_at(toks, i + 1)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        pairs = word_grams(toks, 2)  # single-symbol words are pair-free
         # consumed by the merge table AND every later round's corpus rewrite
         best = checkpoint_nonempty(
             corpus.select(F.explode(pairs).alias("pair"), F.col("cnt"))

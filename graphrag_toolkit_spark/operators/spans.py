@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.functions.skew import widen_partitions
+from graphrag_toolkit_spark.functions.text import word_grams
 
 
 def _tokens(text_col: str) -> Column:
@@ -44,16 +45,7 @@ def ngram_starts(
     """(id, pos, gram): md5 of each word n-gram by 0-based start position.
     md5 keeps the gram key engine-portable (identical literals in the DuckDB
     oracle) and fixed-width for the shuffle."""
-    toks = _tokens(text_col)
-    # guard: Spark sequence(1, 0) is DESCENDING [1, 0], so short docs need an
-    # explicit empty-array branch (same discipline as decontam._gram_hashes)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.transform(word_grams(_tokens(text_col), n), F.md5)
     return widen_partitions(df).select(
         F.col(id_col).alias("id"), F.posexplode(grams).alias("pos", "gram")
     )
@@ -71,14 +63,7 @@ def hot_grams(
 
     Shape: one groupBy(gram) with partial aggregation, then a global top-k
     (orderBy.limit → per-partition partial top-k merge, no full sort)."""
-    toks = _tokens(text_col)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_grams(_tokens(text_col), n)
     return (
         widen_partitions(df)
         .select(F.col(id_col).alias("id"), F.explode(grams).alias("gram"))

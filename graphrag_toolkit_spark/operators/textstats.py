@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.functions.littable import lit_table
+from graphrag_toolkit_spark.functions.text import word_grams
 
 # Small function-word lexicons for the n-gram/stopword language heuristic.
 # Deliberately tiny and hard-coded: the operator contract is "deterministic
@@ -175,19 +176,6 @@ def language_id(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _word_grams(toks: Column, n: int) -> Column:
-    """Word n-gram array from a token array (empty when len(toks) < n).
-    ``element_at`` lookups, not ``F.slice`` — O(1) per gram."""
-    gram = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + j) for j in range(n)]
-    )
-    grams = F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), gram)
-    # guard: sequence(1, 0) is descending in Spark, not empty
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def _max_run(sorted_arr: Column) -> Column:
     """Longest run of equal adjacent elements in a SORTED array = the max
     multiplicity of any element — computed in one O(n) fold (struct
@@ -236,7 +224,7 @@ def repetition_stats(
     toks_df = df.select(
         F.col(id_col).alias("id"),
         F.split(F.lower(F.col(text_col)), r"\s+").alias("_w"),
-    ).select("id", "_w", _word_grams(F.col("_w"), 2).alias("_g"))
+    ).select("id", "_w", word_grams(F.col("_w"), 2).alias("_g"))
     arr = toks_df.select(
         "id",
         F.size("_w").alias("n_words"),
@@ -270,20 +258,7 @@ def fingerprint(
     smallest md5 hashes of word 3-gram shingles, joined — a stable
     content-locality sketch (equal fingerprints ⇒ near-identical prose)."""
     toks = F.split(F.lower(F.col(text_col)), r"\s+")
-    # O(1) element_at lookups, not F.slice (copies per gram)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 2),
-        lambda i: F.md5(
-            F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            )
-        ),
-    )
-    # guard: sequence(1, 0) is descending in Spark, not empty
-    grams = F.when(F.size(toks) >= 3, grams).otherwise(F.array().cast("array<string>"))
+    grams = F.transform(word_grams(toks, 3), F.md5)
     return df.select(
         F.col(id_col).alias("id"),
         F.concat_ws("|", F.slice(F.array_sort(F.array_distinct(grams)), 1, k)).alias(
@@ -351,23 +326,17 @@ def ngram_lm_score(
         .select(F.col(id_col).alias("id"), ws.alias("ws"))
         .select(
             "id",
-            # sequence(1, 0) would generate a DESCENDING [1, 0] for empty
-            # docs — emit no positions instead
+            # one (bigram ending here, word) struct per position; i is the
+            # 0-based index, so element_at(ws, i) is the previous word
             F.explode(
                 F.transform(
-                    F.when(
-                        F.size("ws") > 0, F.sequence(F.lit(1), F.size("ws"))
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda i: F.struct(
+                    "ws",
+                    lambda w, i: F.struct(
                         F.when(
-                            i > 1,
-                            F.concat(
-                                F.element_at(F.col("ws"), (i - 1).cast("int")),
-                                F.lit(" "),
-                                F.element_at(F.col("ws"), i.cast("int")),
-                            ),
+                            i > 0,
+                            F.concat(F.element_at(F.col("ws"), i), F.lit(" "), w),
                         ).alias("bg"),
-                        F.element_at(F.col("ws"), i.cast("int")).alias("w"),
+                        w.alias("w"),
                     ),
                 )
             ).alias("p"),

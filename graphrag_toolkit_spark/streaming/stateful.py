@@ -123,7 +123,7 @@ def neardup_candidates_stream(
     everything seen so far WITHOUT re-scanning the corpus.
 
     Shape: the banded signature is a NARROW per-row expression
-    (``dedup.minhash_signature_cols`` — min-hash needs no explode/groupBy),
+    (``dedup.minhash_signature_array`` — min-hash needs no explode/groupBy),
     so the only stateful operator is the bucket store: rows grouped by
     (band, band-hash), state = the doc ids previously seen in that bucket.
     A micro-batch emits (id_a < id_b) pairs between its new docs and the

@@ -18,6 +18,10 @@ Exact-match discipline (the driver hash-compares values against DuckDB):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,307 +39,39 @@ from graphrag_toolkit_spark.workload import (
 
 _MODULES = [relational, graphish, lexical, vector, dataprep, events, lifecycle, pipeline]
 
-# Driver-check priority (the driver hash-verifies ~50 queries/round, reading
-# this dict in order). Rotation rule (VERDICT r7 item 5): oldest-driver-
-# verified first — the cumulative r01-r08 record covers ALL 279 queries
-# (every one green at its latest appearance), so staleness is the only
-# ranking signal. Regenerated each round from the CORRECTNESS_r*.json union
-# (last-checked round ascending, stable within a round); with ~50 checks/
-# round the maximum staleness stays bounded at ~5 rounds. Names absent from
-# the registry are ignored; unlisted queries keep module order at the end.
-_CHECK_FIRST = [
-    # --- last driver-verified round 3 ---
-    "k_anonymity_documents",
-    "zipf_fit_documents",
-    "cohort_retention_events",
-    "association_rules_parts",
-    "cdc_apply_orders",
-    "triangle_count_parts",
-    "boolean_and_search_documents",
-    "decile_stats_orders",
-    "event_transitions",
-    "training_data_pipeline",
-    "moving_avg_events",
-    "train_bigram_lm_documents",
-    "build_vocab_documents",
-    "encode_documents_corpus",
-    "range_window_events",
-    "unpivot_orders_by_priority",
-    "weighted_katz_parts",
-    "robust_stats_events",
-    "percent_rank_orders",
-    "interarrival_stats_events",
-    "embedding_component_stats",
-    "rfm_segments_customers",
-    "latest_order_per_customer",
-    "calendar_stats_orders",
-    "dup_span_coverage_documents",
-    "scrub_dup_spans_documents",
-    "shard_corpus_documents",
-    "soft_dedup_weights_documents",
-    "quality_classifier_documents",
-    # --- last driver-verified round 4 ---
-    "word_entropy_documents",
-    "json_stats_events",
-    "validate_orders",
-    "funnel_conversion_events",
-    "ranking_eval_embeddings",
-    "event_type_funnel",
-    "sessionize_events",
-    "sliding_window_events",
-    "tumbling_window_events",
-    "hot_grams_documents",
-    "repetition_stats_documents",
-    "decontaminate_documents",
-    "pii_scrub_documents",
-    "resample_mix_documents",
-    "pq_codes_embeddings",
-    "pq_adc_topk",
-    "pack_sequences_documents",
-    "dedup_keep_best_documents",
-    "beam_search_attention",
-    "embedding_neardup_lsh",
-    "nlp_keywords_customers",
-    "fuzzy_link_token_set",
-    "embedding_neardup_recall",
-    "ann_ivf_kmeans_topk",
-    "extract_build_counts",
-    "extract_build_fact_graph",
-    "extract_build_statements",
-    "percentile_stats_events",
-    "schema_summary_supplies",
-    "typo_pairs_customers",
-    "unigram_kl_documents",
-    "reservoir_sample_documents",
-    "salted_agg_events",
-    "cumulative_distinct_users_events",
-    "ewma_events",
-    "q6_forecast_revenue",
-    "weighted_sample_documents",
-    "per_label_sample_embeddings",
-    "histogram_quantiles_events",
-    "target_encode_orders",
-    "auc_documents",
-    "negative_samples_embeddings",
-    "kcore_parts",
-    "kmv_overlap_users_events",
-    "asof_forward_events",
-    "incremental_neardup_documents",
-    "ivm_orders",
-    "retrieval_eval_pipeline",
-    "gopher_gate_documents",
-    "q4_order_priority",
-    # --- last driver-verified round 5 ---
-    "rollup_grouping_orders",
-    "ks_drift_documents",
-    "ngram_diversity_documents",
-    "pmi_collocations_documents",
-    "bpe_pair_stats_documents",
-    "clustering_coefficient_parts",
-    "dau_mau_events",
-    "top_terms_documents",
-    "markov_accuracy_events",
-    "q12_shipmode_priority",
-    "q14_promo_revenue",
-    "split_leakage_documents",
-    "dedup_canonical_documents",
-    "mixed_language_documents",
-    "chi_square_documents",
-    "label_centroids_embeddings",
-    "source_concentration_documents",
-    "ship_lag_orders",
-    "degree_distribution_parts",
-    "dup_rate_by_source_documents",
-    "profile_orders",
-    "iqr_outliers_events",
-    "weighted_median_lineitem",
-    "entity_resolution_customers",
-    "ranking_eval_orphan",
-    "katz_salted_graph",
-    "containment_pairs_documents",
-    "dsir_weights_documents",
-    "hard_negatives_embeddings",
-    "bpe_train_merges_documents",
-    "q10_returned_items",
-    "q19_discounted_revenue",
-    "pagerank_graph",
-    "q13_customer_distribution",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "hll_distinct_users_events",
-    "touch_attribution_events",
-    "bpe_vocab_documents",
-    "jl_project_embeddings",
-    "ipf_rake_documents",
-    "gram_matrix_embeddings",
-    "q7_volume_shipping",
-    "q22_global_sales_opportunity",
-    "q9_product_type_profit",
-    "q15_top_supplier",
-    "q8_market_share",
-    "hits_scores_graph",
-    "kneser_ney_lm_documents",
-    "calibration_documents",
-    # --- last driver-verified round 6 ---
-    "cohen_kappa_documents",
-    "zorder_layout_orders",
-    "kn_perplexity_buckets_documents",
-    "modularity_parts",
-    "l_diversity_documents",
-    "auc_by_source_documents",
-    "compaction_plan_events",
-    "classification_report_documents",
-    "group_split_documents",
-    "readability_documents",
-    "assortativity_parts",
-    "pareto_parts",
-    "weighted_pagerank_parts",
-    "ivm_join_orders",
-    "derive_changelog_orders",
-    "neighborhood_sizes_parts",
-    "label_propagation_parts",
-    "ktruss_parts",
-    "q2_min_cost_supplier",
-    "q11_important_value",
-    "q16_supplier_relationship",
-    "q20_potential_promotion",
-    "q21_waiting_suppliers",
-    "link_prediction_parts",
-    "random_walks_parts",
-    "cusum_changepoint_events",
-    "token_budget_mix_documents",
-    "walk_skipgram_parts",
-    "temperature_mix_documents",
-    "node_features_parts",
-    "poisson_bootstrap_documents",
-    "community_rollup_parts",
-    "frequent_paths_events",
-    "phrase_search_documents",
-    "bootstrap_by_source_documents",
-    "seasonal_anomalies_events",
-    "phash_neardup_documents",
-    "audio_vad_documents",
-    "late_interaction_topk",
-    "mutual_nn_embeddings",
-    "kfold_balance_documents",
-    "winsorize_events",
-    "conductance_parts",
-    "harmonic_2hop_parts",
-    "quantize_int8_embeddings",
-    "lsh_bucket_purity_embeddings",
-    "oov_rate_documents",
-    "doc_length_gate_documents",
-    "semantic_decontaminate_embeddings",
-    "minhash_jaccard_error_documents",
-    # --- last driver-verified round 7 ---
-    "truncation_audit_embeddings",
-    "tokenizer_fertility_by_lang",
-    "ngram_leakage_by_n",
-    "clustering_spectrum_parts",
-    "ann_ivf_pq_topk",
-    "quantization_ladder_embeddings",
-    "neyman_allocation_events",
-    "ann_ivf_recall",
-    "packing_efficiency_documents",
-    "burstiness_events",
-    "embedding_outliers",
-    "vector_index_pipeline",
-    "neyman_sample_events",
-    "content_chunks_documents",
-    "heaps_law_documents",
-    "sorted_batching_documents",
-    "survival_curve_events",
-    "embedding_drift_dims",
-    "rich_club_parts",
-    "psi_events",
-    "hub_knockout_parts",
-    "cluster_size_distribution_documents",
-    "ann_ivf_topk",
-    "cascade_delete_counts",
-    "multimodal_decode",
-    "multimodal_frames",
-    "processor_chain_statements",
-    "scd2_versioning_orders",
-    "statements_per_topic_histogram",
-    "token_budget_truncate",
-    "versions_at_snapshot",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "filter_tree_orders",
-    "scalar_text_functions",
-    "content_ids",
-    "topn_orders_per_customer",
-    "rollup_customer_orders",
-    "anti_join_orders_without_lineitems",
-    "semi_join_urgent_customers",
-    "table_stats",
-    "bfs_shortest_paths",
-    "entity_lookup_parts",
-    "ordered_dedup_events",
-    "metapath_follow",
-    "merge_verbalize_orders",
-    "node_degree",
-    "part_cooccurrence",
-    "topn_part_neighbors",
-    # --- last driver-verified round 8 ---
-    "wav_pcm_stats_documents",
-    "ppm_decode_documents",
-    "boilerplate_lines_documents",
-    "fuzzy_link_parts",
-    "entity_context_parts",
-    "chunk_statements_orders",
-    "statement_facts_orders",
-    "entity_fact_walk_suppliers",
-    "entity_pair_paths_parts",
-    "topic_adjacency_parts",
-    "topic_overlap_suppliers",
-    "topic_sources_parts",
-    "multi_hop_customers",
-    "graph_schema_relations",
-    "fetch_embeddings_by_id",
-    "cosine_topk",
-    "cosine_topk_diverse",
-    "dense_link_embeddings",
-    "beam_search_embeddings",
-    "tfidf_documents",
-    "dedup_exact_documents",
-    "minhash_signatures_documents",
-    "minhash_neardup_documents",
-    "neardup_clusters_documents",
-    "ngram_jaccard_neardup",
-    "simhash_documents",
-    "split_documents",
-    "stratified_sample_documents",
-    "embedding_neardup_pairs",
-    "token_stats_documents",
-    "quality_score_documents",
-    "language_id_documents",
-    "fingerprint_documents",
-    "ann_lsh_topk",
-    "asof_join_events",
-    "interval_join_events",
-    "kmv_distinct_users_events",
-    "semantic_dedup_embeddings",
-    "katz_centrality_graph",
-    "bm25_documents",
-    "hybrid_rrf_documents",
-    "cube_stats_orders",
-    "pivot_orders_by_priority",
-    "ngram_lm_documents",
-    "corpus_diff_documents",
-    "personalized_katz_graph",
-    "cms_heavy_hitters_documents",
-    "bloom_filter_orders",
-    "resample_gapfill_events",
-    "zscore_anomalies_events",
-]
+# The committed correctness reports sit at the repository root, next to the package.
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def last_driver_checks() -> dict[str, tuple[int, int, dict]]:
+    """Per query name, ``(round, position, result)`` of its last appearance
+    in the committed correctness reports ``CORRECTNESS_r<round>.json`` (position
+    = its index in that report). Empty when the reports are absent, e.g. in
+    an installed copy of the package."""
+    last: dict[str, tuple[int, int, dict]] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        with open(path) as f:
+            for pos, (name, res) in enumerate(json.load(f).items()):
+                key = (int(m.group(1)), pos)
+                if name not in last or key > last[name][:2]:
+                    last[name] = (*key, res)
+    return last
 
 
 def _prioritized(merged: dict) -> dict:
-    head = {n: merged[n] for n in _CHECK_FIRST if n in merged}
-    tail = {n: v for n, v in merged.items() if n not in head}
-    return {**head, **tail}
+    """Check priority (~50 queries a round are hash-verified against DuckDB,
+    taken from this dict in order): oldest verified first, by the last
+    round that checked a query, then by its position in that round's
+    report. Never-checked queries come first; the sort is stable, so ties
+    (and everything, without the reports) keep module order."""
+    last = last_driver_checks()
+    return {
+        n: merged[n]
+        for n in sorted(merged, key=lambda n: last[n][:2] if n in last else (0, 0))
+    }
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

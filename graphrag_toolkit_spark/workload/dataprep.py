@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.functions.littable import lit_table
+from graphrag_toolkit_spark.functions.text import word_grams
 from graphrag_toolkit_spark.operators import (
     ann,
     decontam,
@@ -224,16 +225,9 @@ def ngram_diversity_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         if n == 1:
             grams = F.filter(toks, lambda t: t != "")
         else:
-            grams = F.when(
-                F.size(toks) >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                    lambda i: F.concat_ws(
-                        " ", *[F.element_at(toks, i + j) for j in range(n)]
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-            grams = F.filter(grams, lambda g: ~g.rlike("(^ )|(  )|( $)|^$"))
+            grams = F.filter(
+                word_grams(toks, n), lambda g: ~g.rlike("(^ )|(  )|( $)|^$")
+            )
         g = docs.select(F.explode(grams).alias("gram"))
         agg = g.agg(
             F.count(F.lit(1)).alias("n_total"),

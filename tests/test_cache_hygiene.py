@@ -14,6 +14,7 @@ from __future__ import annotations
 import logging
 
 import pytest
+from pyspark.sql import functions as F
 
 from graphrag_toolkit_spark.operators import dedup
 from graphrag_toolkit_spark.operators.tfidf import bm25_scores, tfidf_cosine_scores
@@ -37,6 +38,20 @@ class TestNoPersistLeak:
 
     def test_ngram_jaccard_pairs_releases_shingles(self, spark, docs):
         dedup.ngram_jaccard_pairs(docs, "text", "doc_id").count()
+        assert _df_cache_empty(spark)
+
+    def test_containment_pairs_releases_shingles(self, spark, docs):
+        for max_doc_freq in (None, 50):
+            dedup.containment_pairs(
+                docs, "text", "doc_id", max_doc_freq=max_doc_freq
+            ).count()
+            assert _df_cache_empty(spark), max_doc_freq
+
+    def test_minhash_near_dup_increment_releases_shingles(self, spark, docs):
+        new = F.col("doc_id") % 5 == 0
+        dedup.minhash_near_dup_increment(
+            docs.filter(~new), docs.filter(new), "text", "doc_id", k=2
+        ).count()
         assert _df_cache_empty(spark)
 
     def test_tfidf_releases_token_cache(self, spark, docs):
@@ -94,6 +109,39 @@ class TestNoPersistLeak:
         spark.catalog.clearCache()
         for name, op in ops.items():
             op().count()
+            assert _df_cache_empty(spark), name
+
+
+class TestReleaseOnFailure:
+    def test_loops_release_persisted_input_when_a_job_fails(self, spark):
+        """A failing job inside the loop still releases the persisted
+        loop-invariant input."""
+        from graphrag_toolkit_spark.operators import ann, bfs, entity
+
+        def poisoned(good):
+            return F.when(F.col("id") == 3, F.raise_error(F.lit("poisoned row"))).otherwise(good)
+
+        edges = spark.range(10).select(
+            F.col("id").cast("string").alias("src"),
+            poisoned((F.col("id") + 1).cast("string")).alias("dst"),
+        )
+        emb = spark.range(10).select(
+            "id", poisoned(F.array(F.lit(1.0), F.col("id").cast("double"))).alias("embedding")
+        )
+        seeds = spark.createDataFrame([("0",)], "node_id string")
+        runs = {
+            "shortest_paths": lambda: bfs.shortest_paths(edges, seeds),
+            "expand_context": lambda: entity.expand_context(
+                edges, seeds.withColumnRenamed("node_id", "entity_id")
+            ),
+            "train_centroids_lloyd": lambda: ann.train_centroids_lloyd(emb, n_centroids=2),
+        }
+        for name, run in runs.items():
+            spark.catalog.clearCache()
+            # SparkRuntimeException, or a Py4JJavaError wrapping several of
+            # them when AQE stages fail concurrently
+            with pytest.raises(Exception, match="poisoned row"):
+                run().collect()
             assert _df_cache_empty(spark), name
 
 

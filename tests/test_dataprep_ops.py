@@ -311,11 +311,6 @@ class TestSimhash:
         ham_far = bin(out[1] ^ out[4]).count("1")
         assert ham <= ham_far
 
-    def test_bucket_pairs(self, docs):
-        sims = dedup.simhash(docs, "text", "doc_id")
-        pairs = {(r["id_a"], r["id_b"]) for r in dedup.simhash_bucket_pairs(sims).collect()}
-        assert (1, 2) in pairs
-
 
 class TestEmbeddingDedup:
     def test_identical_vectors_found(self, spark):

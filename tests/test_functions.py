@@ -20,6 +20,8 @@ from graphrag_toolkit_spark.functions import (
     unit_normalize,
     verbalize_fact,
 )
+from graphrag_toolkit_spark.functions.text import word_grams
+from graphrag_toolkit_spark.session import load
 
 
 def one(spark, expr, **cols):
@@ -63,6 +65,33 @@ class TestText:
         df = spark.createDataFrame([("stmt", [])], "v string, d array<string>")
         out = df.select(statement_text(F.col("v"), F.col("d")).alias("out")).head()[0]
         assert out == "stmt"
+
+    def test_word_grams_edges(self, spark):
+        # split("") gives [""]; then fewer than n tokens, exactly n, n + 1
+        df = spark.createDataFrame([("",), ("a b",), ("a b c",), ("a b c d",)], "t string")
+        out = df.select(word_grams(F.split(F.col("t"), " "), 3).alias("g"))
+        assert out.schema["g"].dataType.simpleString() == "array<string>"
+        assert [r["g"] for r in out.collect()] == [[], [], ["a b c"], ["a b c", "b c d"]]
+        assert one(spark, word_grams(F.split(F.col("t"), " "), 2), t="") == []
+
+    def test_word_grams_equal_slice_form(self, spark, sf_dir):
+        """Equal to the former ``F.slice`` builder on every fixture document."""
+        docs = load(spark, sf_dir, "documents")
+        toks = F.split(F.lower(F.col("text")), r"\s+")
+        for n in (2, 3, 8):
+            sliced = F.when(
+                F.size(toks) >= n,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+            grams = word_grams(toks, n)
+            row = docs.agg(
+                F.sum(F.size(grams)).alias("n_grams"),
+                F.count_if(~grams.eqNullSafe(sliced)).alias("n_diff"),
+            ).head()
+            assert row["n_grams"] > 0 and row["n_diff"] == 0, (n, row)
 
 
 class TestIds:

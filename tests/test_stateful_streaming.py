@@ -263,16 +263,17 @@ class TestNeardupCandidatesStream:
 
 class TestNarrowSignatures:
     def test_narrow_equals_explode_signatures(self, spark):
-        """minhash_signature_cols (zero-shuffle) must equal the
+        """minhash_signature_array (zero-shuffle) must equal the
         explode+groupBy signature pipeline value-for-value."""
         from graphrag_toolkit_spark.operators import dedup
 
         docs = spark.createDataFrame(DOCS_B1 + DOCS_B2, DOC_SCHEMA)
+        sig = dedup.minhash_signature_array(F.col("text"), k=2, num_hashes=12)
         narrow = {
             r["id"]: [r[f"mh{i}"] for i in range(12)]
             for r in docs.select(
                 F.col("doc_id").alias("id"),
-                *dedup.minhash_signature_cols(F.col("text"), k=2, num_hashes=12),
+                *[F.element_at(sig, i + 1).alias(f"mh{i}") for i in range(12)],
             ).collect()
         }
         sh = dedup.shingles(docs, "text", "doc_id", k=2)

@@ -1,8 +1,9 @@
-"""Driver-verification ledger: fold every CORRECTNESS_r*.json into a
-per-query history — which round each query was last driver-checked in, with
-what result, and which declared queries the driver has NEVER checked (the
-~50-query/round window can't cover a 219-query suite; this is the source of
-truth for rotating ``workload._CHECK_FIRST`` each round).
+"""Verification ledger: which round each declared query was last checked
+in against DuckDB, with what result, and which declared queries have NEVER
+been checked (the ~50-query/round window can't cover the suite). It reads
+the same fold of the CORRECTNESS_r*.json reports
+(``workload.last_driver_checks``) that orders ``workload.all_queries()``,
+so never-checked queries already lead the registry order.
 
 Usage: python tools/coverage_report.py            # summary + never-checked
        python tools/coverage_report.py -v         # full per-query table
@@ -13,40 +14,29 @@ Prints one JSON line at the end (driver-parseable):
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    from graphrag_toolkit_spark.workload import all_queries
+    from graphrag_toolkit_spark.workload import all_queries, last_driver_checks
 
     declared = sorted(all_queries())
 
-    history: dict[str, list[tuple[int, bool]]] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        with open(path) as f:
-            data = json.load(f)
-        for name, res in data.items():
-            ok = bool(
+    last: dict[str, tuple[int, bool]] = {
+        n: (
+            rnd,
+            bool(
                 res.get("rows_match")
                 and res.get("schema_match")
                 and res.get("hash_match")
                 and not res.get("err")
-            )
-            history.setdefault(name, []).append((rnd, ok))
-
-    last: dict[str, tuple[int, bool]] = {
-        n: max(h) for n, h in history.items()
+            ),
+        )
+        for n, (rnd, _, res) in last_driver_checks().items()
     }
     never = [n for n in declared if n not in last]
     latest_red = sorted(n for n, (_, ok) in last.items() if not ok and n in declared)
@@ -70,7 +60,7 @@ def main() -> None:
         oldest_qs = sorted(n for n, r in stale.items() if r == oldest)
         print(f"oldest green round:      r{oldest} ({len(oldest_qs)} queries)")
     if never:
-        print("never-checked list (rotate these to the top of _CHECK_FIRST):")
+        print("never-checked list:")
         for n in never:
             print(f"  {n}")
 
