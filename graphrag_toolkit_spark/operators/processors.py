@@ -8,8 +8,9 @@ fuses into one Catalyst plan — no materialization between steps. A
 processor that reads its input twice (a keep-set or scalar aggregate joined
 back) re-reads it inside that plan, which is cheap over a materialized
 input, so materialization is the caller's: ``query_engine`` checkpoints each
-retrieval chain's deduped statement pool once (seed-bounded, see its module
-docstring), and every processor after that reads the checkpoint.
+retrieval chain's deduped statement pool and, after the TF-IDF rerank, the
+reranked pool (both seed-bounded; its module docstring says why each is
+needed), and every processor after that reads a checkpoint.
 
 Flat row contract: columns at least
 ``source_id, topic_id, topic, chunk_id, statement_id, value, details, facts,

@@ -10,16 +10,28 @@ Parity targets:
 Implementation is pure relational algebra (explode → join on token →
 groupBy), NOT MLlib's HashingTF: no hash collisions, fully deterministic,
 and DuckDB-oracle-expressible. At corpus scale the same shape holds — the
-token join partitions by token (idf is a broadcast dim), and V6's pairwise
-stage is bounded to the ≤200-statement rerank pool exactly like the
-reference, so the cross-join never sees the full corpus (the corpus-scale
-near-dup path is ``operators/dedup.py``'s MinHash-LSH).
+token join partitions by token (AQE broadcasts idf while it is small), and
+V6's pairwise stage is bounded to the ≤200-statement rerank pool exactly
+like the reference, so the cross-join never sees the full corpus (the
+corpus-scale near-dup path is ``operators/dedup.py``'s MinHash-LSH).
+
+The scorers are lazy transforms: building one submits no job. Their corpus
+statistics (N, the query norm, BM25's avgdl) are scalar subqueries that run
+inside the consuming action, and the only hinted broadcasts are the literal
+query-term tables. Materialization is the caller's: a caller that reads a
+score frame more than once checkpoints it (``query_engine`` checkpoints the
+reranked pool), and a caller scoring a large corpus passes a materialized
+``doc_tokens`` so the token table is not rebuilt per consumer
+(``workload/vector.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import re
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.functions.littable import lit_table
 
@@ -87,8 +99,9 @@ def tokenize(
     )
 
 
-def idf_table(tokens: DataFrame, n_docs: int) -> DataFrame:
-    """Smoothed idf = ln((1+N)/(1+df)) + 1 per token."""
+def idf_table(tokens: DataFrame, n_docs: int | Column) -> DataFrame:
+    """Smoothed idf = ln((1+N)/(1+df)) + 1 per token. ``n_docs`` may be a
+    scalar-subquery Column (``docs.select(count).scalar()``)."""
     return tokens.groupBy("token").agg(
         (F.log((1.0 + n_docs) / (1.0 + F.count(F.lit(1)))) + 1.0).alias("idf")
     )
@@ -101,116 +114,82 @@ def _tfidf_norm(weighted: DataFrame) -> DataFrame:
     return weighted.join(norm, "id")
 
 
-def _weight(idf_col, quantize: int | None):
+def _weight(idf_col, quantize: int | None, tf_col: str = "tf"):
     """tf×idf weight. With ``quantize`` set, idf is rounded and cast to
     DECIMAL so every downstream sum is exact — term-order-independent and
     identical across engines (doubles summed in nondeterministic partial-agg
     order are not reproducible; decimals are). Widths are kept at (18, q)
     so w×w products stay within decimal(38) and no precision is lost."""
     if quantize is None:
-        return F.col("tf") * idf_col
+        return F.col(tf_col) * idf_col
     dec = f"decimal(18,{quantize})"
     idf_q = F.round(idf_col, quantize).cast(dec)
-    return (F.col("tf").cast("decimal(8,0)") * idf_q).cast(dec)
+    return (F.col(tf_col).cast("decimal(8,0)") * idf_q).cast(dec)
 
 
 def tfidf_cosine_scores(
     docs: DataFrame, query_text: str, text_col: str, id_col: str,
     quantize: int | None = None,
-    checkpoint: bool = True,
     doc_tokens: DataFrame | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Score every doc row by TF-IDF cosine similarity to ``query_text``.
     Returns (id, tfidf_score). The idf statistics come from the doc pool
     itself (matching the reference, which fits TF-IDF on the statement pool).
     ``quantize``: round idf to N decimals and aggregate in DECIMAL — exact,
     reproducible scores for oracle comparison (see ``_weight``).
-    ``checkpoint=False`` keeps the full lazy plan visible for plan tests
-    (sub-checkpoint plans are invisible to ``.explain``).
 
-    ``doc_tokens``/``n_docs``: a caller that runs SEVERAL scorers over the
-    same pool (hybrid BM25+TF-IDF) can pass ``tokenize(docs, text_col,
-    id_col)`` (extra columns like ``dl`` are fine — unused ones are pruned)
-    and ``docs.count()`` so the corpus is tokenized ONCE for all legs
-    instead of once per leg. The caller owns that frame's persistence;
-    values must equal this function's own tokenization or results change.
+    ``doc_tokens``: a caller that reads the pool's tokens more than once
+    (several scorers, or a large corpus whose token table feeds both the idf
+    aggregate and the score aggregate) passes ``tokenize(docs, text_col,
+    id_col)``, materialized as it sees fit (extra columns like ``dl`` are
+    fine — unused ones are pruned). Values must equal this function's own
+    tokenization or results change.
     """
     spark = docs.sparkSession
-    if n_docs is None:
-        n_docs = docs.count()
-    # only checkpoint=True materializes the scores, so only then can this
-    # call release a token cache before returning: persist only then
-    owned = checkpoint and doc_tokens is None
     if doc_tokens is None:
         doc_tokens = tokenize(docs, text_col, id_col)
-        if owned:
-            # the token table feeds BOTH remaining consumers (idf stats and
-            # the fused norm+dot aggregate): materialize the row-local
-            # tokenizer once instead of re-running it per consumer
-            doc_tokens.persist()
     # idf table = corpus vocabulary (Heaps-law growth) — no hint; AQE
     # broadcasts while small, shuffle-joins on token when it is not
-    idf = idf_table(doc_tokens, n_docs)
-    if checkpoint:
-        # idf feeds TWO jobs (the qnorm scalar below and the fused score
-        # aggregate): materialize the vocabulary aggregate once instead of
-        # re-running the token groupBy per consumer (guide §2.4 — same
-        # values, the aggregate is deterministic). Released after the
-        # score table materializes.
-        idf = idf.localCheckpoint(eager=True)
-
-    dw = doc_tokens.join(idf, "token").withColumn(
-        "w", _weight(F.col("idf"), quantize)
-    )
+    idf = idf_table(doc_tokens, docs.select(F.count(F.lit(1))).scalar())
     # JVM literal table, not createDataFrame: a local-list frame scans a
     # pickled PythonRDD per job (functions/littable.py has the measurements)
     qdf = lit_table(
         spark, "qid string, qtext string", [{"qid": "q", "qtext": query_text}]
     )
-    qw = (
+    qtf = F.broadcast(
         tokenize(qdf, "qtext", "qid", widen=False)
-        .join(idf, "token")
-        .withColumn("qw", _weight(F.col("idf"), quantize))
-        .select("token", "qw")
+        .select("token", F.col("tf").alias("qtf"))
     )
-    qnorm_row = qw.select(
-        F.sqrt(F.sum(F.col("qw") * F.col("qw")).cast("double")).alias("n")
-    ).head()
-    qnorm = float(qnorm_row["n"] or 0.0)
-    if qnorm == 0.0:
-        if checkpoint:
-            idf.unpersist()
-            if owned:
-                doc_tokens.unpersist()
-        return docs.select(F.col(id_col).alias("id"), F.lit(0.0).alias("tfidf_score"))
+    qw = _weight(F.col("idf"), quantize, tf_col="qtf")
+    # NULL when no query token is in the vocabulary: every dot below is
+    # NULL then too, and the coalesce yields 0.0 (norms are never 0, idf ≥ 1)
+    qnorm = (
+        qtf.join(idf, "token")
+        .select(F.sqrt(F.sum(qw * qw).cast("double")))
+        .scalar()
+    )
 
-    # ONE pass computes both per-doc statistics: left-broadcast-join the
-    # (tiny) query weights onto the token table, then a single id-grouped
-    # aggregate yields norm (all tokens) and dot (SUM skips the NULL
-    # products of non-query tokens — decimal sums are order-independent, so
-    # this is value-identical to aggregating the inner join separately).
+    # ONE pass computes both per-doc statistics: left-join the (tiny) query
+    # term table onto the token table, then a single id-grouped aggregate
+    # yields norm (all tokens) and dot (SUM skips the NULL products of
+    # non-query tokens — decimal sums are order-independent, so this is
+    # value-identical to aggregating the inner join separately).
     # One shuffle end-to-end, no norms⋈dots re-join — this stage-count is
     # pinned by tests/test_plans.py so it can't silently regress.
-    fused = dw.join(F.broadcast(qw), "token", "left")
+    fused = (
+        doc_tokens.join(idf, "token")
+        .withColumn("w", _weight(F.col("idf"), quantize))
+        .join(qtf, "token", "left")
+    )
     scores = fused.groupBy("id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("norm"),
-        F.sum(F.col("w") * F.col("qw")).cast("double").alias("dot"),
+        F.sum(F.col("w") * qw).cast("double").alias("dot"),
     ).select(
         "id",
         F.coalesce(
-            F.col("dot") / (F.col("norm") * F.lit(qnorm)), F.lit(0.0)
+            F.col("dot") / (F.col("norm") * qnorm), F.lit(0.0)
         ).alias("tfidf_score"),
     )
-    # the returned DF is lazy, so an inline unpersist would drop the cache
-    # before it's ever used — materialize the (one-row-per-doc) score table
-    # eagerly, then release the token cache so repeated calls don't leak
-    # executor memory for the session lifetime
-    if checkpoint:
-        scores = scores.localCheckpoint(eager=True)
-        idf.unpersist()  # both consumers have materialized
-        if owned:
-            doc_tokens.unpersist()
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(scores, "id", "left")
@@ -224,9 +203,15 @@ def rerank_by_tfidf(
 ) -> DataFrame:
     """V5: blend TF-IDF relevance into the statement score
     (``score + alpha × tfidf``) — the Spark expression of the reference's
-    rerank-statements processor."""
+    rerank-statements processor. The seed-bounded pool always dedups into
+    fewer AQE partitions than cores, so ``tokenize`` would always widen it;
+    repartitioning here builds that same plan without the partition-count
+    probe, which under AQE runs the dedup shuffle as a job at build time."""
+    docs = flat.select(id_col, text_col).dropDuplicates([id_col])
+    wide = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
     scores = tfidf_cosine_scores(
-        flat.select(id_col, text_col).dropDuplicates([id_col]), query_text, text_col, id_col
+        docs, query_text, text_col, id_col,
+        doc_tokens=tokenize(wide, text_col, id_col, widen=False),
     ).withColumnRenamed("id", id_col)
     return (
         flat.join(scores, id_col)
@@ -240,12 +225,12 @@ def diversity_filter(
     text_col: str = "value", id_col: str = "statement_id",
 ) -> DataFrame:
     """V6: drop near-duplicate statements — pairwise TF-IDF cosine over the
-    (bounded) pool; when a pair exceeds ``threshold``, the later statement
-    (higher id after score ordering) is dropped, keep-first semantics."""
+    (bounded) pool; when a pair exceeds ``threshold``, the statement with the
+    higher ``id_col`` of the pair is dropped (scores play no part)."""
     docs = flat.select(id_col, text_col).dropDuplicates([id_col])
-    n_docs = docs.count()
     tokens = tokenize(docs, text_col, id_col)
-    idf = idf_table(tokens, n_docs)  # vocab-sized: no hint (see above)
+    # vocab-sized: no hint (see above)
+    idf = idf_table(tokens, docs.select(F.count(F.lit(1))).scalar())
     w = _tfidf_norm(tokens.join(idf, "token").withColumn("w", F.col("tf") * F.col("idf")))
 
     a = w.select(
@@ -275,9 +260,7 @@ def bm25_scores(
     k1: float = 1.2,
     b: float = 0.75,
     quantize: int = 6,
-    checkpoint: bool = True,
     doc_tokens: DataFrame | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """BM25 keyword scoring (Robertson idf, Lucene-style) against
     ``query_text`` — the relational twin of the reference's OpenSearch
@@ -292,57 +275,36 @@ def bm25_scores(
                                     decimals, summed in DECIMAL — exact in
                                     any order, engine-identical)
 
-    Scale shape: tokens materialized once; df stats and the (tiny) query
-    term list are broadcast; per-doc length and the final sum are id-grouped
-    aggregates — one token-shuffle end to end, same as TF-IDF above.
+    Scale shape: N and avgdl are scalar subqueries; the (tiny) query term
+    list is broadcast; df is a token-partitioned window over the query-term
+    rows only; per-doc length rides on each token row and the final sum is
+    an id-grouped aggregate.
 
-    ``doc_tokens``/``n_docs``: optional shared tokenization, same contract
-    as ``tfidf_cosine_scores`` — BM25 additionally needs the ``dl`` column
-    (``tokenize(..., with_dl=True)``); the caller owns persistence.
+    ``doc_tokens``: optional shared tokenization, same contract as
+    ``tfidf_cosine_scores`` — BM25 additionally needs the ``dl`` column
+    (``tokenize(..., with_dl=True)``).
     """
-    if n_docs is None:
-        n_docs = docs.count()
-    # persisted only where this call also releases it (see tfidf above)
-    owned = checkpoint and doc_tokens is None
+    q_terms = sorted({t for t in re.split(r"[^0-9a-z]+", query_text.lower()) if t})
+    if not q_terms:
+        return docs.select(F.col(id_col).alias("id"), F.lit(0.0).alias("bm25"))
     if doc_tokens is None:
         # dl rides along row-locally (with_dl) — no groupBy over the token
         # table just to recover each doc's own length
         doc_tokens = tokenize(docs, text_col, id_col, with_dl=True)
-        if owned:
-            doc_tokens.persist()
-
-    total_row = doc_tokens.agg(
-        F.sum("tf").cast("double").alias("s"),
-        F.countDistinct("id").alias("n"),
-    ).head()
+    n_docs = docs.select(F.count(F.lit(1))).scalar().cast("double")
     # avg over docs WITH tokens; exact-int operands -> identical division
-    avgdl = float(total_row["s"] or 0.0) / float(total_row["n"] or 1)
-
-    q_terms = sorted(
-        {t for t in __import__("re").split(r"[^0-9a-z]+", query_text.lower()) if t}
-    )
-    if not q_terms or avgdl == 0.0:
-        if owned:
-            doc_tokens.unpersist()
-        return docs.select(F.col(id_col).alias("id"), F.lit(0.0).alias("bm25"))
-    spark = docs.sparkSession
+    avgdl = doc_tokens.select(
+        F.sum("tf").cast("double") / F.countDistinct("id").cast("double")
+    ).scalar()
     qdf = F.broadcast(
-        lit_table(spark, "token string", [{"token": t} for t in q_terms])
-    )
-
-    dfreq = F.broadcast(
-        doc_tokens.join(qdf, "token")
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
+        lit_table(docs.sparkSession, "token string", [{"token": t} for t in q_terms])
     )
     term = (
-        doc_tokens.join(dfreq, "token")
+        doc_tokens.join(qdf, "token")
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("token")))
         .withColumn(
             "idf",
-            F.log(
-                1.0
-                + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ),
+            F.log(1.0 + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)),
         )
         .withColumn(
             "tfn",
@@ -350,7 +312,7 @@ def bm25_scores(
             / (
                 F.col("tf")
                 + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
             ),
         )
         .withColumn(
@@ -361,13 +323,6 @@ def bm25_scores(
         )
     )
     scores = term.groupBy("id").agg(F.sum("s").cast("double").alias("bm25"))
-    if checkpoint:
-        # materialize so the token cache can be released immediately
-        # (same cache-hygiene rationale as tfidf_cosine_scores above);
-        # checkpoint=False keeps the full lazy plan visible for plan tests
-        scores = scores.localCheckpoint(eager=True)
-        if owned:
-            doc_tokens.unpersist()
     return (
         docs.select(F.col(id_col).alias("id"))
         .join(scores, "id", "left")

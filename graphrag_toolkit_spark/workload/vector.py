@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from graphrag_toolkit_spark.functions.littable import lit_table
 from graphrag_toolkit_spark.operators import linking
-from graphrag_toolkit_spark.operators.tfidf import tfidf_cosine_scores
+from graphrag_toolkit_spark.operators.tfidf import tfidf_cosine_scores, tokenize
 from graphrag_toolkit_spark.operators.vss import top_k, top_k_with_diversity
 from graphrag_toolkit_spark.session import load
 
@@ -462,11 +462,21 @@ TFIDF_QUERY = "spark filter join window batch stream"
 _TFIDF_QUANT = 6
 
 
+def _doc_tokens(docs: DataFrame, with_dl: bool = False) -> DataFrame:
+    """The corpus token table, checkpointed: each scorer reads it more than
+    once (idf and score aggregates; BM25's avgdl and term rows), and an
+    un-materialized table re-tokenizes the corpus per read."""
+    return tokenize(docs, "text", "doc_id", with_dl=with_dl).localCheckpoint(
+        eager=False
+    )
+
+
 def tfidf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return (
         tfidf_cosine_scores(docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
-                            quantize=_TFIDF_QUANT)
+                            quantize=_TFIDF_QUANT,
+                            doc_tokens=_doc_tokens(docs))
         .withColumnRenamed("id", "doc_id")
         .select("doc_id", "tfidf_score")
     )
@@ -530,7 +540,8 @@ def bm25_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return (
         bm25_scores(docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
-                    k1=_BM25_K1, b=_BM25_B, quantize=_TFIDF_QUANT)
+                    k1=_BM25_K1, b=_BM25_B, quantize=_TFIDF_QUANT,
+                    doc_tokens=_doc_tokens(docs, with_dl=True))
         .withColumnRenamed("id", "doc_id")
     )
 
@@ -581,58 +592,24 @@ def hybrid_rrf_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-100 under a total order (TakeOrderedAndProject — the bounded-pool
     contract), fused with `processors.rrf_fuse` reciprocal-rank scores.
 
-    The two legs score the SAME pool, so the corpus is tokenized ONCE
-    (``with_dl`` superset — BM25 reads dl, TF-IDF prunes it) and both
-    scorers consume the shared cached table instead of each materializing
-    its own (guide §2.4: share one pass). Leg values are unchanged — the
+    The two legs score the SAME pool, so the corpus is tokenized once into
+    one checkpointed token table (``with_dl`` superset — BM25 reads dl,
+    TF-IDF prunes it) that both lazy scorers read; the whole query is then
+    one plan, run by the caller's action. Leg values are unchanged — the
     standalone ``bm25_documents``/``tfidf_documents`` oracles pin them."""
     from graphrag_toolkit_spark.operators.processors import rrf_fuse
-    from graphrag_toolkit_spark.operators.tfidf import (
-        bm25_scores,
-        tfidf_cosine_scores,
-        tokenize,
-    )
+    from graphrag_toolkit_spark.operators.tfidf import bm25_scores
 
     docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    toks = tokenize(docs, "text", "doc_id", with_dl=True)
-    toks.persist()
-    try:
-        # The two legs are INDEPENDENT job chains (each runs its own qnorm
-        # scalar job + eager score checkpoint) over the shared cached token
-        # table — submit them from a small thread pool so the second leg's
-        # jobs back-fill cores the first leg's stage tails leave idle
-        # (guide §2.6 "overlap independent jobs"; actions are only
-        # sequential because driver code calls them sequentially). Plans,
-        # values and the per-leg oracles are untouched — this only lets the
-        # scheduler run the two legs' jobs concurrently; the shared cached
-        # blocks are computed once either way (block-level locking).
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        def _bm():
-            return bm25_scores(
-                docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
-                k1=_BM25_K1, b=_BM25_B, quantize=_TFIDF_QUANT,
-                doc_tokens=toks, n_docs=n_docs,
-            ).withColumnRenamed("id", "doc_id")
-
-        def _tf():
-            return tfidf_cosine_scores(
-                docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
-                quantize=_TFIDF_QUANT, doc_tokens=toks, n_docs=n_docs,
-            ).withColumnRenamed("id", "doc_id")
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            bm_f = pool.submit(inheritable_thread_target(_bm))
-            tf_f = pool.submit(inheritable_thread_target(_tf))
-            bm_full = bm_f.result()
-            tf_full = tf_f.result()
-    finally:
-        # both legs eagerly checkpoint their score tables before returning,
-        # so the shared token cache is no longer referenced here
-        toks.unpersist()
+    toks = _doc_tokens(docs, with_dl=True)
+    bm_full = bm25_scores(
+        docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
+        k1=_BM25_K1, b=_BM25_B, quantize=_TFIDF_QUANT, doc_tokens=toks,
+    ).withColumnRenamed("id", "doc_id")
+    tf_full = tfidf_cosine_scores(
+        docs, TFIDF_QUERY, text_col="text", id_col="doc_id",
+        quantize=_TFIDF_QUANT, doc_tokens=toks,
+    ).withColumnRenamed("id", "doc_id")
     bm = (
         bm_full
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
@@ -1086,19 +1063,14 @@ def top_terms_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (weight desc, token asc)."""
     from pyspark.sql.window import Window
 
-    from graphrag_toolkit_spark.operators.tfidf import idf_table, tokenize
+    from graphrag_toolkit_spark.operators.tfidf import _weight, idf_table
 
     docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()
     toks = tokenize(docs, "text", "doc_id")
     # idf table = corpus vocabulary (Heaps-law growth) — no hint
-    idf = idf_table(toks, n_docs)
+    idf = idf_table(toks, docs.select(F.count(F.lit(1))).scalar())
     dw = toks.join(idf, "token").withColumn(
-        "w",
-        (
-            F.col("tf").cast("decimal(8,0)")
-            * F.round(F.col("idf"), _TFIDF_QUANT).cast(f"decimal(18,{_TFIDF_QUANT})")
-        ).cast(f"decimal(18,{_TFIDF_QUANT})"),
+        "w", _weight(F.col("idf"), _TFIDF_QUANT)
     )
     win = Window.partitionBy("id").orderBy(F.desc("w"), F.asc("token"))
     return (

@@ -55,17 +55,12 @@ class TestNoPersistLeak:
         assert _df_cache_empty(spark)
 
     def test_tfidf_releases_token_cache(self, spark, docs):
-        # both scorers, both checkpoint modes, and "!!!" — a query with no
-        # terms, which takes each scorer's early return
+        # both scorers, and "!!!" — a query with no terms, which takes
+        # BM25's early return
         for scorer in (tfidf_cosine_scores, bm25_scores):
-            for checkpoint in (True, False):
-                for query in ("spark filter join", "!!!"):
-                    scorer(
-                        docs, query, "text", "doc_id", checkpoint=checkpoint
-                    ).count()
-                    assert _df_cache_empty(spark), (
-                        scorer.__name__, checkpoint, query
-                    )
+            for query in ("spark filter join", "!!!"):
+                scorer(docs, query, "text", "doc_id").count()
+                assert _df_cache_empty(spark), (scorer.__name__, query)
 
     def test_connected_components_releases_edges(self, spark):
         pairs = spark.createDataFrame(

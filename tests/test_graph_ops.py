@@ -297,6 +297,23 @@ class TestTfidf:
         kept = {r["statement_id"] for r in diversity_filter(flat, 0.975).collect()}
         assert kept == {"a", "c"}
 
+    def test_cosine_is_zero_without_vocabulary_terms(self, spark):
+        from graphrag_toolkit_spark.operators.tfidf import tfidf_cosine_scores
+
+        docs = spark.createDataFrame(
+            [(1, "spark joins and windows"), (2, "cooking pasta"), (3, "")],
+            "doc_id long, text string",
+        )
+        # no query token at all, and tokens that are all out of vocabulary
+        for query in ("!!!", "zebra quokka"):
+            for quantize in (None, 6):
+                out = tfidf_cosine_scores(
+                    docs, query, "text", "doc_id", quantize=quantize
+                ).collect()
+                assert sorted((r["id"], r["tfidf_score"]) for r in out) == [
+                    (1, 0.0), (2, 0.0), (3, 0.0)
+                ], (query, quantize)
+
 
 class TestBm25:
     def test_ranking_properties(self, spark):

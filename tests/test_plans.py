@@ -292,16 +292,13 @@ def test_shard_corpus_single_shuffle(spark, sf_dir):
 
 
 def test_bm25_broadcasts_stats_and_stays_jvm(spark, sf_dir):
-    """BM25: df stats + query terms broadcast (no shuffle of the token
-    table for them), no nested-loop anywhere, no Python in the plan
-    (checkpoint=False exposes the full lazy pipeline to explain)."""
+    """BM25: the query-term table broadcasts (no shuffle of the token
+    table to join it), no nested-loop anywhere, no Python in the plan."""
     from graphrag_toolkit_spark.operators.tfidf import bm25_scores
     from graphrag_toolkit_spark.workload.vector import TFIDF_QUERY
 
     docs = load(spark, sf_dir, "documents")
-    plan = plan_of(
-        bm25_scores(docs, TFIDF_QUERY, "text", "doc_id", checkpoint=False)
-    )
+    plan = plan_of(bm25_scores(docs, TFIDF_QUERY, "text", "doc_id"))
     assert "BroadcastHashJoin" in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
     assert "EvalPython" not in plan
@@ -333,11 +330,11 @@ def test_word_entropy_shuffle_free(spark, sf_dir):
 
 
 def test_tfidf_one_shuffle_fused_norm_dot(spark, sf_dir):
-    """TF-IDF scoring end-to-end (checkpoint=False): the only Exchanges
-    allowed are the widen repartition and the single id-grouped aggregate
-    that computes norm AND dot in one pass (plus AQE's view of them) —
-    the norms⋈dots re-join shape would show a third shuffle. Pins the
-    r1→r3 bench drift from recurring."""
+    """TF-IDF scoring end-to-end: the only Exchanges allowed are the widen
+    repartition and the single id-grouped aggregate that computes norm AND
+    dot in one pass (plus AQE's view of them) — the norms⋈dots re-join
+    shape would show a third shuffle. Pins the r1→r3 bench drift from
+    recurring."""
     import re
 
     from graphrag_toolkit_spark.operators.tfidf import tfidf_cosine_scores
@@ -345,16 +342,42 @@ def test_tfidf_one_shuffle_fused_norm_dot(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     plan = plan_of(
-        tfidf_cosine_scores(
-            docs, TFIDF_QUERY, "text", "doc_id", quantize=6, checkpoint=False
-        )
+        tfidf_cosine_scores(docs, TFIDF_QUERY, "text", "doc_id", quantize=6)
     )
-    # shuffles: widen repartition + one hash-partitioning for the fused agg;
-    # InMemoryRelation caching means the token side appears once
+    # shuffles: widen repartition + one hash-partitioning for the fused agg
     n_shuffles = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_shuffles <= 2, f"fused norm+dot regressed: {n_shuffles} hash shuffles"
     assert "EvalPython" not in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
+
+
+def test_scorers_build_without_jobs(spark, sf_dir, jobs_submitted):
+    """Building a TF-IDF or BM25 score frame, or a rerank over one, submits
+    no Spark job: the corpus statistics are scalar subqueries that run
+    inside the caller's action."""
+    from graphrag_toolkit_spark.operators.tfidf import (
+        bm25_scores,
+        rerank_by_tfidf,
+        tfidf_cosine_scores,
+    )
+    from graphrag_toolkit_spark.workload.vector import TFIDF_QUERY
+
+    docs = load(spark, sf_dir, "documents")
+    flat = docs.select(
+        F.col("doc_id").cast("string").alias("statement_id"),
+        F.col("text").alias("value"),
+        F.lit(1.0).alias("score"),
+    )
+    builds = {
+        "tfidf": lambda: tfidf_cosine_scores(docs, TFIDF_QUERY, "text", "doc_id"),
+        "tfidf quantized": lambda: tfidf_cosine_scores(
+            docs, TFIDF_QUERY, "text", "doc_id", quantize=6
+        ),
+        "bm25": lambda: bm25_scores(docs, TFIDF_QUERY, "text", "doc_id"),
+        "rerank": lambda: rerank_by_tfidf(flat, TFIDF_QUERY),
+    }
+    for name, build in builds.items():
+        assert jobs_submitted(build) == 0, name
 
 
 def test_training_pipeline_single_relational_plan(spark, sf_dir):
@@ -535,6 +558,34 @@ def test_near_dup_family_job_counts(spark, sf_dir, jobs_submitted):
         "semantic_dedup_embeddings": 43,
         "soft_dedup_weights_documents": 47,
         "semantic_decontaminate_embeddings": 5,
+    }
+    spark.catalog.clearCache()
+    for name, bound in bounds.items():
+        for _ in range(5):
+            n = jobs_submitted(lambda: queries[name](spark, sf_dir).collect())
+            release_blocks(spark)
+            if n <= bound:
+                break
+        assert n <= bound, (name, n, bound)
+
+
+def test_keyword_family_job_counts(spark, sf_dir, jobs_submitted):
+    """Jobs per registry query (build plus collect) of the TF-IDF/BM25
+    family at sf0.001; the bounds are the counts measured with the scorers
+    as lazy plans (before: tfidf 19, bm25 15, hybrid_rrf 29,
+    retrieval_eval 35, top_terms 9). Cache cleared first, blocks released
+    between queries, up to five calls per query — as in the near-dup pin
+    above."""
+    from graphrag_toolkit_spark.session import release_blocks
+    from graphrag_toolkit_spark.workload import all_queries
+
+    queries = all_queries()
+    bounds = {
+        "tfidf_documents": 12,
+        "bm25_documents": 12,
+        "hybrid_rrf_documents": 19,
+        "retrieval_eval_pipeline": 25,
+        "top_terms_documents": 9,
     }
     spark.catalog.clearCache()
     for name, bound in bounds.items():

@@ -1,9 +1,11 @@
 """Isolate and measure individual registry queries (guide §1: measure first).
 
 Runs each named query at $SPARK_GRAFT_SF_DIR (default sf0.1) with the noop
-sink (times the computation, not result pickling), labels the jobs, and can
-dump .explain("formatted") per query. The bench.py contract is untouched —
-this is the optimization-loop instrument, not the driver surface.
+sink (times the computation, not result pickling), runs each repeat under
+its own job group and reports its Spark jobs (build plus action, from the
+StatusTracker) next to its time, and can dump .explain("formatted") per
+query. It is the optimization-loop instrument; bench.py's contract is
+separate and untouched.
 
 Usage:
   python tools/bench_one.py q1_pricing_summary katz_centrality_graph
@@ -47,7 +49,9 @@ def main() -> None:
     queries = all_queries()
     warm_up(spark, sf_dir)  # same warm-up as bench.py
 
+    sc = spark.sparkContext
     out: dict[str, list[float]] = {}
+    jobs: dict[str, list[int]] = {}
     for name in args.queries:
         fn = queries[name]
         if args.explain:
@@ -62,9 +66,10 @@ def main() -> None:
                 os.path.join(args.explain, f"{name}{args.suffix}.txt"), "w"
             ) as f:
                 f.write(buf.getvalue())
-        runs = []
+        runs, run_jobs = [], []
         for i in range(args.repeat):
-            spark.sparkContext.setJobDescription(f"{name} run{i}")
+            group = f"{name} run{i}"
+            sc.setJobGroup(group, group)
             # fn() is INSIDE the timed region: iterative queries run eager
             # localCheckpoint jobs during construction (bench.py times the
             # same span)
@@ -75,16 +80,19 @@ def main() -> None:
             else:
                 df.collect()
             runs.append(round(time.time() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+            run_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             if args.release:
                 from graphrag_toolkit_spark.session import release_blocks
 
                 del df
                 release_blocks(spark)
         out[name] = runs
-        print(f"# {name}: {runs}", file=sys.stderr)
+        jobs[name] = run_jobs
+        print(f"# {name}: {runs} jobs {run_jobs}", file=sys.stderr)
     spark.stop()
-    print(json.dumps({"sf_dir": sf_dir, "timings": out,
+    print(json.dumps({"sf_dir": sf_dir, "timings": out, "jobs": jobs,
                       "loadavg_1min": round(os.getloadavg()[0], 2)}))
 
 
