@@ -115,6 +115,14 @@ class LexicalGraphQueryEngine:
         self.config = config or RetrievalConfig()
         self.llm = llm or _concat_answer_llm
         self._retriever = retriever
+        self._dim: int | None = None
+
+    def _query_vector(self, query_text: str) -> list[float]:
+        """The query's pseudo-embedding at the chunk index's dimension,
+        which is read from the graph once, on first use."""
+        if self._dim is None:
+            self._dim = _embed_dim(self.graph)
+        return pseudo_embedding(query_text, self._dim)
 
     @classmethod
     def for_traversal_based_search(
@@ -150,15 +158,15 @@ class LexicalGraphQueryEngine:
         def retrieve(
             g: SparkGraphTables, query_text: str, cfg: RetrievalConfig
         ) -> DataFrame:
-            qvec = pseudo_embedding(query_text, _embed_dim(g))
             seeds = chunk_beam_search(
-                g, qvec, seed_top_k=cfg.vss_top_k,
+                g, engine._query_vector(query_text), seed_top_k=cfg.vss_top_k,
                 beam_width=beam_width, max_depth=max_depth,
             ).select("chunk_id").distinct()
             stmt_ids = chunk_to_statements(g, seeds, limit=cfg.intermediate_limit)
             return scored_statement_context(g, stmt_ids)
 
-        return cls(graph, config, llm, retriever=retrieve)
+        engine = cls(graph, config, llm, retriever=retrieve)
+        return engine
 
     def retrieve(self, query_text: str) -> DataFrame:
         """Nested SearchResult rows for the query (no LLM)."""
@@ -167,7 +175,7 @@ class LexicalGraphQueryEngine:
                 self.graph,
                 query_text,
                 self.config,
-                query_vector=pseudo_embedding(query_text, _embed_dim(self.graph)),
+                query_vector=self._query_vector(query_text),
             )
         return query_engine.processor_tail(
             self._retriever(self.graph, query_text, self.config), self.config

@@ -22,26 +22,33 @@ Two exactness regimes, one per algorithm family:
   `pagerank`).
 
 Scale shape: the classic message-passing loop, run by one superstep
-kernel (`_propagate`) for `katz_centrality`, `personalized_katz` and
-`pagerank`. A round joins the ranks onto the persisted, src-partitioned
-edge table (only the rank rows move), unions in the per-node restart rows
-and sums per destination: one hash exchange per round (map-side partial
-aggregation applies; longs sum associatively). Each round's ranks are
-localCheckpointed lazily to keep the plan round-sized. Under AQE a lazy
-checkpoint still plans its round at once and runs the round's shuffle-map
-stages as jobs right then; only the last stage waits for the consumer.
-Measured: the traced `katz_centrality_graph` query (perfbench batch,
-sf0.001) submits 22 jobs while its frame is built and 1 at the action; on
-the 500-edge graph of tests/test_plans.py, `katz_centrality` builds in 7
-jobs at iters=1 and 11 at iters=3 (two per round), then collects in 1. Skewed in-degree is
+kernel (`_superstep`) for `katz_centrality`, `personalized_katz`,
+`pagerank` (through `_propagate`) and both half-rounds of `hits`. A round
+joins the ranks onto the persisted, src-partitioned edge table (only the
+rank rows move), unions in the per-node restart rows and sums per
+destination: one hash exchange per round (map-side partial aggregation
+applies; longs sum associatively). The rounds of these operators, of
+`label_propagation` and of the `kcore_peel` / `ktruss_peel` peels run on
+`functions.loop.fixpoint`, which checkpoints each round's state lazily to
+keep the plan round-sized. Under AQE a lazy checkpoint still plans its
+round at once and runs the round's shuffle-map stages as jobs right then;
+only the last stage waits for the consumer. Measured: the traced
+`katz_centrality_graph` query (perfbench batch, sf0.001) submits 22 jobs
+while its frame is built and 1 at the action; on the 500-edge graph of
+tests/test_plans.py, `katz_centrality` builds in 7 jobs at iters=1 and 11
+at iters=3 (two per round), then collects in 1. Skewed in-degree is
 ordinary aggregation skew (AQE / two-phase salting via
 `functions/skew.py` if a hub dominates).
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graphrag_toolkit_spark.functions.loop import fixpoint
 
 
 def _superstep(
@@ -87,17 +94,15 @@ def _propagate(
     iters: int,
     n_salts: int | None = None,
 ) -> DataFrame:
-    """The superstep kernel: ``iters`` `_superstep` rounds, each lazily
-    localCheckpointed so the plan stays round-sized. ``e`` must be
-    persisted and hash-partitioned on the join keys, so no round
-    re-shuffles it. The lazy checkpoint runs no eager job of its own, but
-    AQE runs the round's shuffle-map stages when the checkpoint plans it
-    (see the module docstring)."""
-    for _ in range(iters):
-        ranks = _superstep(
-            e, ranks, restart, message, update, n_salts
-        ).localCheckpoint(eager=False)
-    return ranks
+    """The superstep kernel: ``iters`` `_superstep` rounds on
+    `functions.loop.fixpoint`. ``e`` must be persisted and hash-partitioned
+    on the join keys, so no round re-shuffles it."""
+    return fixpoint(
+        lambda r: _superstep(e, r, restart, message, update, n_salts),
+        ranks,
+        iters,
+        name="rank propagation",
+    )
 
 
 def _node_set(e: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
@@ -283,33 +288,32 @@ def kcore_peel(
 
     Scale shape (same discipline as `katz_centrality`): each round is one
     degree aggregate over the surviving edge list + two semi-joins to drop
-    edges touching peeled nodes; the edge list only shrinks, and each
-    round's result is localCheckpointed so the plan stays round-sized
-    instead of growing a 2^rounds lineage."""
-    e = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    e = e.localCheckpoint(eager=True)
-    for _ in range(rounds):
-        deg = (
+    edges touching peeled nodes; the edge list only shrinks, and the rounds
+    run on `functions.loop.fixpoint`, so each round's survivors are
+    checkpointed lazily and the plan stays round-sized instead of growing a
+    2^rounds lineage."""
+
+    def _degrees(e: DataFrame) -> DataFrame:
+        return (
             e.select(F.col("a").alias("node"))
             .unionByName(e.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("degree"))
         )
-        keep = deg.filter(F.col("degree") >= k).select("node")
-        e = (
-            e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-        ).localCheckpoint(eager=True)
+
+    def _peel(e: DataFrame) -> DataFrame:
+        keep = _degrees(e).filter(F.col("degree") >= k).select("node")
+        return e.join(keep.withColumnRenamed("node", "a"), "a", "left_semi").join(
+            keep.withColumnRenamed("node", "b"), "b", "left_semi"
+        )
+
+    e = edges.select(
+        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
+    ).filter(F.col("a") != F.col("b"))
+    e = fixpoint(_peel, e.localCheckpoint(eager=True), rounds, name="kcore_peel")
     # the post-round degree table, unfiltered: at the fixpoint every degree
     # is >= k (the k-core); before it, callers see the raw peeling state
-    return (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+    return _degrees(e)
 
 
 def pagerank(
@@ -411,71 +415,84 @@ def hits(
     ceil(max/10⁶) instead of multiplying raw by 10⁶ first keeps every
     intermediate ≤ Σranks ≤ n·10⁶, overflow-safe to n ≈ 9·10¹² nodes.
 
-    Scale shape (= `pagerank`): the edge list is deduped, repartitioned on
-    each join key once and persisted; per round only (node, score) rows
-    move — two key-partitioned joins + two aggregates; the per-round max
-    is a broadcast one-row cross join (never a driver collect); lazy
-    localCheckpoint keeps the plan round-sized instead of 2^iters deep.
+    Scale shape (= `pagerank`): both half-rounds are `_superstep` calls,
+    one over the src-partitioned persisted edges (hubs → authorities) and
+    one over the reversed persisted edges (authorities → hubs), with
+    zero-message restart rows so every node keeps a score; per round only
+    (node, score) rows move. Each half-round is one `functions.loop.fixpoint`
+    round, so the raw scores it sums are checkpointed before both the max
+    and the rescale read them; the max is a broadcast aggregate (never a
+    driver collect).
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # lineage break after the dedup: e_by_src and e_by_dst each persist a
-    # REPARTITION of e — without the checkpoint each persist's first
-    # materialization re-runs the whole upstream edge build + distinct
-    # (two full passes for one dedup; guide §2.4/§3.3). Lazy is safe: the
-    # first half-round touches only e_by_src (materializing the
-    # checkpoint); e_by_dst materializes a half-round later from blocks.
+    # lineage break after the dedup: both edge tables persist a REPARTITION
+    # of e — without the checkpoint each persist's first materialization
+    # re-runs the whole upstream edge build + distinct (two full passes for
+    # one dedup; guide §2.4/§3.3). Lazy is safe: the first half-round
+    # touches only e_fwd (materializing the checkpoint); e_rev materializes
+    # a half-round later from blocks.
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    e_by_src = e.repartition(F.col("src")).persist()
-    e_by_dst = e.repartition(F.col("dst")).persist()
+    e_fwd = e.repartition(F.col("src")).persist()
+    e_rev = (
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        .repartition(F.col("src"))
+        .persist()
+    )
     try:
         nodes = _node_set(e, nodes)
         zeros = nodes.withColumn("m", F.lit(0).cast("long"))
 
-        def _half(scores: DataFrame, join_key: str, out_key: str) -> DataFrame:
-            # one message pass: scores keyed by join_key flow to out_key,
-            # then max-rescale onto the 10^-6 grid (all-BIGINT floor ops)
-            edge = e_by_src if join_key == "src" else e_by_dst
-            raw = (
-                edge.join(scores.withColumnRenamed("node_id", join_key), join_key)
-                .select(F.col(out_key).alias("node_id"), F.col("s6").alias("m"))
-                .unionByName(zeros)
-                .groupBy("node_id")
-                .agg(F.sum("m").alias("raw"))
-                # checkpoint RAW, not the rescale: the max branch and the
-                # rescale branch both read it — without this each half-round
-                # runs the join+aggregate twice
-                .localCheckpoint(eager=False)
+        def _scaled(raw: DataFrame) -> DataFrame:
+            # max-rescale onto the 10^-6 grid (all-BIGINT floor ops), each
+            # kind by its own max, taken in one scalar (one-row) aggregate
+            mx = raw.agg(
+                F.max(F.when(F.col("hub"), F.col("r"))).alias("mx_h"),
+                F.max(F.when(~F.col("hub"), F.col("r"))).alias("mx_a"),
             )
-            mx = raw.agg(F.max("raw").alias("mx"))
             return raw.crossJoin(F.broadcast(mx)).select(
                 "node_id",
-                F.expr(
-                    "raw div greatest(1L, (mx + 999999) div 1000000)"
-                ).cast("long").alias("s6"),
+                "hub",
+                F.expr("r div greatest(1L, (if(hub, mx_h, mx_a) + 999999) div 1000000)")
+                .cast("long")
+                .alias("r"),
             )
 
-        hubs = nodes.withColumn("s6", F.lit(1_000_000).cast("long"))
-        auths = None
-        for _ in range(iters):
-            auths = _half(hubs, "src", "dst")
-            hubs = _half(auths, "dst", "src")
+        # a loop round is one half-round, hubs → authorities over e_fwd,
+        # then authorities → hubs over e_rev; the state holds the latest raw
+        # scores of both kinds, and a round scales the kind it sends from
+        halves = itertools.cycle([(e_fwd, True), (e_rev, False)])
+        start = nodes.select(
+            "node_id", F.lit(1_000_000).cast("long").alias("r"), F.lit(True).alias("hub")
+        )
+
+        def _half(state: DataFrame) -> DataFrame:
+            edge, from_hubs = next(halves)
+            sender = state.filter(F.col("hub") == from_hubs)
+            # the starting hub scores sit on the grid already
+            scores = sender if state is start else _scaled(sender)
+            raw = _superstep(edge, scores.drop("hub"), zeros, F.col("r"), F.sum("m"))
+            return sender.unionByName(raw.withColumn("hub", F.lit(not from_hubs)))
+
+        state = _scaled(fixpoint(_half, start, 2 * iters, name="hits"))
+        grid = F.lit(1_000_000.0)
         return (
-            hubs.select("node_id", F.col("s6").alias("h6"))
-            .join(auths.select("node_id", F.col("s6").alias("a6")), "node_id")
-            .select(
+            state.filter(F.col("hub"))
+            .select("node_id", (F.col("r").cast("double") / grid).alias("hub"))
+            .join(
+                state.filter(~F.col("hub")).select(
+                    "node_id", (F.col("r").cast("double") / grid).alias("authority")
+                ),
                 "node_id",
-                (F.col("h6").cast("double") / F.lit(1_000_000.0)).alias("hub"),
-                (F.col("a6").cast("double") / F.lit(1_000_000.0)).alias("authority"),
             )
         )
     finally:
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
+        e_fwd.unpersist()
+        e_rev.unpersist()
 
 
 def modularity(
@@ -717,7 +734,8 @@ def label_propagation(
     Scale shape: a round is one edge ⋈ label equi-join + one
     (node, label) count + one per-node window argmax — the same
     message-passing class as `pagerank`; labels are the only moving
-    rows. localCheckpoint per round keeps plans round-sized."""
+    rows. The rounds run on `functions.loop.fixpoint`, whose lazy
+    checkpoint per round keeps plans round-sized."""
     from pyspark.sql.window import Window as W
 
     if iters < 0:
@@ -731,9 +749,9 @@ def label_propagation(
     nodes = und.select(F.col("v").alias("node_id")).distinct().localCheckpoint(
         eager=True
     )
-    labels = nodes.withColumn("label", F.col("node_id"))
     w_rank = W.partitionBy("v").orderBy(F.desc("n"), F.asc("label"))
-    for _ in range(iters):
+
+    def _round(labels: DataFrame) -> DataFrame:
         votes = (
             und.join(labels.withColumnRenamed("node_id", "w"), "w")
             .groupBy(F.col("v"), F.col("label"))
@@ -746,14 +764,16 @@ def label_propagation(
         )
         # isolated nodes (none here — every node has an edge — but the
         # contract survives filtered inputs): keep the previous label
-        labels = (
-            nodes.join(best, "node_id", "left")
-            .select(
-                "node_id", F.coalesce("label", F.col("node_id")).alias("label")
-            )
-            .localCheckpoint(eager=False)
+        return nodes.join(best, "node_id", "left").select(
+            "node_id", F.coalesce("label", F.col("node_id")).alias("label")
         )
-    return labels
+
+    return fixpoint(
+        _round,
+        nodes.withColumn("label", F.col("node_id")),
+        iters,
+        name="label_propagation",
+    )
 
 
 def ktruss_peel(
@@ -777,8 +797,9 @@ def ktruss_peel(
     Scale shape: support = one wedge join (edge ⋈ adjacency on the lower
     endpoint) semi-joined back against the edge set — the exact
     triangle-enumeration shape `triangle_count` uses, Σ deg(a) work per
-    round, never |V|² — and the edge list only shrinks; each round's
-    survivors are localCheckpointed."""
+    round, never |V|² — and the edge list only shrinks; the rounds run on
+    `functions.loop.fixpoint`, which checkpoints each round's survivors
+    lazily."""
     if k < 2:
         raise ValueError("k must be >= 2")
     e = _canonical(edges, src, dst).localCheckpoint(eager=True)
@@ -804,13 +825,12 @@ def ktruss_peel(
             "a", "b", F.coalesce("support", F.lit(0)).cast("long").alias("support")
         )
 
-    for _ in range(rounds):
-        e = (
-            _support(e)
-            .filter(F.col("support") >= k - 2)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
-        )
+    e = fixpoint(
+        lambda e: _support(e).filter(F.col("support") >= k - 2).select("a", "b"),
+        e,
+        rounds,
+        name="ktruss_peel",
+    )
     # final support of the SURVIVING edges (post-peel state)
     return _support(e)
 

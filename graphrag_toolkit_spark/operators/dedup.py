@@ -29,6 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from graphrag_toolkit_spark.functions.loop import fixpoint
 from graphrag_toolkit_spark.functions.skew import widen_partitions
 from graphrag_toolkit_spark.functions.text import word_grams
 from graphrag_toolkit_spark.functions.vector import (
@@ -551,9 +552,14 @@ def connected_components(
     node. Simpler plan per round, fine for shallow near-dup clusters;
     kept as the cross-check twin (tests assert identical output).
 
-    Both loop over the PAIR GRAPH only — the corpus never enters — and
-    localCheckpoint per round so plans stay flat. Raises RuntimeError if
-    not converged after ``max_iters``.
+    Both loop over the PAIR GRAPH only — the corpus never enters — on
+    `functions.loop.fixpoint` with ``until_stable``: each round's state
+    (labels for minlabel, the canonical edge set for star) is checkpointed
+    lazily, and the loop stops at the first round whose state equals the
+    previous one as a set (row counts first; ``exceptAll`` only when they
+    match, the count doubling as the checkpoint's materializing action).
+    Raises `functions.loop.NotConverged` (a RuntimeError) naming
+    ``connected_components`` if no round is stable within ``max_iters``.
 
     ``group_col`` (star only) runs INDEPENDENT component searches for
     several edge sets in ONE loop: every groupBy/join key gains the group
@@ -575,37 +581,30 @@ def connected_components(
             pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
         )
     )
+
+    def _round(labels: DataFrame) -> DataFrame:
+        msgs = edges.join(labels.withColumnRenamed("id", "src"), "src").select(
+            F.col("dst").alias("id"), "component"
+        )
+        return (
+            labels.unionByName(msgs)
+            .groupBy("id")
+            .agg(F.min("component").alias("component"))
+        )
+
     edges.persist()
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("component", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
     try:
-        for _ in range(max_iters):
-            msgs = edges.join(labels.withColumnRenamed("id", "src"), "src").select(
-                F.col("dst").alias("id"), "component"
-            )
-            new_labels = (
-                labels.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint(eager=True)
-            )
-            converged = (
-                new_labels.withColumnRenamed("component", "_new")
-                .join(labels, "id")
-                .filter(F.col("_new") != F.col("component"))
-                .isEmpty()
-            )
-            labels = new_labels
-            if converged:
-                return labels
+        return fixpoint(
+            _round,
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("component", F.col("id")),
+            max_iters,
+            until_stable=True,
+            name="connected_components",
+        )
     finally:
         edges.unpersist()
-    raise RuntimeError(
-        f"connected_components: no convergence in {max_iters} rounds"
-    )
 
 
 def _cc_star(
@@ -629,10 +628,10 @@ def _cc_star(
     # legs of `nodes`); callers often pass a LAZY pair pipeline (the
     # semantic-dedup quadratic verify, the edit-distance variant join), so
     # without a lineage break the whole pipeline re-plans AND re-executes
-    # per reference — canon's eager checkpoint pays it once, then `nodes`
+    # per reference — the loop's first count pays it once, then `nodes`
     # pays it twice more at the final join (guide §3.3). The lazy
-    # checkpoint materializes inside canon's eager one (strictly first),
-    # so `nodes` later reads blocks, not the pipeline.
+    # checkpoint materializes inside that count (strictly first), so
+    # `nodes` later reads blocks, not the pipeline.
     pairs = pairs.select(*g, id_a, id_b).localCheckpoint(eager=False)
     nodes = (
         pairs.select(*g, F.col(id_a).alias("id"))
@@ -647,15 +646,9 @@ def _cc_star(
             F.least(F.col(id_a), F.col(id_b)).alias("b"),
         )
         .distinct()
-        # LAZY checkpoint + count: the count() below is the materializing
-        # action, so checkpoint blocks land in the SAME job the loop needs
-        # anyway (eager=True paid a separate materialization job first, then
-        # counted the cached blocks — two jobs per round instead of one;
-        # identical blocks either way)
-        .localCheckpoint(eager=False)
     )
-    n_canon = canon.count()
-    for _ in range(max_iters):
+
+    def _round(canon: DataFrame) -> DataFrame:
         # large-star over the symmetric view: for each center u, larger
         # neighbors re-attach to min(N(u) ∪ {u})
         sym = canon.select(*g, F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
@@ -668,9 +661,9 @@ def _cc_star(
         )
         # NOTE: no distinct here — `large` has at most one row per sym edge
         # (no amplification to bound), downstream `sm` is a MIN (duplicate-
-        # insensitive) and new_canon re-distincts, so the dedup exchange per
-        # round bought nothing; dropping it is one fewer shuffle per round
-        # (measured −44% per CC run, identical output)
+        # insensitive) and the round's result re-distincts, so the dedup
+        # exchange per round bought nothing; dropping it is one fewer
+        # shuffle per round (measured −44% per CC run, identical output)
         large = (
             sym.filter(F.col("dst") > F.col("src"))
             .join(mins, [*g, "src"])
@@ -680,44 +673,30 @@ def _cc_star(
         # small-star over canonical (a > b) edges: smaller neighbors and
         # the center both attach to the center's min smaller neighbor
         sm = large.groupBy(*g, "a").agg(F.min("b").alias("m"))
-        new_canon = (
+        # distinct: the loop's stability test compares edge SETS
+        return (
             large.join(sm, [*g, "a"])
             .filter(F.col("b") != F.col("m"))
             .select(*g, F.col("b").alias("a"), F.col("m").alias("b"))
             .unionByName(sm.select(*g, F.col("a"), F.col("m").alias("b")))
             .distinct()
-            # lazy: materialized by the convergence count below (one job per
-            # round, not checkpoint-job + count-job; same blocks)
-            .localCheckpoint(eager=False)
         )
-        # convergence: both sides are DISTINCT edge sets, so |new| == |old|
-        # plus one-direction emptiness proves set equality — the count is
-        # also the checkpoint's materializing action, and rounds that change
-        # the edge count (most of them) skip the exceptAll job entirely
-        # (guide §1.2: fewer jobs/shuffles per round beats per-op tuning)
-        n_new = new_canon.count()
-        stable = n_new == n_canon and new_canon.exceptAll(canon).isEmpty()
-        canon, n_canon = new_canon, n_new
-        if stable:
-            return (
-                nodes.join(
-                    canon.select(
-                        *g, F.col("a").alias("id"), F.col("b").alias("component")
-                    ),
-                    [*g, "id"],
-                    "left",
-                )
-                .select(
-                    *g, "id", F.coalesce("component", F.col("id")).alias("component")
-                )
-                # consumers read the label table from several plan branches
-                # (e.g. soft-dedup's cluster-size aggregate + its re-join);
-                # the lazy break stops each branch re-running the nodes
-                # distinct + label-assembly join (guide §3.3)
-                .localCheckpoint(eager=False)
-            )
-    raise RuntimeError(
-        f"connected_components: no convergence in {max_iters} star rounds"
+
+    canon = fixpoint(
+        _round, canon, max_iters, until_stable=True, name="connected_components"
+    )
+    return (
+        nodes.join(
+            canon.select(*g, F.col("a").alias("id"), F.col("b").alias("component")),
+            [*g, "id"],
+            "left",
+        )
+        .select(*g, "id", F.coalesce("component", F.col("id")).alias("component"))
+        # consumers read the label table from several plan branches (e.g.
+        # soft-dedup's cluster-size aggregate + its re-join); the lazy break
+        # stops each branch re-running the nodes distinct + label-assembly
+        # join (guide §3.3)
+        .localCheckpoint(eager=False)
     )
 
 

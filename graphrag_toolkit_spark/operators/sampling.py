@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from graphrag_toolkit_spark.functions.littable import lit_table
+from graphrag_toolkit_spark.functions.loop import fixpoint
 
 HASH_DOMAIN = 1 << 28  # md5 first 7 hex chars
 
@@ -363,8 +364,10 @@ def ipf_rake(
 
     Scale shape: everything after the first groupBy operates on the CELL
     table (|langs|×|sources| rows — dimension-sized, broadcast-friendly),
-    not the corpus; per half-iteration one cell-table aggregate + one
-    equi-join. The corpus is touched exactly once.
+    not the corpus; per half-iteration one window partitioned on the axis
+    (the marginal sums, no aggregate joined back), and each iteration is
+    one `functions.loop.fixpoint` round. The corpus is touched exactly
+    once.
 
     Degenerate inputs: a cell more than ~10⁶× under-represented relative
     to its marginal target can floor to w6 = 0 (it then contributes no
@@ -372,6 +375,8 @@ def ipf_rake(
     from feasible); if EVERY cell of an axis value floors to 0 its next
     scaling pass divides by zero and yields NULL weights for that slice —
     inputs that skewed need a coarser grid or capped targets."""
+    from pyspark.sql.window import Window
+
     cells = (
         df.groupBy(F.col(row_col).alias("r"), F.col(col_col).alias("c"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -388,22 +393,25 @@ def ipf_rake(
         "r", "c", "n", "nn", "nr", "nc",
         F.lit(IPF_GRID).cast("long").alias("w6"),
     )
-    for _ in range(iterations):
-        for axis, naxis in (("r", "nr"), ("c", "nc")):
-            # each half-pass reads w TWICE (marginal sums + the rescale
-            # join); without a lineage break the plan doubles per half-pass
-            # — 2^(2·iterations) copies of the corpus groupBy. The cell
-            # table is dimension-sized, so the checkpoint is ~free.
-            w = w.localCheckpoint(eager=False)
-            sums = w.groupBy(axis).agg(
-                F.sum(F.col("n") * F.col("w6")).cast("long").alias("m")
-            )
-            w = w.join(sums, axis).select(
-                "r", "c", "n", "nn", "nr", "nc",
-                F.expr(
-                    f"cast((w6 * ((nn * {IPF_GRID}L) div {naxis})) div m as long)"
-                ).alias("w6"),
-            )
+
+    def _scale(w: DataFrame, axis: str, naxis: str) -> DataFrame:
+        # one half-pass: rescale every cell so the axis marginals hit
+        # nn/naxis; the marginal is a window partitioned on the axis, so
+        # the pass reads w once (no aggregate joined back onto w)
+        m = F.sum(F.col("n") * F.col("w6")).over(Window.partitionBy(axis))
+        return w.withColumn("m", m.cast("long")).select(
+            "r", "c", "n", "nn", "nr", "nc",
+            F.expr(
+                f"cast((w6 * ((nn * {IPF_GRID}L) div {naxis})) div m as long)"
+            ).alias("w6"),
+        )
+
+    w = fixpoint(
+        lambda w: _scale(_scale(w, "r", "nr"), "c", "nc"),
+        w,
+        iterations,
+        name="ipf_rake",
+    )
     return w.select(
         F.col("r").alias(row_col),
         F.col("c").alias(col_col),

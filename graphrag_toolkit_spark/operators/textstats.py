@@ -478,10 +478,17 @@ def zipf_fit(
         [F.desc("freq"), F.asc("token")],
         out_col="rank",
     )
+    return _log_log_fit(ranked, F.col("rank"), F.col("freq"), "slope")
+
+
+def _log_log_fit(df: DataFrame, x: Column, y: Column, slope_col: str) -> DataFrame:
+    """One row ``(n_points, <slope_col>, intercept)``: the least-squares
+    line of ln y against ln x over the rows of ``df``. Each ln is quantized
+    to the 6-decimal grid, the four moment sums are exact decimals, and the
+    slope/intercept arithmetic runs on exact double operands (mirrored
+    op-for-op by the oracles)."""
     lnq = lambda c: F.round(F.log(c), 6).cast("decimal(12,6)")  # noqa: E731
-    pts = ranked.select(
-        lnq(F.col("rank")).alias("x"), lnq(F.col("freq")).alias("y")
-    )
+    pts = df.select(lnq(x).alias("x"), lnq(y).alias("y"))
     agg = pts.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.sum("x").cast("double").alias("sx"),
@@ -498,8 +505,43 @@ def zipf_fit(
     )
     return agg.select(
         F.col("n").cast("long").alias("n_points"),
-        slope.alias("slope"),
+        slope.alias(slope_col),
         ((F.col("sy") - slope * F.col("sx")) / F.col("n")).alias("intercept"),
+    )
+
+
+def _bigrams(df: DataFrame, text_col: str, id_col: str | None = None) -> DataFrame:
+    """``(prev, w)``, led by ``id`` when ``id_col`` is given: one row per
+    adjacent word pair of each row's lowercased alphanumeric tokens (rows
+    with < 2 tokens give none). The input is widened first: the explode
+    inherits the scan's partitioning, and one parquet file would put every
+    bigram on one core."""
+    from graphrag_toolkit_spark.functions.skew import widen_partitions
+
+    ws = F.filter(
+        F.split(F.lower(F.col(text_col)), r"[^0-9a-z]+"), lambda x: x != ""
+    )
+    base = widen_partitions(df)
+    if id_col:
+        base = base.withColumnRenamed(id_col, "id")
+    keep = ["id"] if id_col else []
+    return (
+        base.select(*keep, ws.alias("ws"))
+        .select(
+            *keep,
+            F.explode(
+                F.transform(
+                    F.when(
+                        F.size("ws") >= 2, F.sequence(F.lit(2), F.size("ws"))
+                    ).otherwise(F.array().cast("array<int>")),
+                    lambda i: F.struct(
+                        F.element_at(F.col("ws"), (i - 1).cast("int")).alias("prev"),
+                        F.element_at(F.col("ws"), i.cast("int")).alias("w"),
+                    ),
+                )
+            ).alias("b"),
+        )
+        .select(*keep, "b.prev", "b.w")
     )
 
 
@@ -517,29 +559,7 @@ def train_bigram_lm(
     position trick as the scorer), one (prev, w) groupBy + one prev-level
     aggregate — the classic count-based LM-training shape; at web scale the
     count table is the shuffle, exactly as in public n-gram pipelines."""
-    from graphrag_toolkit_spark.functions.skew import widen_partitions
-
-    ws = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^0-9a-z]+"), lambda x: x != ""
-    )
-    bigrams = (
-        widen_partitions(df)
-        .select(ws.alias("ws"))
-        .select(
-            F.explode(
-                F.transform(
-                    F.when(
-                        F.size("ws") >= 2, F.sequence(F.lit(2), F.size("ws"))
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda i: F.struct(
-                        F.element_at(F.col("ws"), (i - 1).cast("int")).alias("prev"),
-                        F.element_at(F.col("ws"), i.cast("int")).alias("w"),
-                    ),
-                )
-            ).alias("b")
-        )
-        .select("b.prev", "b.w")
-    )
+    bigrams = _bigrams(df, text_col)
     counts = bigrams.groupBy("prev", "w").agg(F.count(F.lit(1)).alias("n"))
     if min_count > 1:
         counts = counts.filter(F.col("n") >= min_count)
@@ -659,29 +679,7 @@ def kneser_ney_bigram_lm(
     table itself; the corpus-wide N1+(·,·) scalar is a broadcast one-row
     cross join, never a driver collect. min_count filters OUTPUT rows
     only — continuation counts always come from the full count table."""
-    from graphrag_toolkit_spark.functions.skew import widen_partitions
-
-    ws = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^0-9a-z]+"), lambda x: x != ""
-    )
-    bigrams = (
-        widen_partitions(df)
-        .select(ws.alias("ws"))
-        .select(
-            F.explode(
-                F.transform(
-                    F.when(
-                        F.size("ws") >= 2, F.sequence(F.lit(2), F.size("ws"))
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda i: F.struct(
-                        F.element_at(F.col("ws"), (i - 1).cast("int")).alias("prev"),
-                        F.element_at(F.col("ws"), i.cast("int")).alias("w"),
-                    ),
-                )
-            ).alias("b")
-        )
-        .select("b.prev", "b.w")
-    )
+    bigrams = _bigrams(df, text_col)
     counts = bigrams.groupBy("prev", "w").agg(F.count(F.lit(1)).alias("n"))
     prev_stats = counts.groupBy("prev").agg(
         F.sum("n").alias("c_v"), F.count(F.lit(1)).alias("n1_v")
@@ -747,8 +745,6 @@ def kn_perplexity_buckets(
     TWO-PHASE distributed rank over doc-level rows (operators/ranks.py) —
     no single-partition sort at any cardinality; the corpus text itself
     never passes through a window."""
-    from graphrag_toolkit_spark.functions.skew import widen_partitions
-
     lm = kneser_ney_bigram_lm(df, text_col, min_count=min_count).select(
         "prev", "w",
         F.round(
@@ -756,28 +752,7 @@ def kn_perplexity_buckets(
             6,
         ).cast("decimal(12,6)").alias("blp"),
     )
-    ws = F.filter(
-        F.split(F.lower(F.col(text_col)), r"[^0-9a-z]+"), lambda x: x != ""
-    )
-    bigrams = (
-        widen_partitions(df)
-        .select(F.col(id_col).alias("id"), ws.alias("ws"))
-        .select(
-            "id",
-            F.explode(
-                F.transform(
-                    F.when(
-                        F.size("ws") >= 2, F.sequence(F.lit(2), F.size("ws"))
-                    ).otherwise(F.array().cast("array<int>")),
-                    lambda i: F.struct(
-                        F.element_at(F.col("ws"), (i - 1).cast("int")).alias("prev"),
-                        F.element_at(F.col("ws"), i.cast("int")).alias("w"),
-                    ),
-                )
-            ).alias("b"),
-        )
-        .select("id", "b.prev", "b.w")
-    )
+    bigrams = _bigrams(df, text_col, id_col)
     unk = F.lit(str(round(unk_logp, 6))).cast("decimal(12,6)")
     scored = (
         bigrams.join(lm, ["prev", "w"], "left")

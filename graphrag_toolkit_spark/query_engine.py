@@ -23,9 +23,10 @@ anyway); the rest runs inside the caller's one final action:
 - in ``chunk_search_flat``, the reranked pool: prune, rescore and both
   truncates read it.
 
-A warm traversal query over the sf0.001 graph takes 63 jobs (build plus
+A warm traversal query over the sf0.001 graph takes 61 jobs (build plus
 final collect); 99 without the deduped-pool checkpoint, 113 without the
-reranked-pool one.
+reranked-pool one (both measured when the warm query took 63 jobs, before
+`LexicalGraphQueryEngine` read the embedding dimension once per engine).
 
 Fully deterministic — the correctness suite runs it against golden
 brute-force oracles; no model in the loop (keyword/entity providers in

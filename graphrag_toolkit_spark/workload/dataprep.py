@@ -370,29 +370,8 @@ def pmi_collocations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-consistent sample space, no unigram/bigram denominator mixing).
     The classic phrase-mining signal; ln is grid-quantized per the
     engine-exactness discipline, counts are exact integers."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"[^0-9a-z]+"), lambda t: t != ""
-    )
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.struct(
-                F.element_at(toks, i).alias("a"),
-                F.element_at(toks, i + 1).alias("b"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
-    # widen FIRST: the explode inherits the scan's partitioning (one
-    # parquet file = ONE task) and every bigram in the corpus would grind
-    # through a single core — the same fix ngram_leakage measured 69→5 s
-    from graphrag_toolkit_spark.functions.skew import widen_partitions
-
-    bi = (
-        widen_partitions(docs)
-        .select(F.explode(grams).alias("g"))
-        .select("g.a", "g.b")
+    bi = textstats._bigrams(load(spark, sf_dir, "documents"), "text").select(
+        F.col("prev").alias("a"), F.col("w").alias("b")
     )
     bi.persist()
     counts = bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
@@ -4859,27 +4838,7 @@ def heaps_law_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("decile", "k")
         .agg(F.count(F.lit(1)).alias("v"))
     )
-    lnq = lambda c: F.round(F.log(c), 6).cast("decimal(12,6)")  # noqa: E731
-    pts = v.select(lnq(F.col("k")).alias("x"), lnq(F.col("v")).alias("y"))
-    agg = pts.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum("y").cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(28,12)"))
-        .cast("double")
-        .alias("sxx"),
-    )
-    slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return agg.select(
-        F.col("n").cast("long").alias("n_points"),
-        slope.alias("beta"),
-        ((F.col("sy") - slope * F.col("sx")) / F.col("n")).alias("intercept"),
-    )
+    return textstats._log_log_fit(v, F.col("k"), F.col("v"), "beta")
 
 
 HEAPS_LAW_ORACLE = f"""

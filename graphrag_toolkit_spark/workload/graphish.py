@@ -187,6 +187,16 @@ def _copair_counts(
     )
 
 
+def _copurchase_edges(spark: SparkSession, sf_dir: str, min_shared: int) -> DataFrame:
+    """``(src, dst)``: the part co-purchase graph, one edge per part pair
+    (src < dst) appearing together in ≥ ``min_shared`` orders."""
+    return (
+        _copair_counts(spark, sf_dir)
+        .filter(F.col("n_shared") >= min_shared)
+        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
+    )
+
+
 # --- J15: BFS shortest paths vs recursive-CTE oracle -------------------------
 
 def bfs_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -984,11 +994,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     production."""
     from graphrag_toolkit_spark.operators.centrality import kcore_peel
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= TRI_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, TRI_MIN_SHARED)
     return kcore_peel(edges, k=KCORE_K, rounds=KCORE_ROUNDS)
 
 
@@ -1309,11 +1315,7 @@ def modularity_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     One-row exact-integer statistics + a single-division Q."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     assign = load(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node_id"), F.col("p_brand").alias("community")
     )
@@ -1366,11 +1368,7 @@ def conductance_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact-BIGINT cut/volume counts + one exact-operand division per row."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     assign = load(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node_id"), F.col("p_brand").alias("community")
     )
@@ -1422,11 +1420,7 @@ def harmonic_2hop_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary)."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     return centrality.harmonic_2hop(edges).orderBy("node_id")
 
 
@@ -1779,11 +1773,7 @@ def ktruss_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled wedge-join twin."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     return centrality.ktruss_peel(edges, k=KTRUSS_K, rounds=KTRUSS_ROUNDS)
 
 
@@ -1843,11 +1833,7 @@ def label_propagation_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     return centrality.label_propagation(edges, iters=LPA_ITERS)
 
 
@@ -1895,11 +1881,7 @@ def community_rollup_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate after the LPA rounds."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     labels = centrality.label_propagation(edges, iters=LPA_ITERS)
     la = labels.select(F.col("node_id").alias("src"), F.col("label").alias("la"))
     lb = labels.select(F.col("node_id").alias("dst"), F.col("label").alias("lb"))
@@ -1937,11 +1919,7 @@ def neighborhood_sizes_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     this sketch hash-gates against the SQL twin."""
     from graphrag_toolkit_spark.operators import centrality
 
-    edges = (
-        _copair_counts(spark, sf_dir)
-        .filter(F.col("n_shared") >= MODULARITY_MIN_SHARED)
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-    )
+    edges = _copurchase_edges(spark, sf_dir, MODULARITY_MIN_SHARED)
     return centrality.neighborhood_sizes(edges)
 
 

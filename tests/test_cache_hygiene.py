@@ -111,7 +111,7 @@ class TestReleaseOnFailure:
     def test_loops_release_persisted_input_when_a_job_fails(self, spark):
         """A failing job inside the loop still releases the persisted
         loop-invariant input."""
-        from graphrag_toolkit_spark.operators import ann, bfs, entity
+        from graphrag_toolkit_spark.operators import ann, bfs, centrality, dedup, entity
 
         def poisoned(good):
             return F.when(F.col("id") == 3, F.raise_error(F.lit("poisoned row"))).otherwise(good)
@@ -130,6 +130,12 @@ class TestReleaseOnFailure:
                 edges, seeds.withColumnRenamed("node_id", "entity_id")
             ),
             "train_centroids_lloyd": lambda: ann.train_centroids_lloyd(emb, n_centroids=2),
+            "katz_centrality": lambda: centrality.katz_centrality(edges, iters=2),
+            "pagerank": lambda: centrality.pagerank(edges, iters=2),
+            "hits": lambda: centrality.hits(edges, iters=2),
+            "connected_components minlabel": lambda: dedup.connected_components(
+                edges.toDF("id_a", "id_b"), algorithm="minlabel"
+            ),
         }
         for name, run in runs.items():
             spark.catalog.clearCache()

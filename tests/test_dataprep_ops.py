@@ -226,6 +226,16 @@ class TestConnectedComponents:
         with pytest.raises(RuntimeError, match="no convergence"):
             dedup.connected_components(pairs, max_iters=1)
 
+    def test_non_convergence_names_the_operator(self, spark):
+        from graphrag_toolkit_spark.functions.loop import NotConverged
+
+        pairs = spark.createDataFrame([{"id_a": i, "id_b": i + 1} for i in range(6)])
+        for algorithm in ("star", "minlabel"):
+            with pytest.raises(
+                NotConverged, match="^connected_components: no convergence in 1 rounds$"
+            ):
+                dedup.connected_components(pairs, max_iters=1, algorithm=algorithm)
+
     def test_star_beats_minlabel_on_long_chain(self, spark):
         """The hub-skew/diameter fix pinned: a 40-node path has
         eccentricity 39, so min-label propagation CANNOT converge in 10

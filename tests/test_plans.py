@@ -533,20 +533,33 @@ def test_rank_family_job_counts(spark, jobs_submitted):
         assert n <= bound, (name, n, bound)
 
 
-def test_near_dup_family_job_counts(spark, sf_dir, jobs_submitted):
-    """Jobs per registry query (build plus collect) of the near-duplicate
-    family at sf0.001; the bounds are the counts measured before the family
-    shared its pair kernels. Cached tables left by other tests would change
-    the plans, so the cache is cleared first; blocks are released between
-    queries as the harnesses do. AQE's stage submission is timing-dependent:
-    now and then an identical call takes one job more, before this change
-    too. A real rise shows in every call, so each query gets up to five
-    calls to come within its bound."""
+def _assert_query_job_bounds(spark, sf_dir, jobs_submitted, bounds):
+    """Each registry query in ``bounds`` submits at most its bound of jobs
+    (build plus collect) at sf0.001. Cached tables left by other tests would
+    change the plans, so the cache is cleared first; blocks are released
+    between queries as the harnesses do. AQE's stage submission is
+    timing-dependent: now and then an identical call takes one job more. A
+    real rise shows in every call, so each query gets up to five calls to
+    come within its bound."""
     from graphrag_toolkit_spark.session import release_blocks
     from graphrag_toolkit_spark.workload import all_queries
 
     queries = all_queries()
-    bounds = {
+    spark.catalog.clearCache()
+    for name, bound in bounds.items():
+        for _ in range(5):
+            n = jobs_submitted(lambda: queries[name](spark, sf_dir).collect())
+            release_blocks(spark)
+            if n <= bound:
+                break
+        assert n <= bound, (name, n, bound)
+
+
+def test_near_dup_family_job_counts(spark, sf_dir, jobs_submitted):
+    """Jobs per registry query (build plus collect) of the near-duplicate
+    family at sf0.001; the bounds are the counts measured before the family
+    shared its pair kernels."""
+    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
         "neardup_clusters_documents": 42,
         "minhash_neardup_documents": 18,
         "incremental_neardup_documents": 19,
@@ -558,43 +571,39 @@ def test_near_dup_family_job_counts(spark, sf_dir, jobs_submitted):
         "semantic_dedup_embeddings": 43,
         "soft_dedup_weights_documents": 47,
         "semantic_decontaminate_embeddings": 5,
-    }
-    spark.catalog.clearCache()
-    for name, bound in bounds.items():
-        for _ in range(5):
-            n = jobs_submitted(lambda: queries[name](spark, sf_dir).collect())
-            release_blocks(spark)
-            if n <= bound:
-                break
-        assert n <= bound, (name, n, bound)
+    })
 
 
 def test_keyword_family_job_counts(spark, sf_dir, jobs_submitted):
     """Jobs per registry query (build plus collect) of the TF-IDF/BM25
     family at sf0.001; the bounds are the counts measured with the scorers
     as lazy plans (before: tfidf 19, bm25 15, hybrid_rrf 29,
-    retrieval_eval 35, top_terms 9). Cache cleared first, blocks released
-    between queries, up to five calls per query — as in the near-dup pin
-    above."""
-    from graphrag_toolkit_spark.session import release_blocks
-    from graphrag_toolkit_spark.workload import all_queries
-
-    queries = all_queries()
-    bounds = {
+    retrieval_eval 35, top_terms 9)."""
+    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
         "tfidf_documents": 12,
         "bm25_documents": 12,
         "hybrid_rrf_documents": 19,
         "retrieval_eval_pipeline": 25,
         "top_terms_documents": 9,
-    }
-    spark.catalog.clearCache()
-    for name, bound in bounds.items():
-        for _ in range(5):
-            n = jobs_submitted(lambda: queries[name](spark, sf_dir).collect())
-            release_blocks(spark)
-            if n <= bound:
-                break
-        assert n <= bound, (name, n, bound)
+    })
+
+
+def test_loop_family_job_counts(spark, sf_dir, jobs_submitted):
+    """Jobs per registry query (build plus collect) of the operators that
+    run on `functions.loop.fixpoint`, at sf0.001; the bounds are the counts
+    measured with the round driver. Before it the k-core and k-truss peels
+    checkpointed each round eagerly (kcore_parts 15, ktruss_parts 27) and
+    raking re-joined a marginal aggregate per half-pass
+    (ipf_rake_documents 14)."""
+    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
+        "kcore_parts": 12,
+        "ktruss_parts": 25,
+        "label_propagation_parts": 22,
+        "community_rollup_parts": 30,
+        "hits_scores_graph": 40,
+        "ipf_rake_documents": 10,
+        "hub_knockout_parts": 43,
+    })
 
 
 def test_partitioned_layout_prunes_partitions(spark, sf_dir, tmp_path):

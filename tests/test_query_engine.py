@@ -160,6 +160,25 @@ class TestRetrievalChain:
         spark.catalog.clearCache()
         engine = LexicalGraphQueryEngine.for_traversal_based_search(g)
         engine.retrieve("alpha beta").collect()
-        warm = jobs_submitted(lambda: engine.retrieve("alpha beta").collect())
-        # AQE varies the count by a job or two between identical calls
-        assert warm <= 49
+        # AQE now and then adds a job to an identical call; a real rise
+        # shows in every call, so the warm call gets up to five tries
+        for _ in range(5):
+            warm = jobs_submitted(lambda: engine.retrieve("alpha beta").collect())
+            if warm <= 39:
+                break
+        assert warm <= 39
+
+    def test_engine_reads_embedding_dim_once(self, g, monkeypatch):
+        from graphrag_toolkit_spark import api
+
+        reads = []
+        read = api._embed_dim
+        monkeypatch.setattr(api, "_embed_dim", lambda graph: reads.append(1) or read(graph))
+        for engine in (
+            api.LexicalGraphQueryEngine.for_traversal_based_search(g),
+            api.LexicalGraphQueryEngine.for_semantic_guided_search(g),
+        ):
+            reads.clear()
+            engine.retrieve("alpha beta")
+            engine.retrieve("gamma delta")
+            assert len(reads) == 1
