@@ -411,15 +411,16 @@ class CorpusPipeline:
         return out
 
     def report(self, docs: DataFrame) -> list[dict]:
-        """Per-stage survivor counts. Each stage's output is eagerly
-        ``localCheckpoint``-ed before counting, so stage N's count reads
-        stage N−1's materialized partitions instead of re-executing the
-        whole prefix lineage (an n-stage report is O(n) stage executions,
-        not O(n²) — MinHash pair generation and connected components run
-        once, not once per later stage)."""
+        """Per-stage survivor counts. Each stage's output is
+        ``localCheckpoint``-ed lazily and its ``count`` is the checkpoint's
+        materializing action, so stage N's count reads stage N−1's
+        materialized partitions instead of re-executing the whole prefix
+        lineage (an n-stage report is O(n) stage executions, not O(n²) —
+        MinHash pair generation and connected components run once, not
+        once per later stage)."""
         rows = [{"stage": "input", "rows": docs.count()}]
         out = docs
         for name, arg in self._stages:
-            out = self._apply(out, name, arg).localCheckpoint(eager=True)
+            out = self._apply(out, name, arg).localCheckpoint(eager=False)
             rows.append({"stage": name, "rows": out.count()})
         return rows

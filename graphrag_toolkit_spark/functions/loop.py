@@ -1,5 +1,10 @@
 """Driver-loop primitives for the iterative operators.
 
+`pinned` is the one place a frame is persisted: an operator pins its
+loop-invariant input for the length of a ``with`` block, and the block's
+exit unpersists it, also when a job inside fails. Nothing the package
+returns is a persisted frame.
+
 `checkpoint_nonempty` ends each level of the frontier loops (bfs, entity
 expansion, beam search, BPE merges). `fixpoint` drives every loop whose
 state is one frame rewritten per round: the rank family
@@ -11,7 +16,8 @@ the consumer (or for the convergence count)."""
 
 from __future__ import annotations
 
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -19,6 +25,29 @@ from pyspark.sql import DataFrame
 class NotConverged(RuntimeError):
     """An iterative operator's state still changed in its last allowed
     round."""
+
+
+@contextmanager
+def pinned(df: DataFrame | None = None) -> Iterator:
+    """Persist frames for the length of a ``with`` block; unpersist them on
+    exit, whether the block returns or raises.
+
+    ``with pinned(df) as df:`` pins one frame. ``with pinned() as pin:``
+    yields a callable that persists and returns its argument, for blocks
+    that pin conditionally or pin several frames. A frame the block returns
+    must not read a pinned frame lazily after the exit: the read still
+    works, but it recomputes the frame's plan."""
+    held: list[DataFrame] = []
+
+    def pin(frame: DataFrame) -> DataFrame:
+        held.append(frame.persist())
+        return frame
+
+    try:
+        yield pin if df is None else pin(df)
+    finally:
+        for frame in held:
+            frame.unpersist()
 
 
 def checkpoint_nonempty(level: DataFrame) -> DataFrame | None:

@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.fixtures import pseudo_embedding
 from graphrag_toolkit_spark.functions.littable import lit_table
+from graphrag_toolkit_spark.functions.loop import pinned
 from graphrag_toolkit_spark.functions.vector import (
     cosine_similarity_quantized,
     dot_quantized,
@@ -230,9 +231,7 @@ def train_centroids_lloyd(
         # norm folds the shared quantized array — one quantize pass per row
         "id", "qv", l2_norm_prequantized(F.col("qv")).alias("nv")
     )
-    pool.persist()
-
-    try:
+    with pinned(pool):
         seed_rows = (
             pool.withColumn("_hv", hash_value(F.col("id")))
             .orderBy(F.asc("_hv"), F.asc("id"))
@@ -285,8 +284,6 @@ def train_centroids_lloyd(
             centroids = [
                 updated.get(i, centroids[i]) for i in range(n_centroids)
             ]
-    finally:
-        pool.unpersist()
     return lit_table(
         spark, "cid int, qc array<decimal(12,6)>",
         [(i, c) for i, c in enumerate(centroids)],

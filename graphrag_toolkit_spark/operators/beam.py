@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.fixtures import SparkGraphTables
-from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty, pinned
 from graphrag_toolkit_spark.functions.vector import (
     cosine_score_prequantized,
     cosine_similarity,
@@ -258,7 +258,6 @@ def chunk_beam_search(
         ms.join(supports, "statement_id").join(subj, "fact_id")
         .select("chunk_id", "entity_id").distinct()
     )
-    chunk_entity.persist()
 
     def nbrs(frontier: DataFrame) -> DataFrame:
         f = frontier.withColumnRenamed("node_id", "chunk_id")
@@ -274,13 +273,8 @@ def chunk_beam_search(
             .distinct()
         )
 
-    try:
-        # beam_search runs its level loop eagerly (per-level localCheckpoint),
-        # so the returned DF no longer references chunk_entity — safe to
-        # release the cache in finally instead of leaking it for the session
+    with pinned(chunk_entity):
         return beam_search(
             g.embeddings_chunk, seeds, nbrs, query_vector,
             beam_width=beam_width, max_depth=max_depth, scoring=scoring,
         ).withColumnRenamed("node_id", "chunk_id")
-    finally:
-        chunk_entity.unpersist()

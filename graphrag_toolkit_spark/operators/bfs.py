@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty, pinned
 
 
 def schema_relations(triples: DataFrame) -> DataFrame:
@@ -47,10 +47,9 @@ def multi_hop(
     """J13: union of triplets reached in ≤ ``hops`` rounds of one-hop."""
     t = triples if rels is None else triples.filter(F.col("rel").isin(rels))
     # triples may be a computed DF (unions/distincts over base tables):
-    # persist once so each hop joins against the materialized table instead
+    # pinned once so each hop joins against the materialized table instead
     # of re-running the upstream shuffles per level
-    t.persist()
-    try:
+    with pinned(t) as t:
         acc = None
         cur = frontier.select("node_id").distinct()
         for _ in range(hops):
@@ -61,11 +60,9 @@ def multi_hop(
                 break
             acc = step if acc is None else acc.unionByName(step)
             cur = step.select(F.col("dst").alias("node_id")).distinct()
-        if acc is None:
-            return triples.select("src", "rel", "dst").limit(0)
-        return acc.distinct()
-    finally:
-        t.unpersist()
+    if acc is None:
+        return triples.select("src", "rel", "dst").limit(0)
+    return acc.distinct()
 
 
 def follow_metapath(
@@ -75,9 +72,7 @@ def follow_metapath(
     metapath position. Returns (start_id, end_id) pairs of complete paths."""
     # one materialization of the (possibly computed) triples table; per-level
     # rel filters then scan the cached table, not the upstream plan
-    t = triples.filter(F.col("rel").isin(list(metapath)))
-    t.persist()
-    try:
+    with pinned(triples.filter(F.col("rel").isin(list(metapath)))) as t:
         cur = frontier.select(
             F.col("node_id").alias("start_id"), F.col("node_id").alias("cur_id")
         ).distinct()
@@ -94,9 +89,7 @@ def follow_metapath(
             if cur is None:
                 cur = level.limit(0)
                 break
-        return cur.select("start_id", F.col("cur_id").alias("end_id"))
-    finally:
-        t.unpersist()
+    return cur.select("start_id", F.col("cur_id").alias("end_id"))
 
 
 def shortest_paths(
@@ -126,9 +119,7 @@ def shortest_paths(
     elif not edges_unique:
         edges = edges.distinct()
     # materialize the deduped edge table once; every BFS level re-joins it
-    edges.persist()
-
-    try:
+    with pinned(edges):
         settled = (
             sources.select(F.col("node_id"))
             .distinct()
@@ -172,8 +163,6 @@ def shortest_paths(
             # stays flat (a union of ≤max_depth checkpointed pieces)
             settled = settled.unionByName(nxt)
             frontier = nxt
-    finally:
-        edges.unpersist()
     if targets is not None:
         settled = settled.join(
             F.broadcast(targets.select("node_id").distinct()), "node_id"

@@ -48,7 +48,7 @@ import itertools
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_toolkit_spark.functions.loop import fixpoint
+from graphrag_toolkit_spark.functions.loop import fixpoint, pinned
 
 
 def _superstep(
@@ -198,8 +198,7 @@ def katz_centrality(
         ).repartition(F.col("src"), F.col("_salt"))
     else:
         e = e.repartition(F.col("src"))
-    e.persist()
-    try:
+    with pinned(e):
         nodes = _node_set(e, nodes)
         ranks = _propagate(
             e,
@@ -216,8 +215,6 @@ def katz_centrality(
             "node_id",
             (F.col("r").cast("double") / F.lit(float(scale))).alias("katz"),
         )
-    finally:
-        e.unpersist()
 
 
 def personalized_katz(
@@ -248,8 +245,7 @@ def personalized_katz(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .repartition(F.col("src"))
     )
-    e.persist()
-    try:
+    with pinned(e):
         base = (
             seeds.select(F.col(seed_col).alias("node_id"))
             .distinct()
@@ -268,8 +264,6 @@ def personalized_katz(
             "node_id",
             (F.col("r").cast("double") / F.lit(float(scale))).alias("score"),
         )
-    finally:
-        e.unpersist()
 
 
 def kcore_peel(
@@ -366,8 +360,7 @@ def pagerank(
     ed = e.withColumn(
         "tw", F.sum("w").over(Window.partitionBy("src"))
     ).repartition(F.col("src"))
-    ed.persist()
-    try:
+    with pinned(ed):
         nodes = _node_set(e, nodes)
         ranks = _propagate(
             ed,
@@ -381,8 +374,6 @@ def pagerank(
             "node_id",
             (F.col("r").cast("double") / F.lit(1_000_000.0)).alias("pagerank"),
         )
-    finally:
-        ed.unpersist()
 
 
 def hits(
@@ -437,13 +428,12 @@ def hits(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    e_fwd = e.repartition(F.col("src")).persist()
-    e_rev = (
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        .repartition(F.col("src"))
-        .persist()
-    )
-    try:
+    with pinned() as pin:
+        e_fwd = pin(e.repartition(F.col("src")))
+        e_rev = pin(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            .repartition(F.col("src"))
+        )
         nodes = _node_set(e, nodes)
         zeros = nodes.withColumn("m", F.lit(0).cast("long"))
 
@@ -490,9 +480,6 @@ def hits(
                 "node_id",
             )
         )
-    finally:
-        e_fwd.unpersist()
-        e_rev.unpersist()
 
 
 def modularity(

@@ -29,7 +29,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from graphrag_toolkit_spark.functions.loop import fixpoint
+from graphrag_toolkit_spark.functions.loop import fixpoint, pinned
 from graphrag_toolkit_spark.functions.skew import widen_partitions
 from graphrag_toolkit_spark.functions.text import word_grams
 from graphrag_toolkit_spark.functions.vector import (
@@ -329,13 +329,11 @@ def _posting_list_pairs(
     Shingles are distinct per id, so COUNT(*) per pair of the posting-list
     self-join is |A∩B|: no separate candidate-distinct stage and no re-join
     of the shingle table. The (filtered) shingle table feeds both join
-    sides and the size aggregate, so it is persisted; the result is tiny
-    next to it, so the eager checkpoint lets both caches be released here
-    instead of leaking for the session lifetime."""
-    sh = shingles(df, text_col, id_col, k)
-    sh.persist()
-    held = [sh]
-    try:
+    sides and the size aggregate, so it is pinned; the result is tiny next
+    to it and is checkpointed eagerly, so it is computed from the pinned
+    blocks before they go."""
+    with pinned() as pin:
+        sh = pin(shingles(df, text_col, id_col, k))
         if max_doc_freq is not None:
             rare = (
                 sh.groupBy("shingle")
@@ -343,9 +341,7 @@ def _posting_list_pairs(
                 .filter(F.col("df") <= max_doc_freq)
                 .select("shingle")
             )
-            sh = sh.join(rare, "shingle", "left_semi")
-            sh.persist()
-            held.append(sh)
+            sh = pin(sh.join(rare, "shingle", "left_semi"))
         a = sh.withColumnRenamed("id", "id_a")
         b = sh.withColumnRenamed("id", "id_b")
         keep = F.col("id_a") != F.col("id_b") if ordered else F.col("id_a") < F.col("id_b")
@@ -357,9 +353,6 @@ def _posting_list_pairs(
         )
         sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
         return score(inter, sizes).localCheckpoint(eager=True)
-    finally:
-        for t in held:
-            t.unpersist()
 
 
 def ngram_jaccard_pairs(
@@ -418,20 +411,17 @@ def _verified_pairs(
     ``candidates(sh)`` → (id_a, id_b, jaccard), materialized eagerly.
 
     The shingle table feeds the candidate pipeline AND three joins in the
-    Jaccard verification, so it is persisted once instead of re-running the
+    Jaccard verification, so it is pinned once instead of re-running the
     explode per consumer. Candidate pairs are a vanishing fraction of the
     corpus but their plan embeds the whole signature pipeline, so they are
     materialized once and the two broadcast consumers in the verification
     (pairs, candidate ids) don't each re-run the LSH stages. The verified
-    pair list is tiny: the eager checkpoint lets the shingle cache be
-    released here (a lazy return would leak it)."""
-    sh.persist()
-    try:
+    pair list is tiny and is checkpointed eagerly, so it is computed from
+    the pinned shingles before they go."""
+    with pinned(sh):
         cand = candidates(sh).localCheckpoint(eager=True)
         out = jaccard_on_pairs(sh, cand).filter(F.col("jaccard") >= threshold)
         return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
 
 
 def minhash_near_dup_pairs(
@@ -592,8 +582,7 @@ def connected_components(
             .agg(F.min("component").alias("component"))
         )
 
-    edges.persist()
-    try:
+    with pinned(edges):
         return fixpoint(
             _round,
             edges.select(F.col("src").alias("id"))
@@ -603,8 +592,6 @@ def connected_components(
             until_stable=True,
             name="connected_components",
         )
-    finally:
-        edges.unpersist()
 
 
 def _cc_star(

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphrag_toolkit_spark.fixtures import SparkGraphTables
-from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty
+from graphrag_toolkit_spark.functions.loop import checkpoint_nonempty, pinned
 from graphrag_toolkit_spark.functions.text import search_string
 
 LOCAL_ENTITY = "__Local_Entity__"
@@ -259,16 +259,14 @@ def expand_context(
     identical by contract; the oracle gate pins it). The derived edge table
     then never exists at any scale.
     """
-    if touching_fn is None:
-        rel = rel_edges.select("src", "dst")
-        # loop-invariant input (often itself a computed join): materialize
-        # once
-        rel.persist()
-        id_type = dict(rel.dtypes)["src"]
-    else:
-        rel = None
-        id_type = dict(seed_entities.dtypes)["entity_id"]
-    try:
+    with pinned() as pin:
+        if touching_fn is None:
+            # loop-invariant input (often itself a computed join):
+            # materialize once
+            rel = pin(rel_edges.select("src", "dst"))
+            id_type = dict(rel.dtypes)["src"]
+        else:
+            id_type = dict(seed_entities.dtypes)["entity_id"]
         visited = (
             seed_entities.select(F.col("entity_id")).distinct()
             .localCheckpoint(eager=True)
@@ -337,7 +335,4 @@ def expand_context(
             # visited (anti-join above) — the union is already distinct and its
             # pieces are checkpointed, so no re-checkpoint/dedup per level
             visited = visited.unionByName(frontier)
-    finally:
-        if rel is not None:
-            rel.unpersist()
     return acc

@@ -93,8 +93,12 @@ def build_session(
 def release_blocks(spark: SparkSession) -> None:
     """Unpersist every persistent RDD (blocking). NO forced JVM GC — see below.
 
-    Operators return eager/lazy localCheckpointed (or persisted) frames by
-    design — the CONSUMER owns their lifetime. A harness that constructs
+    Operators never return persisted frames: what an operator persists it
+    pins with `functions.loop.pinned`, which unpersists on exit. They do
+    return eager or lazy localCheckpointed frames, and registry queries
+    checkpoint their shared intermediates lazily and persist nothing. The
+    CONSUMER owns the lifetime of those blocks, so a registry query's
+    checkpoints are the harness's to release. A harness that constructs
     many queries sequentially in one session (bench.py: 87, tools/check.py:
     279) must release each query's blocks before the next, or they pile up
     in the block manager: storage claims up to spark.memory.storageFraction

@@ -84,14 +84,16 @@ def append_merge(
         .agg(F.min(F.struct("_prio", *payload)).alias("_s"))
         .select(id_col, *[F.col(f"_s.{c}").alias(c) for c in payload])
     )
-    # write via a temp dir: parquet can't overwrite its own input
-    tmp = path.rstrip("/") + "__tmp"
+    # write via a temp dir (parquet can't overwrite its own input), then
+    # swap it into place: tmp stays whole until the old table is gone, so a
+    # crash leaves one complete copy
+    path = path.rstrip("/")
+    tmp = path + "__tmp"
     merged.write.mode("overwrite").parquet(tmp)
-    final = spark.read.parquet(tmp)
-    final.write.mode("overwrite").parquet(path)
     import shutil
 
-    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(tmp, path)
 
 
 # --- S6: checkpoint ----------------------------------------------------------

@@ -372,8 +372,7 @@ def pmi_collocations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exactness discipline, counts are exact integers."""
     bi = textstats._bigrams(load(spark, sf_dir, "documents"), "text").select(
         F.col("prev").alias("a"), F.col("w").alias("b")
-    )
-    bi.persist()
+    ).localCheckpoint(eager=False)
     counts = bi.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c_ab"))
     left = bi.groupBy("a").agg(F.count(F.lit(1)).alias("c_a"))
     right = bi.groupBy("b").agg(F.count(F.lit(1)).alias("c_b"))
@@ -383,7 +382,7 @@ def pmi_collocations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB of web text. No hint: AQE broadcasts them while they are
     # small and falls back to a shuffle join when they are not. The
     # one-row total `n` stays hinted (scalar aggregate, bounded).
-    out = (
+    return (
         counts.filter(F.col("c_ab") >= PMI_MIN_COUNT)
         .join(left, "a")
         .join(right, "b")
@@ -401,9 +400,6 @@ def pmi_collocations_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("pmi"), F.asc("a"), F.asc("b"))
         .limit(PMI_TOP)
     )
-    out = out.localCheckpoint(eager=True)
-    bi.unpersist()
-    return out
 
 
 PMI_ORACLE = f"""
@@ -792,8 +788,11 @@ def chi_square_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     are grid-rounded and decimal-summed so the statistic is
     engine-identical. Returns (n, n_cells, dof, chi2)."""
     docs = load(spark, sf_dir, "documents")
-    obs = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    obs.persist()
+    obs = (
+        docs.groupBy("lang", "source")
+        .agg(F.count(F.lit(1)).alias("o"))
+        .localCheckpoint(eager=False)
+    )
     rows = obs.groupBy("lang").agg(F.sum("o").alias("rt"))
     cols = obs.groupBy("source").agg(F.sum("o").alias("ct"))
     tot = obs.agg(
@@ -804,7 +803,8 @@ def chi_square_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = (
         obs.join(F.broadcast(rows), "lang")
-        .join(F.broadcast(cols), "source")
+        # no hint: source ids are an open domain, so AQE decides
+        .join(cols, "source")
         .crossJoin(F.broadcast(tot))
     )
     expected = (F.col("rt") * F.col("ct")).cast("double") / F.col("n")
@@ -817,13 +817,11 @@ def chi_square_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = e.groupBy("n", "n_cells", "n_rows", "n_cols").agg(
         F.sum(term).cast("double").alias("chi2")
     )
-    out = out.select(
+    return out.select(
         "n", "n_cells",
         ((F.col("n_rows") - 1) * (F.col("n_cols") - 1)).alias("dof"),
         "chi2",
-    ).localCheckpoint(eager=True)
-    obs.unpersist()
-    return out
+    )
 
 
 CHI_SQUARE_ORACLE = """
@@ -1101,59 +1099,57 @@ def minhash_jaccard_error_documents(spark: SparkSession, sf_dir: str) -> DataFra
     the estimator's false positives. Every number is an exact integer or
     a single exact-operand division."""
     docs = load(spark, sf_dir, "documents")
-    sh = dedup.shingles(docs, "text", "doc_id", k=SHINGLE_K)
-    sh.persist()
-    try:
-        # sig feeds THREE branches (the banded candidate join + the a/b
-        # estimate sides) — materialize the signature aggregate once
-        # (guide §3.3). Lazy: cand's eager checkpoint below is the first
-        # consumer and computes every sig partition, so sig materializes
-        # inside cand's job — one job instead of two, identical blocks.
-        sig = dedup.minhash_signatures(sh, NUM_HASHES).localCheckpoint(
-            eager=False
+    sh = dedup.shingles(docs, "text", "doc_id", k=SHINGLE_K).localCheckpoint(
+        eager=False
+    )
+    # sig feeds THREE branches (the banded candidate join + the a/b
+    # estimate sides) — materialize the signature aggregate once
+    # (guide §3.3). Lazy: cand's eager checkpoint below is the first
+    # consumer and computes every sig partition, so sig materializes
+    # inside cand's job — one job instead of two, identical blocks.
+    sig = dedup.minhash_signatures(sh, NUM_HASHES).localCheckpoint(
+        eager=False
+    )
+    cand = dedup.lsh_bucket_pairs(sig, NUM_HASHES, BANDS).localCheckpoint(
+        eager=True
+    )
+    a = sig.select(
+        F.col("id").alias("id_a"),
+        *[F.col(f"mh{h}").alias(f"a{h}") for h in range(NUM_HASHES)],
+    )
+    b = sig.select(
+        F.col("id").alias("id_b"),
+        *[F.col(f"mh{h}").alias(f"b{h}") for h in range(NUM_HASHES)],
+    )
+    n_match = sum(
+        F.when(F.col(f"a{h}") == F.col(f"b{h}"), 1).otherwise(0)
+        for h in range(NUM_HASHES)
+    )
+    est = (
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            "id_a", "id_b",
+            (n_match.cast("double") / F.lit(float(NUM_HASHES))).alias(
+                "est_jaccard"
+            ),
         )
-        cand = dedup.lsh_bucket_pairs(sig, NUM_HASHES, BANDS).localCheckpoint(
-            eager=True
+    )
+    # corpus-wide candidates: shuffle-joined unless AQE sees them small
+    exact = dedup.jaccard_on_pairs(sh, cand, broadcast_pairs=False)
+    return (
+        est.join(exact, ["id_a", "id_b"], "left")
+        .select(
+            F.col("id_a").alias("doc_a"),
+            F.col("id_b").alias("doc_b"),
+            "est_jaccard",
+            F.coalesce("jaccard", F.lit(0.0)).alias("exact_jaccard"),
+            F.abs(
+                F.col("est_jaccard") - F.coalesce("jaccard", F.lit(0.0))
+            ).alias("abs_err"),
         )
-        a = sig.select(
-            F.col("id").alias("id_a"),
-            *[F.col(f"mh{h}").alias(f"a{h}") for h in range(NUM_HASHES)],
-        )
-        b = sig.select(
-            F.col("id").alias("id_b"),
-            *[F.col(f"mh{h}").alias(f"b{h}") for h in range(NUM_HASHES)],
-        )
-        n_match = sum(
-            F.when(F.col(f"a{h}") == F.col(f"b{h}"), 1).otherwise(0)
-            for h in range(NUM_HASHES)
-        )
-        est = (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .select(
-                "id_a", "id_b",
-                (n_match.cast("double") / F.lit(float(NUM_HASHES))).alias(
-                    "est_jaccard"
-                ),
-            )
-        )
-        exact = dedup.jaccard_on_pairs(sh, cand)
-        out = (
-            est.join(exact, ["id_a", "id_b"], "left")
-            .select(
-                F.col("id_a").alias("doc_a"),
-                F.col("id_b").alias("doc_b"),
-                "est_jaccard",
-                F.coalesce("jaccard", F.lit(0.0)).alias("exact_jaccard"),
-                F.abs(
-                    F.col("est_jaccard") - F.coalesce("jaccard", F.lit(0.0))
-                ).alias("abs_err"),
-            )
-            .orderBy("doc_a", "doc_b")
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+        .orderBy("doc_a", "doc_b")
+    )
 
 
 _MH_MATCH_SQL = " + ".join(
@@ -5856,8 +5852,8 @@ def unigram_kl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("ca"),
             F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("cb"),
         )
+        .localCheckpoint(eager=False)
     )
-    counts.persist()
     tot = counts.agg(
         F.sum("ca").alias("na"), F.sum("cb").alias("nb"),
         F.count(F.lit(1)).alias("v"),
@@ -5874,7 +5870,7 @@ def unigram_kl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("double").alias("dlog"),
         F.col("v"), F.col("na"), F.col("nb"),
     )
-    out = terms.groupBy("v", "na", "nb").agg(
+    return terms.groupBy("v", "na", "nb").agg(
         F.sum(
             F.round(F.col("pa") * F.col("dlog"), 9).cast("decimal(18,9)")
         ).cast("double").alias("kl_ab")
@@ -5884,9 +5880,6 @@ def unigram_kl_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nb").alias("n_tokens_b"),
         "kl_ab",
     )
-    out = out.localCheckpoint(eager=True)
-    counts.unpersist()
-    return out
 
 
 UNIGRAM_KL_ORACLE = """

@@ -1067,8 +1067,7 @@ def dau_mau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     user_days = ev.select(
         F.to_date("ts").alias("day"), "user_id"
-    ).distinct()
-    user_days.persist()
+    ).distinct().localCheckpoint(eager=False)
     dau = user_days.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
     contrib = user_days.select(
         F.explode(
@@ -1085,13 +1084,10 @@ def dau_mau_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("wday")
         .agg(F.count(F.lit(1)).alias("wau"))
     )
-    out = dau.join(wau, dau.day == wau.wday).select(
+    return dau.join(wau, dau.day == wau.wday).select(
         "day", "dau", "wau",
         (F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
     )
-    out = out.localCheckpoint(eager=True)
-    user_days.unpersist()
-    return out
 
 
 DAU_MAU_ORACLE = f"""
@@ -1139,8 +1135,7 @@ def markov_accuracy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b.event_type").alias("dst"),
         (F.col("b.rn")
          <= F.floor(F.lit(MARKOV_TRAIN_FRAC) * F.col("a.n_u"))).alias("is_train"),
-    )
-    trans.persist()
+    ).localCheckpoint(eager=False)
     model = (
         trans.filter(F.col("is_train"))
         .groupBy("src", "dst")
@@ -1153,8 +1148,10 @@ def markov_accuracy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", F.col("dst").alias("pred"))
     )
     test = trans.filter(~F.col("is_train"))
-    out = (
-        test.join(F.broadcast(pred), "src", "left")
+    return (
+        # no hint: pred has a row per event type, but as (src, dst) the
+        # plan cannot show that bound, so AQE decides
+        test.join(pred, "src", "left")
         .agg(
             F.count(F.lit(1)).alias("n_test"),
             F.sum(
@@ -1166,9 +1163,6 @@ def markov_accuracy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_correct").cast("double") / F.col("n_test")).alias("accuracy"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    trans.unpersist()
-    return out
 
 
 MARKOV_ACCURACY_ORACLE = f"""

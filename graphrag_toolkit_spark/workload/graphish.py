@@ -487,8 +487,7 @@ def entity_context_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pp = li.distinct().select(
         "l_orderkey",
         F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("pk"),
-    )
-    pp.persist()
+    ).localCheckpoint(eager=False)
 
     def touching(frontier: DataFrame) -> DataFrame:
         hits = pp.join(
@@ -504,14 +503,9 @@ def entity_context_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = part.filter(F.col("p_partkey") <= 3).select(
         F.concat(F.lit("p"), F.col("p_partkey").cast("string")).alias("entity_id")
     )
-    try:
-        # every level materializes inside (eager per-level checkpoints), so
-        # the adjacency cache can be released on return
-        return expand_context(
-            None, seeds, max_depth=2, per_node_limit=3, touching_fn=touching
-        )
-    finally:
-        pp.unpersist()
+    return expand_context(
+        None, seeds, max_depth=2, per_node_limit=3, touching_fn=touching
+    )
 
 
 _LEVEL = """

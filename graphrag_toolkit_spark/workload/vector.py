@@ -328,8 +328,9 @@ def _beam_over_labels(spark: SparkSession, sf_dir: str, scoring: str) -> DataFra
     emb = load(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir, 0)
     nodes = emb.select(F.col("vec_id").alias("id"), "embedding")
-    labels = emb.select(F.col("vec_id").alias("node_id"), "label")
-    labels.persist()
+    labels = emb.select(F.col("vec_id").alias("node_id"), "label").localCheckpoint(
+        eager=False
+    )
 
     def nbrs(frontier: DataFrame) -> DataFrame:
         f = labels.join(frontier, "node_id").select(
@@ -343,16 +344,11 @@ def _beam_over_labels(spark: SparkSession, sf_dir: str, scoring: str) -> DataFra
             .distinct()
         )
 
-    try:
-        # beam_search materializes every level eagerly, so the label cache
-        # can be released as soon as it returns
-        out = beam_search(
-            nodes, nodes.select(F.col("id").alias("node_id")), nbrs, qv,
-            beam_width=_BEAM_WIDTH, max_depth=_BEAM_DEPTH,
-            scoring=scoring, quantized=True,
-        )
-    finally:
-        labels.unpersist()
+    out = beam_search(
+        nodes, nodes.select(F.col("id").alias("node_id")), nbrs, qv,
+        beam_width=_BEAM_WIDTH, max_depth=_BEAM_DEPTH,
+        scoring=scoring, quantized=True,
+    )
     return out.select(F.col("node_id").alias("vec_id"), "depth", "score")
 
 

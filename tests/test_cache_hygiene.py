@@ -1,7 +1,8 @@
-"""Cache hygiene: operators that persist() loop-invariant inputs must release
-them before returning (long-lived sessions would otherwise accumulate dead
-cached tables in executor memory). bfs.multi_hop set the discipline; these
-tests pin it for every other persist site.
+"""Cache hygiene: operators persist loop-invariant inputs only inside
+`functions.loop.pinned`, which releases them when its block exits, also when
+a job fails (long-lived sessions would otherwise accumulate dead cached
+tables in executor memory). These tests pin that for the persisting
+operators.
 
 The probe is the Catalyst CacheManager (what DataFrame.persist registers
 with), NOT sparkContext.getPersistentRDDs — localCheckpoint RDDs legitimately
@@ -107,11 +108,30 @@ class TestNoPersistLeak:
             assert _df_cache_empty(spark), name
 
 
+class TestPinned:
+    def test_pinned_releases_on_exit_and_on_error(self, spark):
+        from graphrag_toolkit_spark.functions.loop import pinned
+
+        spark.catalog.clearCache()
+        df = spark.range(10)
+        with pinned(df) as held:
+            assert held is df
+            assert not _df_cache_empty(spark)
+        assert _df_cache_empty(spark)
+        with pytest.raises(ValueError, match="body failed"):
+            with pinned() as pin:
+                pin(spark.range(5))
+                pin(spark.range(6))
+                raise ValueError("body failed")
+        assert _df_cache_empty(spark)
+
+
 class TestReleaseOnFailure:
     def test_loops_release_persisted_input_when_a_job_fails(self, spark):
         """A failing job inside the loop still releases the persisted
         loop-invariant input."""
-        from graphrag_toolkit_spark.operators import ann, bfs, centrality, dedup, entity
+        from graphrag_toolkit_spark import fixtures
+        from graphrag_toolkit_spark.operators import ann, beam, bfs, centrality, dedup, entity
 
         def poisoned(good):
             return F.when(F.col("id") == 3, F.raise_error(F.lit("poisoned row"))).otherwise(good)
@@ -124,7 +144,20 @@ class TestReleaseOnFailure:
             "id", poisoned(F.array(F.lit(1.0), F.col("id").cast("double"))).alias("embedding")
         )
         seeds = spark.createDataFrame([("0",)], "node_id string")
+        triples = edges.withColumn("rel", F.lit("r"))
+        docs = spark.range(10).select(
+            "id", poisoned(F.concat_ws(" ", F.lit("a b c d"), F.col("id"))).alias("text")
+        )
+        g = fixtures.generate("t1", seed=42).to_spark(spark)
+        g.edges = g.edges.withColumn(
+            "dst",
+            F.when(
+                F.col("etype") == "SUBJECT", F.raise_error(F.lit("poisoned row"))
+            ).otherwise(F.col("dst")),
+        )
         runs = {
+            "multi_hop": lambda: bfs.multi_hop(triples, seeds),
+            "follow_metapath": lambda: bfs.follow_metapath(triples, seeds, ["r", "r"]),
             "shortest_paths": lambda: bfs.shortest_paths(edges, seeds),
             "expand_context": lambda: entity.expand_context(
                 edges, seeds.withColumnRenamed("node_id", "entity_id")
@@ -133,6 +166,14 @@ class TestReleaseOnFailure:
             "katz_centrality": lambda: centrality.katz_centrality(edges, iters=2),
             "pagerank": lambda: centrality.pagerank(edges, iters=2),
             "hits": lambda: centrality.hits(edges, iters=2),
+            "personalized_katz": lambda: centrality.personalized_katz(edges, seeds, iters=2),
+            "ngram_jaccard_pairs": lambda: dedup.ngram_jaccard_pairs(docs, "text", "id", k=2),
+            "minhash_near_dup_pairs": lambda: dedup.minhash_near_dup_pairs(
+                docs, "text", "id", k=2
+            ),
+            "chunk_beam_search": lambda: beam.chunk_beam_search(
+                g, fixtures.pseudo_embedding("q"), seed_top_k=3, beam_width=3, max_depth=1
+            ),
             "connected_components minlabel": lambda: dedup.connected_components(
                 edges.toDF("id_a", "id_b"), algorithm="minlabel"
             ),

@@ -606,6 +606,27 @@ def test_loop_family_job_counts(spark, sf_dir, jobs_submitted):
     })
 
 
+def test_checkpointed_intermediate_job_counts(spark, sf_dir, jobs_submitted):
+    """Jobs per registry query (build plus collect) of the queries whose
+    shared intermediate is a lazy local checkpoint, at sf0.001; the bounds
+    are the counts measured with it. When these queries persisted it and
+    checkpointed their result eagerly to release it, each first read of the
+    persisted relation and the return checkpoint cost jobs of their own
+    (pmi 15, chi_square 16, unigram_kl 9, dau_mau 13, markov 11,
+    entity_context 23, beam 21 and 27, minhash_jaccard_error 22)."""
+    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
+        "pmi_collocations_documents": 10,
+        "chi_square_documents": 11,
+        "unigram_kl_documents": 6,
+        "dau_mau_events": 9,
+        "markov_accuracy_events": 9,
+        "entity_context_parts": 21,
+        "beam_search_embeddings": 19,
+        "beam_search_attention": 25,
+        "minhash_jaccard_error_documents": 21,
+    })
+
+
 def test_partitioned_layout_prunes_partitions(spark, sf_dir, tmp_path):
     """Hive-partitioned layout (the 100 TB table format): a filter on the
     partition column must become a PartitionFilters entry — pruned at

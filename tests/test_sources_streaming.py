@@ -410,6 +410,16 @@ class TestSinkCheckpoint:
         got = [r["v"] for r in spark.read.parquet(path).collect()]
         assert got == [3]
 
+    def test_append_merge_leaves_no_temp_dir(self, spark, tmp):
+        # merging into an existing store swaps the merged table into place
+        root = os.path.join(tmp, "swap")
+        path = os.path.join(root, "nodes")
+        sink.append_merge(spark, spark.createDataFrame([{"id": "a", "v": 1}]), path, "id")
+        sink.append_merge(spark, spark.createDataFrame([{"id": "b", "v": 2}]), path, "id")
+        assert os.listdir(root) == ["nodes"]
+        got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
+        assert got == {"a": 1, "b": 2}
+
     def test_checkpoint_filter(self, spark):
         work = spark.createDataFrame([{"id": "a"}, {"id": "b"}, {"id": "c"}])
         cp = spark.createDataFrame([{"id": "b"}])

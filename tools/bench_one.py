@@ -33,9 +33,10 @@ def main() -> None:
     ap.add_argument("--action", choices=["noop", "collect"], default="noop")
     ap.add_argument(
         "--release", action="store_true",
-        help="between runs, unpersist every persistent RDD (leaked "
-        "operator-internal localCheckpoints/persists) and GC both VMs — "
-        "isolates each run from the previous one's block-manager residue",
+        help="between runs, unpersist every persistent RDD (the query's "
+        "local checkpoints) with session.release_blocks, which forces no "
+        "JVM GC; isolates each run from the previous one's block-manager "
+        "residue",
     )
     args = ap.parse_args()
 
