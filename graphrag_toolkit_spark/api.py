@@ -15,6 +15,17 @@ adds no computation, only the reference's call shape: the graph handle is a
 ``SparkGraphTables`` of DataFrames instead of graph/vector store clients, and
 every model call is an injected ``llm(prompt) -> str`` / embedder callable
 (deterministic fakes by default, so the whole surface is testable offline).
+
+The handle ``LexicalGraphIndex`` returns is lazy: building it and
+constructing an engine on it run no graph work, and the batch ingest path,
+which writes each table once, never pays for caching it. The first
+``retrieve`` or ``query`` on a handle, from any engine, materializes it
+(``SparkGraphTables.materialized``: one eager local checkpoint per table);
+every later call reads those checkpoints instead of re-running the
+extraction, node dedups, edge union and embedder. That state lives on the
+handle, not the engine, so engines built per call (the MCP server builds
+one per ``tools/call``) share it, and it lasts as long as the handle, or
+until ``session.release_blocks`` drops the blocks under it.
 """
 
 from __future__ import annotations
@@ -119,9 +130,9 @@ class LexicalGraphQueryEngine:
 
     def _query_vector(self, query_text: str) -> list[float]:
         """The query's pseudo-embedding at the chunk index's dimension,
-        which is read from the graph once, on first use."""
+        which is read from the materialized graph once, on first use."""
         if self._dim is None:
-            self._dim = _embed_dim(self.graph)
+            self._dim = _embed_dim(self.graph.materialized())
         return pseudo_embedding(query_text, self._dim)
 
     @classmethod
@@ -169,16 +180,17 @@ class LexicalGraphQueryEngine:
         return engine
 
     def retrieve(self, query_text: str) -> DataFrame:
-        """Nested SearchResult rows for the query (no LLM)."""
+        """Nested SearchResult rows for the query (no LLM), read from the
+        graph handle's materialized tables (``SparkGraphTables.materialized``;
+        the first retrieve on a handle builds them)."""
+        g = self.graph.materialized()
         if self._retriever is None:
             return query_engine.chunk_based_search(
-                self.graph,
-                query_text,
-                self.config,
+                g, query_text, self.config,
                 query_vector=self._query_vector(query_text),
             )
         return query_engine.processor_tail(
-            self._retriever(self.graph, query_text, self.config), self.config
+            self._retriever(g, query_text, self.config), self.config
         )
 
     def query(self, query_text: str) -> Response:

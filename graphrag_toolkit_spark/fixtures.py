@@ -17,7 +17,8 @@ state. Tables are built in pandas then handed to Spark; at fixture scale
 from __future__ import annotations
 
 import hashlib
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field, fields
 
 import numpy as np
 import pandas as pd
@@ -100,9 +101,48 @@ class SparkGraphTables:
     embeddings_chunk: DataFrame
     embeddings_statement: DataFrame
     embeddings_topic: DataFrame
+    _served: SparkGraphTables | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def edges_of(self, etype: str) -> DataFrame:
         return self.edges.filter(self.edges.etype == etype).select("src", "dst", "value")
+
+    def materialized(self) -> SparkGraphTables:
+        """This handle with every table eagerly checkpointed: the state a
+        query engine serves from. Built on the first call, under a lock so
+        that concurrent first calls build it once; every later call returns
+        the same handle, whose own ``materialized()`` is itself. Tables
+        assigned to this handle after that are not seen.
+
+        The checkpoints live as long as the handle references them, or until
+        ``session.release_blocks`` drops them; a query on the materialized
+        handle after that fails."""
+        with self._lock:
+            if self._served is None:
+                self._served = _checkpointed(self)
+            return self._served
+
+
+def _checkpointed(g: SparkGraphTables) -> SparkGraphTables:
+    """``g`` with each table under an eager local checkpoint. The jobs carry
+    a description naming the table and stay in the caller's job group."""
+    sc = g.chunks.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    tables = {}
+    try:
+        for f in fields(g):
+            if f.init:
+                sc.setJobDescription(f"materialize graph table {f.name}")
+                tables[f.name] = getattr(g, f.name).localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
+    served = SparkGraphTables(**tables)
+    served._served = served
+    return served
 
 
 TIERS = {

@@ -22,6 +22,10 @@ Design note: tools answer from DataFrame queries over ``SparkGraphTables`` —
 the engine stays declarative Spark underneath; the protocol layer only
 serializes. Result rows are bounded (``max_results``) before ``collect()`` —
 the serving boundary is the one legitimate place a driver collect belongs.
+Each ``tools/call`` builds a new query engine, so what lasts across calls
+lives on the tenant handle: the first call that reads a tenant materializes
+its tables (``SparkGraphTables.materialized``) and every later ``query`` or
+``search_`` call reads them.
 """
 
 from __future__ import annotations
@@ -114,14 +118,14 @@ class McpServer:
 
     def _call_search(self, term: str) -> dict:
         """Reference ``tool_search``: tenants whose entity table has a value
-        starting with the (normalized) term — a pushed-down prefix filter
-        per graph, never a collect of the entity table."""
+        starting with the (normalized) term — a prefix filter over each
+        tenant's materialized entity table, never a collect of it."""
         from graphrag_toolkit_spark.functions.text import search_string
 
         hits = [
             name
             for name, g in sorted(self.tenants.items())
-            if not g.entities.filter(
+            if not g.materialized().entities.filter(
                 search_string(F.col("value")).startswith(term.lower().strip())
             ).isEmpty()
         ]

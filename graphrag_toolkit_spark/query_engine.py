@@ -23,14 +23,21 @@ anyway); the rest runs inside the caller's one final action:
 - in ``chunk_search_flat``, the reranked pool: prune, rescore and both
   truncates read it.
 
-A warm traversal query over the sf0.001 graph takes 61 jobs (build plus
-final collect); 99 without the deduped-pool checkpoint, 113 without the
-reranked-pool one (both measured when the warm query took 63 jobs, before
-`LexicalGraphQueryEngine` read the embedding dimension once per engine).
+A warm traversal query over the sf0.001 graph takes 39 jobs (build plus
+final collect) when it reads the handle's materialized tables, as the
+`LexicalGraphQueryEngine` calls do (``SparkGraphTables.materialized``), and
+61 when it re-runs the handle's build lineage. Measured with that lineage
+re-run (63 jobs then): 99 without the deduped-pool checkpoint, 113 without
+the reranked-pool one.
 
-Fully deterministic — the correctness suite runs it against golden
-brute-force oracles; no model in the loop (keyword/entity providers in
-passthru mode, reference ``processor_args.py:81-82``).
+No model is in the loop (keyword/entity providers in passthru mode,
+reference ``processor_args.py:81-82``), but scores are not bit-exact across
+sessions: two of them are double sums in shuffle order, the rerank's TF-IDF
+dot product (``tfidf_cosine_scores`` with ``quantize=None``) and the score
+sum of ``processors.dedup_results``. Seed-0 serve queries run in five fresh
+sessions gave one statement score of "sort row dup value" as
+3.1610727900058984 in three and 3.161072790005899 in two; every other row
+and query was identical (ROADMAP item 7).
 """
 
 from __future__ import annotations

@@ -89,6 +89,31 @@ class TestProtocol:
         assert json.loads(none["result"]["content"][0]["text"]) == []
 
 
+class TestTenantState:
+    def test_calls_reuse_the_materialized_tenant(self, spark, monkeypatch):
+        """Each tools/call builds a new engine; the tenant handle keeps the
+        materialized tables, so two queries and a search build them once."""
+        calls = []
+        build = fixtures._checkpointed
+        monkeypatch.setattr(
+            fixtures, "_checkpointed", lambda g: calls.append(1) or build(g)
+        )
+        server = create_mcp_server(
+            {"tenant_a": fixtures.generate("t1", seed=42).to_spark(spark)}
+        )
+        for query in ("alpha engine", "bravo charlie"):
+            resp = _call(
+                server, "tools/call",
+                {"name": "tenant_a", "arguments": {"query": query}},
+            )
+            assert json.loads(resp["result"]["content"][0]["text"])
+        assert _call(
+            server, "tools/call",
+            {"name": "search_", "arguments": {"search_term": "alpha"}},
+        )["result"]["isError"] is False
+        assert len(calls) == 1
+
+
 class TestStdioFraming:
     def test_line_delimited_loop(self, server):
         requests = "\n".join(
