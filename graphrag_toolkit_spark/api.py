@@ -25,7 +25,11 @@ every later call reads those checkpoints instead of re-running the
 extraction, node dedups, edge union and embedder. That state lives on the
 handle, not the engine, so engines built per call (the MCP server builds
 one per ``tools/call``) share it, and it lasts as long as the handle, or
-until ``session.release_blocks`` drops the blocks under it.
+until ``session.release_blocks`` drops the blocks under it. After its first
+retrieve an engine holds only the materialized handle, and so does the MCP
+server's tenant map after a tenant's first query: once the caller drops the
+lazy handle too, the extraction checkpoints under it are released (on a
+built sf0.001 handle, 4.5 MB of the 10.9 MB held after a first retrieve).
 """
 
 from __future__ import annotations
@@ -182,8 +186,9 @@ class LexicalGraphQueryEngine:
     def retrieve(self, query_text: str) -> DataFrame:
         """Nested SearchResult rows for the query (no LLM), read from the
         graph handle's materialized tables (``SparkGraphTables.materialized``;
-        the first retrieve on a handle builds them)."""
-        g = self.graph.materialized()
+        the first retrieve on a handle builds them). From then on
+        ``self.graph`` is the materialized handle."""
+        g = self.graph = self.graph.materialized()
         if self._retriever is None:
             return query_engine.chunk_based_search(
                 g, query_text, self.config,

@@ -23,9 +23,10 @@ the engine stays declarative Spark underneath; the protocol layer only
 serializes. Result rows are bounded (``max_results``) before ``collect()`` —
 the serving boundary is the one legitimate place a driver collect belongs.
 Each ``tools/call`` builds a new query engine, so what lasts across calls
-lives on the tenant handle: the first call that reads a tenant materializes
-its tables (``SparkGraphTables.materialized``) and every later ``query`` or
-``search_`` call reads them.
+lives in the server's tenant map: the first ``query`` call on a tenant
+replaces its handle there with the materialized one
+(``SparkGraphTables.materialized``), which every later ``query`` or
+``search_`` call reads. ``search_`` alone never materializes a tenant.
 """
 
 from __future__ import annotations
@@ -69,7 +70,7 @@ class McpServer:
     ) -> None:
         if not tenants:
             raise ValueError("McpServer needs at least one tenant graph")
-        self.tenants = tenants
+        self.tenants = dict(tenants)
         self.llm = llm
         self.max_results = max_results
 
@@ -118,14 +119,16 @@ class McpServer:
 
     def _call_search(self, term: str) -> dict:
         """Reference ``tool_search``: tenants whose entity table has a value
-        starting with the (normalized) term — a prefix filter over each
-        tenant's materialized entity table, never a collect of it."""
+        starting with the (normalized) term — a prefix filter per graph,
+        never a collect of the entity table. It never materializes a tenant
+        (that would run the whole graph build to read one table); once a
+        ``query`` call has, the filter reads the materialized entity table."""
         from graphrag_toolkit_spark.functions.text import search_string
 
         hits = [
             name
             for name, g in sorted(self.tenants.items())
-            if not g.materialized().entities.filter(
+            if not g.entities.filter(
                 search_string(F.col("value")).startswith(term.lower().strip())
             ).isEmpty()
         ]
@@ -138,18 +141,17 @@ class McpServer:
         if not isinstance(query, str) or not query.strip():
             return _error_result("missing required argument: query")
         method = args.get("method", "retrieve")
-        engine = LexicalGraphQueryEngine.for_traversal_based_search(
-            self.tenants[name], llm=self.llm
-        )
+        if method not in ("retrieve", "answer"):
+            return _error_result(f"unknown method {method!r}")
+        # keep only the materialized handle, so the build lineage's
+        # checkpoints can go once the caller drops its handle too
+        g = self.tenants[name] = self.tenants[name].materialized()
+        engine = LexicalGraphQueryEngine.for_traversal_based_search(g, llm=self.llm)
         if method == "retrieve":
             rows = engine.retrieve(query).limit(self.max_results).collect()
             return _text_result([r.asDict(recursive=True) for r in rows])
-        if method == "answer":
-            resp = engine.query(query)
-            return _text_result(
-                [{"text": resp.response, "metadata": resp.metadata}]
-            )
-        return _error_result(f"unknown method {method!r}")
+        resp = engine.query(query)
+        return _text_result([{"text": resp.response, "metadata": resp.metadata}])
 
     # --- JSON-RPC dispatch ----------------------------------------------
 

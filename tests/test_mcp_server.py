@@ -91,27 +91,47 @@ class TestProtocol:
 
 class TestTenantState:
     def test_calls_reuse_the_materialized_tenant(self, spark, monkeypatch):
-        """Each tools/call builds a new engine; the tenant handle keeps the
-        materialized tables, so two queries and a search build them once."""
+        """Each tools/call builds a new engine; the tenant map keeps the
+        materialized handle, so two queries build it once. search_ and a
+        rejected call never build it: before a query search_ reads the lazy
+        entity table, after one the materialized one, with the same answer."""
         calls = []
         build = fixtures._checkpointed
         monkeypatch.setattr(
             fixtures, "_checkpointed", lambda g: calls.append(1) or build(g)
         )
-        server = create_mcp_server(
-            {"tenant_a": fixtures.generate("t1", seed=42).to_spark(spark)}
+        g = fixtures.generate("t1", seed=42).to_spark(spark)
+        term = next(
+            r["value"] for r in g.entities.collect()
+            if r["classification"] != "__Local_Entity__"
         )
+        tenants = {"tenant_a": g}
+        server = create_mcp_server(tenants)
+
+        def search():
+            resp = _call(
+                server, "tools/call",
+                {"name": "search_", "arguments": {"search_term": term}},
+            )
+            assert resp["result"]["isError"] is False
+            return json.loads(resp["result"]["content"][0]["text"])
+
+        assert search() == ["tenant_a"] and calls == []
+        bad = _call(
+            server, "tools/call",
+            {"name": "tenant_a", "arguments": {"query": "alpha", "method": "bogus"}},
+        )
+        assert bad["result"]["isError"] is True and calls == []
         for query in ("alpha engine", "bravo charlie"):
             resp = _call(
                 server, "tools/call",
                 {"name": "tenant_a", "arguments": {"query": query}},
             )
             assert json.loads(resp["result"]["content"][0]["text"])
-        assert _call(
-            server, "tools/call",
-            {"name": "search_", "arguments": {"search_term": "alpha"}},
-        )["result"]["isError"] is False
         assert len(calls) == 1
+        assert server.tenants["tenant_a"] is g.materialized()
+        assert tenants["tenant_a"] is g  # the caller's map is its own
+        assert search() == ["tenant_a"] and len(calls) == 1
 
 
 class TestStdioFraming:

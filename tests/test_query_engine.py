@@ -257,11 +257,11 @@ class TestMaterializedHandle:
         g = fixtures.generate("t1").to_spark(spark)
         start = threading.Barrier(2)
         rows: dict[int, list] = {}
+        engines = [LexicalGraphQueryEngine.for_traversal_based_search(g) for _ in range(2)]
 
         def first_retrieve(i: int) -> None:
-            engine = LexicalGraphQueryEngine.for_traversal_based_search(g)
             start.wait(timeout=60)
-            rows[i] = engine.retrieve("alpha beta").collect()
+            rows[i] = engines[i].retrieve("alpha beta").collect()
 
         threads = [threading.Thread(target=first_retrieve, args=(i,)) for i in range(2)]
         for t in threads:
@@ -271,6 +271,8 @@ class TestMaterializedHandle:
         assert not any(t.is_alive() for t in threads)
         assert len(calls) == 1
         assert rows[0] and _fingerprint(rows[0]) == _fingerprint(rows[1])
+        # the engines now hold only the materialized handle
+        assert all(e.graph is g.materialized() for e in engines)
 
     def test_materialized_is_built_once_under_contention(self, monkeypatch):
         """More threads than cores race for the first ``materialized()``
