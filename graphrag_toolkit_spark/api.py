@@ -19,17 +19,16 @@ every model call is an injected ``llm(prompt) -> str`` / embedder callable
 The handle ``LexicalGraphIndex`` returns is lazy: building it and
 constructing an engine on it run no graph work, and the batch ingest path,
 which writes each table once, never pays for caching it. The first
-``retrieve`` or ``query`` on a handle, from any engine, materializes it
-(``SparkGraphTables.materialized``: one eager local checkpoint per table);
-every later call reads those checkpoints instead of re-running the
-extraction, node dedups, edge union and embedder. That state lives on the
-handle, not the engine, so engines built per call (the MCP server builds
-one per ``tools/call``) share it, and it lasts as long as the handle, or
-until ``session.release_blocks`` drops the blocks under it. After its first
-retrieve an engine holds only the materialized handle, and so does the MCP
-server's tenant map after a tenant's first query: once the caller drops the
-lazy handle too, the extraction checkpoints under it are released (on a
-built sf0.001 handle, 4.5 MB of the 10.9 MB held after a first retrieve).
+``retrieve`` or ``query`` on a handle, from any engine, materializes it in
+place (``SparkGraphTables.materialize``: each table is replaced by its eager
+local checkpoint); every later call reads those checkpoints instead of
+re-running the extraction, node dedups, edge union and embedder. All serving
+state lives on the handle, never on an engine: its tables, and ``embed_dim``,
+the dimension query vectors are built at. Engines built per call (the MCP
+server builds one per ``tools/call``), the caller and the MCP tenant map
+therefore share one handle. Its checkpoints last as long as it does, or until
+``session.release_blocks`` drops them; the build lineage's own checkpoints
+can go as soon as the first retrieve, even while the caller keeps the handle.
 """
 
 from __future__ import annotations
@@ -130,14 +129,6 @@ class LexicalGraphQueryEngine:
         self.config = config or RetrievalConfig()
         self.llm = llm or _concat_answer_llm
         self._retriever = retriever
-        self._dim: int | None = None
-
-    def _query_vector(self, query_text: str) -> list[float]:
-        """The query's pseudo-embedding at the chunk index's dimension,
-        which is read from the materialized graph once, on first use."""
-        if self._dim is None:
-            self._dim = _embed_dim(self.graph.materialized())
-        return pseudo_embedding(query_text, self._dim)
 
     @classmethod
     def for_traversal_based_search(
@@ -174,26 +165,23 @@ class LexicalGraphQueryEngine:
             g: SparkGraphTables, query_text: str, cfg: RetrievalConfig
         ) -> DataFrame:
             seeds = chunk_beam_search(
-                g, engine._query_vector(query_text), seed_top_k=cfg.vss_top_k,
-                beam_width=beam_width, max_depth=max_depth,
+                g, pseudo_embedding(query_text, g.embed_dim),
+                seed_top_k=cfg.vss_top_k, beam_width=beam_width,
+                max_depth=max_depth,
             ).select("chunk_id").distinct()
             stmt_ids = chunk_to_statements(g, seeds, limit=cfg.intermediate_limit)
             return scored_statement_context(g, stmt_ids)
 
-        engine = cls(graph, config, llm, retriever=retrieve)
-        return engine
+        return cls(graph, config, llm, retriever=retrieve)
 
     def retrieve(self, query_text: str) -> DataFrame:
         """Nested SearchResult rows for the query (no LLM), read from the
-        graph handle's materialized tables (``SparkGraphTables.materialized``;
-        the first retrieve on a handle builds them). From then on
-        ``self.graph`` is the materialized handle."""
-        g = self.graph = self.graph.materialized()
+        graph handle's materialized tables (``SparkGraphTables.materialize``;
+        the first retrieve on a handle runs it)."""
+        g = self.graph
+        g.materialize()
         if self._retriever is None:
-            return query_engine.chunk_based_search(
-                g, query_text, self.config,
-                query_vector=self._query_vector(query_text),
-            )
+            return query_engine.chunk_based_search(g, query_text, self.config)
         return query_engine.processor_tail(
             self._retriever(g, query_text, self.config), self.config
         )
@@ -227,13 +215,6 @@ class LexicalGraphQueryEngine:
                 "num_results": len(rows),
             },
         )
-
-
-def _embed_dim(g: SparkGraphTables) -> int:
-    """Embedding dimensionality of the graph handle's chunk index (the
-    query vector must match it)."""
-    row = g.embeddings_chunk.select("embedding").head()
-    return len(row["embedding"]) if row else 64
 
 
 # --- byokg --------------------------------------------------------------------

@@ -91,6 +91,12 @@ class GraphTables:
 
 @dataclass
 class SparkGraphTables:
+    """A lexical graph as ten DataFrames, plus the dimension of its three
+    embedding tables. ``embed_dim`` is set by whoever makes those tables:
+    ``indexing.to_graph_tables`` passes its own ``embed_dim``; fixture and
+    hand-built handles take ``EMBED_DIM``. Query vectors are built at that
+    dimension, so no job reads it back from the data."""
+
     sources: DataFrame
     chunks: DataFrame
     topics: DataFrame
@@ -101,9 +107,8 @@ class SparkGraphTables:
     embeddings_chunk: DataFrame
     embeddings_statement: DataFrame
     embeddings_topic: DataFrame
-    _served: SparkGraphTables | None = field(
-        default=None, init=False, repr=False, compare=False
-    )
+    embed_dim: int = EMBED_DIM
+    _materialized: bool = field(default=False, init=False, repr=False, compare=False)
     _lock: threading.Lock = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
@@ -111,38 +116,39 @@ class SparkGraphTables:
     def edges_of(self, etype: str) -> DataFrame:
         return self.edges.filter(self.edges.etype == etype).select("src", "dst", "value")
 
-    def materialized(self) -> SparkGraphTables:
-        """This handle with every table eagerly checkpointed: the state a
-        query engine serves from. Built on the first call, under a lock so
-        that concurrent first calls build it once; every later call returns
-        the same handle, whose own ``materialized()`` is itself. Tables
-        assigned to this handle after that are not seen.
+    def materialize(self) -> None:
+        """Replace each table of this handle with its eager local checkpoint:
+        the state a query engine serves from. Runs once, under a lock, so
+        concurrent first calls checkpoint once; later calls run no job.
+        Tables assigned to the handle after that are served as they are.
 
-        The checkpoints live as long as the handle references them, or until
-        ``session.release_blocks`` drops them; a query on the materialized
-        handle after that fails."""
+        The lineage the tables were built from is no longer referenced by
+        the handle, so its own checkpoints can be released while the caller
+        keeps the handle. The new checkpoints live as long as the handle, or
+        until ``session.release_blocks`` drops them; a query on the handle
+        after that fails."""
         with self._lock:
-            if self._served is None:
-                self._served = _checkpointed(self)
-            return self._served
+            if not self._materialized:
+                for name, table in _checkpointed(self).items():
+                    setattr(self, name, table)
+                self._materialized = True
 
 
-def _checkpointed(g: SparkGraphTables) -> SparkGraphTables:
-    """``g`` with each table under an eager local checkpoint. The jobs carry
-    a description naming the table and stay in the caller's job group."""
+def _checkpointed(g: SparkGraphTables) -> dict[str, DataFrame]:
+    """Each table of ``g`` under an eager local checkpoint, by field name.
+    The jobs carry a description naming the table and stay in the caller's
+    job group."""
     sc = g.chunks.sparkSession.sparkContext
     caller = sc.getLocalProperty("spark.job.description")
     tables = {}
     try:
         for f in fields(g):
-            if f.init:
+            if f.type == "DataFrame":
                 sc.setJobDescription(f"materialize graph table {f.name}")
                 tables[f.name] = getattr(g, f.name).localCheckpoint(eager=True)
     finally:
         sc.setLocalProperty("spark.job.description", caller)
-    served = SparkGraphTables(**tables)
-    served._served = served
-    return served
+    return tables
 
 
 TIERS = {

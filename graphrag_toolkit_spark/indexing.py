@@ -428,6 +428,7 @@ def to_graph_tables(build: dict[str, DataFrame], embed_dim: int = 64):
         embeddings_topic=embed_values(
             build["topics"], "topic_id", "value", embed_dim
         ).withColumnRenamed("topic_id", "id"),
+        embed_dim=embed_dim,
     )
 
 

@@ -22,11 +22,11 @@ Design note: tools answer from DataFrame queries over ``SparkGraphTables`` —
 the engine stays declarative Spark underneath; the protocol layer only
 serializes. Result rows are bounded (``max_results``) before ``collect()`` —
 the serving boundary is the one legitimate place a driver collect belongs.
-Each ``tools/call`` builds a new query engine, so what lasts across calls
-lives in the server's tenant map: the first ``query`` call on a tenant
-replaces its handle there with the materialized one
-(``SparkGraphTables.materialized``), which every later ``query`` or
-``search_`` call reads. ``search_`` alone never materializes a tenant.
+Each ``tools/call`` builds a new query engine; what lasts across calls lives
+on the tenant's handle: the first ``query`` call on a tenant materializes it
+in place (``SparkGraphTables.materialize``), and every later ``query`` or
+``search_`` call reads its checkpoints. ``search_`` alone never materializes
+a tenant.
 """
 
 from __future__ import annotations
@@ -122,7 +122,7 @@ class McpServer:
         starting with the (normalized) term — a prefix filter per graph,
         never a collect of the entity table. It never materializes a tenant
         (that would run the whole graph build to read one table); once a
-        ``query`` call has, the filter reads the materialized entity table."""
+        ``query`` call has, the filter reads the checkpointed entity table."""
         from graphrag_toolkit_spark.functions.text import search_string
 
         hits = [
@@ -143,10 +143,9 @@ class McpServer:
         method = args.get("method", "retrieve")
         if method not in ("retrieve", "answer"):
             return _error_result(f"unknown method {method!r}")
-        # keep only the materialized handle, so the build lineage's
-        # checkpoints can go once the caller drops its handle too
-        g = self.tenants[name] = self.tenants[name].materialized()
-        engine = LexicalGraphQueryEngine.for_traversal_based_search(g, llm=self.llm)
+        engine = LexicalGraphQueryEngine.for_traversal_based_search(
+            self.tenants[name], llm=self.llm
+        )
         if method == "retrieve":
             rows = engine.retrieve(query).limit(self.max_results).collect()
             return _text_result([r.asDict(recursive=True) for r in rows])

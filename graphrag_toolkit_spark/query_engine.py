@@ -25,7 +25,7 @@ anyway); the rest runs inside the caller's one final action:
 
 A warm traversal query over the sf0.001 graph takes 39 jobs (build plus
 final collect) when it reads the handle's materialized tables, as the
-`LexicalGraphQueryEngine` calls do (``SparkGraphTables.materialized``), and
+`LexicalGraphQueryEngine` calls do (``SparkGraphTables.materialize``), and
 61 when it re-runs the handle's build lineage. Measured with that lineage
 re-run (63 jobs then): 99 without the deduped-pool checkpoint, 113 without
 the reranked-pool one.
@@ -125,9 +125,10 @@ def chunk_search_flat(
     ``entity_provider`` fills the ``ec_entity_provider`` axis: 'graph'
     resolves keywords by J9 string lookup; 'vss' adds degree-ranked entities
     reachable from the query vector's top chunks (EntityVSSProvider,
-    ``entity.vss_entities``) regardless of keyword hits."""
+    ``entity.vss_entities``) regardless of keyword hits. ``query_vector``
+    defaults to the query's pseudo-embedding at the handle's ``embed_dim``."""
     cfg = config or RetrievalConfig()
-    qvec = query_vector or pseudo_embedding(query_text)
+    qvec = query_vector or pseudo_embedding(query_text, g.embed_dim)
 
     # V1+V3 — seeds with per-source diversity
     emb = g.embeddings_chunk.join(

@@ -101,9 +101,9 @@ def release_blocks(spark: SparkSession) -> None:
     checkpoints are the harness's to release. Among the blocks this drops
     are the lazy extraction checkpoints under a graph handle
     (``indexing.extract_and_build``) and, once a query engine has served
-    from a handle, that handle's materialized tables (one eager checkpoint
-    per table, ``SparkGraphTables.materialized``): a retrieve on such a
-    handle after the release fails. A harness that constructs
+    from a handle, the checkpoints that handle's tables were replaced with
+    (``SparkGraphTables.materialize``): a retrieve on such a handle after
+    the release fails. A harness that constructs
     many queries sequentially in one session (bench.py: 87, tools/check.py:
     279) must release each query's blocks before the next, or they pile up
     in the block manager: storage claims up to spark.memory.storageFraction

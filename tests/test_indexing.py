@@ -110,6 +110,7 @@ class TestBuildThenQuery:
     def test_full_lifecycle_extract_build_search(self, docs):
         # §3.1 build → §3.2 query over the BUILT graph, end to end
         from graphrag_toolkit_spark import query_engine
+        from graphrag_toolkit_spark.api import LexicalGraphQueryEngine
 
         g = indexing.to_graph_tables(indexing.extract_and_build(docs), embed_dim=16)
         out = query_engine.chunk_based_search(g, "alpha engine merges tables")
@@ -119,6 +120,15 @@ class TestBuildThenQuery:
         assert {f.name for f in out.schema} == {"source_id", "score", "topics"}
         assert len(top["topics"]) > 0
         assert len(top["topics"][0]["statements"]) > 0
+        # the engine and the functional path both embed the query at the
+        # handle's 16 dims. A 64-dim vector scores NULL against them, so its
+        # one VSS seed is the first chunk (topic alpha), not the best (beta)
+        cfg = query_engine.RetrievalConfig(vss_top_k=1)
+        q = "beta stream joins windows"
+        served = LexicalGraphQueryEngine.for_traversal_based_search(g, cfg)
+        assert served.retrieve(q).collect() == (
+            query_engine.chunk_based_search(g, q, cfg).collect()
+        )
 
 
 class TestEmbedValues:

@@ -91,10 +91,11 @@ class TestProtocol:
 
 class TestTenantState:
     def test_calls_reuse_the_materialized_tenant(self, spark, monkeypatch):
-        """Each tools/call builds a new engine; the tenant map keeps the
-        materialized handle, so two queries build it once. search_ and a
-        rejected call never build it: before a query search_ reads the lazy
-        entity table, after one the materialized one, with the same answer."""
+        """Each tools/call builds a new engine; the tenant's handle keeps
+        its materialized tables, so two queries build them once. search_ and
+        a rejected call never build them: before a query search_ reads the
+        lazy entity table, after one the checkpointed one, with the same
+        answer."""
         calls = []
         build = fixtures._checkpointed
         monkeypatch.setattr(
@@ -129,9 +130,35 @@ class TestTenantState:
             )
             assert json.loads(resp["result"]["content"][0]["text"])
         assert len(calls) == 1
-        assert server.tenants["tenant_a"] is g.materialized()
-        assert tenants["tenant_a"] is g  # the caller's map is its own
+        assert server.tenants["tenant_a"] is g  # one handle, materialized in place
         assert search() == ["tenant_a"] and len(calls) == 1
+
+    def test_warm_query_jobs_on_built_tenant(self, spark, sf_dir, jobs_submitted):
+        """A warm ``query`` call on a built sf0.001 tenant runs the engine's
+        warm retrieve and nothing per call on top of it: each call builds a
+        new engine, and nothing it needs is read back from the data."""
+        from graphrag_toolkit_spark.api import LexicalGraphIndex
+        from graphrag_toolkit_spark.session import load
+
+        docs = load(spark, sf_dir, "documents")
+        server = create_mcp_server(
+            {"tenant_a": LexicalGraphIndex().extract_and_build(docs)}
+        )
+        text = " ".join(docs.orderBy("doc_id").first()["text"].split()[:4])
+
+        def query():
+            resp = _call(
+                server, "tools/call",
+                {"name": "tenant_a", "arguments": {"query": text}},
+            )
+            assert json.loads(resp["result"]["content"][0]["text"])
+
+        query()
+        for _ in range(5):
+            warm = jobs_submitted(query)
+            if warm <= 39:
+                break
+        assert warm <= 39
 
 
 class TestStdioFraming:

@@ -4,6 +4,7 @@ deterministic fakes, fixture graph."""
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 
@@ -224,25 +225,36 @@ class TestRetrievalChain:
                 lambda: getattr(LexicalGraphQueryEngine, factory)(built[0])
             ) == 0
 
-    def test_engine_reads_embedding_dim_once(self, g, monkeypatch):
+    def test_query_vector_takes_handle_embed_dim(self, g, monkeypatch):
+        """Both engines and the functional path embed the query at the
+        handle's ``embed_dim``, not at a dimension read back from its chunk
+        index (64 here) or a fixed default."""
         from graphrag_toolkit_spark import api
 
-        reads = []
-        read = api._embed_dim
-        monkeypatch.setattr(api, "_embed_dim", lambda graph: reads.append(1) or read(graph))
-        for engine in (
-            api.LexicalGraphQueryEngine.for_traversal_based_search(g),
-            api.LexicalGraphQueryEngine.for_semantic_guided_search(g),
+        dims = []
+        for module in (api, query_engine):
+            embed = module.pseudo_embedding
+            monkeypatch.setattr(
+                module, "pseudo_embedding",
+                lambda text, *dim, _embed=embed: dims.append(dim) or _embed(text, *dim),
+            )
+        h = dataclasses.replace(g, embed_dim=8)
+        for search in (
+            api.LexicalGraphQueryEngine.for_traversal_based_search(h).retrieve,
+            api.LexicalGraphQueryEngine.for_semantic_guided_search(h).retrieve,
+            lambda text: query_engine.chunk_based_search(h, text),
         ):
-            reads.clear()
-            engine.retrieve("alpha beta")
-            engine.retrieve("gamma delta")
-            assert len(reads) == 1
+            dims.clear()
+            search("alpha beta")
+            assert dims == [(8,)]
 
 
 class TestMaterializedHandle:
-    """A graph handle materializes its tables once, on the first retrieve;
-    every later call, from any engine or thread, reads those checkpoints."""
+    """A graph handle materializes in place, once, on the first retrieve:
+    its tables become eager checkpoints that every later call, from any
+    engine or thread, reads."""
+
+    TABLES = [f.name for f in dataclasses.fields(fixtures.GraphTables)]
 
     def test_concurrent_first_retrieves_materialize_once(self, spark, monkeypatch):
         import threading
@@ -271,11 +283,9 @@ class TestMaterializedHandle:
         assert not any(t.is_alive() for t in threads)
         assert len(calls) == 1
         assert rows[0] and _fingerprint(rows[0]) == _fingerprint(rows[1])
-        # the engines now hold only the materialized handle
-        assert all(e.graph is g.materialized() for e in engines)
 
     def test_materialized_is_built_once_under_contention(self, monkeypatch):
-        """More threads than cores race for the first ``materialized()``
+        """More threads than cores race for the first ``materialize()``
         with a short switch interval; a lost check-then-act would build
         twice."""
         import sys
@@ -286,19 +296,15 @@ class TestMaterializedHandle:
 
         def slow_build(g):
             time.sleep(0.05)
-            built.append(object())
+            built.append({t: object() for t in self.TABLES})
             return built[-1]
 
         monkeypatch.setattr(fixtures, "_checkpointed", slow_build)
         g = fixtures.SparkGraphTables(*[None] * 10)
-        got = []
         interval = sys.getswitchinterval()
         sys.setswitchinterval(1e-6)
         try:
-            threads = [
-                threading.Thread(target=lambda: got.append(g.materialized()))
-                for _ in range(16)
-            ]
+            threads = [threading.Thread(target=g.materialize) for _ in range(16)]
             for t in threads:
                 t.start()
             for t in threads:
@@ -307,7 +313,7 @@ class TestMaterializedHandle:
             sys.setswitchinterval(interval)
         assert not any(t.is_alive() for t in threads)
         assert len(built) == 1
-        assert len(got) == 16 and all(h is built[0] for h in got)
+        assert all(getattr(g, t) is built[0][t] for t in self.TABLES)
 
     def test_materialization_jobs_name_the_table(self, spark, jobs_submitted):
         """Each materialization job carries a description naming its table;
@@ -316,7 +322,7 @@ class TestMaterializedHandle:
         g = fixtures.generate("t1").to_spark(spark)
         sc.setJobGroup("serving-call", "caller description")
         try:
-            served = g.materialized()
+            g.materialize()
             assert sc.getLocalProperty("spark.job.description") == "caller description"
             assert sc.getLocalProperty("spark.jobGroup.id") == "serving-call"
             store = sc._jsc.sc().statusStore()
@@ -327,7 +333,27 @@ class TestMaterializedHandle:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        tables = [f for f in vars(g) if not f.startswith("_")]
-        assert described == {f"materialize graph table {t}" for t in tables}
-        assert served.materialized() is served and g.materialized() is served
-        assert jobs_submitted(g.materialized) == 0
+        assert described == {f"materialize graph table {t}" for t in self.TABLES}
+        assert jobs_submitted(g.materialize) == 0
+
+    def test_first_retrieve_leaves_the_callers_handle_on_checkpoints(
+        self, spark, sf_dir
+    ):
+        """After the first retrieve every table of the handle the caller
+        holds plans as a scan of an existing, checkpointed RDD: nothing of
+        the extraction lineage is left for it to pin."""
+        from graphrag_toolkit_spark.api import LexicalGraphIndex, LexicalGraphQueryEngine
+        from graphrag_toolkit_spark.session import load
+
+        g = LexicalGraphIndex().extract_and_build(load(spark, sf_dir, "documents"))
+
+        def plans():
+            return {
+                t: getattr(g, t)._jdf.queryExecution().analyzed() for t in self.TABLES
+            }
+
+        assert all(p.nodeName() != "LogicalRDD" for p in plans().values())
+        LexicalGraphQueryEngine.for_traversal_based_search(g).retrieve("alpha beta")
+        for t, plan in plans().items():
+            assert plan.nodeName() == "LogicalRDD" and plan.children().isEmpty(), t
+            assert plan.rdd().isCheckpointed(), t

@@ -22,9 +22,7 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+from graphrag_toolkit_spark.session import TESTDATA_TABLES as TABLES  # noqa: E402
 
 
 def _canon(v) -> str:
