@@ -6,9 +6,9 @@
 Headline set: one representative per operator class from SURVEY.md §2
 (scan/agg, join chain, window, rollup, BFS, frontier expansion, fuzzy link,
 cosine top-k, TF-IDF, MinHash-LSH, SimHash, ANN, event windows,
-sessionization) plus the flagship diversity search. Wall-clock per query is
-measured around a full materialization (collect), after a warm-up action that
-pays one-time JVM/parquet-footer costs.
+sessionization) plus the flagship diversity search. Queries run through
+``measure.sweep`` after a warm-up: wall-clock is build plus collect, and
+BENCH_FULL.json also gets each query's Spark jobs and stages.
 """
 
 from __future__ import annotations
@@ -16,7 +16,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -153,48 +152,25 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 
-    from graphrag_toolkit_spark.session import build_session
-    from graphrag_toolkit_spark.workload import all_queries
+    from graphrag_toolkit_spark.measure import sweep
+    from graphrag_toolkit_spark.session import build_session, warm_up
 
     spark = build_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
-    # warm-up: pay one-time JVM/host costs once, OUTSIDE the measurements.
-    # Round 9 extension (measurement fix, declared in OPTIMIZATION_r09.md):
-    # the per-table count() warm-up left class-loading + JIT of the
-    # join/window/shuffle machinery, Python-worker spawn (cold numpy import
-    # per worker), and parquet DATA pages to the first timed queries —
-    # measured at ~30-200 s of pollution depending on host state. warm_up()
-    # runs representative throwaway jobs over the fixtures + synthetic
-    # ranges so those one-time costs land outside every timed span. No
-    # query result is computed or reused — the timed queries below still
-    # compute entirely from the parquet inputs.
-    from graphrag_toolkit_spark.session import warm_up
-
-    _w0 = time.time()
+    # one-time JVM, JIT, Python-worker and parquet-page costs, untimed
     warm_up(spark, sf_dir)
-    print(f"# warm_up: {time.time() - _w0:.2f}s (untimed)", file=sys.stderr)
 
-    from graphrag_toolkit_spark.session import release_blocks
-
-    timings: dict[str, float] = {}
-    total = 0.0
-    for name in HEADLINE:
-        fn = queries[name]
-        t0 = time.time()
-        n = len(fn(spark, sf_dir).collect())
-        dt = round(time.time() - t0, 3)
-        timings[name] = dt
-        total += dt
-        print(f"# {name}: {dt:.2f}s ({n} rows)", file=sys.stderr)
-        # between queries (OUTSIDE the timed span): release the finished
-        # query's operator-internal checkpoint/persist blocks, so query
-        # N+1 is not squeezed by query N's storage residue. Methodology,
-        # timed span, queries, and JSON contract are unchanged — this
-        # removes cross-query interference, it never reuses results
-        # (every query still computes from the parquet inputs).
-        release_blocks(spark)
+    # a failed query counts in the total up to its failure; the run exits 1
+    recs = []
+    for rec in sweep(spark, sf_dir, lambda df: len(df.collect()), HEADLINE):
+        recs.append(rec)
+        status = f"{rec.result} rows" if rec.error is None else f"FAILED {rec.error!r}"
+        print(f"# {rec.name}: {rec.seconds:.2f}s ({status}, {rec.jobs} jobs)",
+              file=sys.stderr)
+    timings = {r.name: round(r.seconds, 3) for r in recs}
+    total = sum(timings.values())
+    failed = [r.name for r in recs if r.error is not None]
 
     spark.stop()
     # 1-min loadavg at measurement end: the ±30% host-noise band seen
@@ -217,7 +193,8 @@ def main() -> None:
     # (BENCH_r07 "parsed": null). Ship the COMPLETE record to a committed
     # repo file, and keep the stdout line under a hard budget by inlining
     # only the slowest queries (the perf-critical entries) that fit.
-    full = dict(base, queries=timings, n_queries=len(timings))
+    full = dict(base, queries=timings, jobs={r.name: r.jobs for r in recs},
+                stages={r.name: r.stages for r in recs}, n_queries=len(timings))
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_FULL.json")
     with open(full_path, "w") as f:
@@ -234,6 +211,8 @@ def main() -> None:
     while k > 0 and len(line_of(k)) > budget:
         k -= 1
     print(line_of(k))
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

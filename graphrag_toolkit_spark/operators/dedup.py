@@ -272,20 +272,17 @@ def _jaccard(inter: DataFrame, sizes: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_on_pairs(
-    sh: DataFrame, pairs: DataFrame, broadcast_pairs: bool = True
-) -> DataFrame:
+def jaccard_on_pairs(sh: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact Jaccard for given candidate pairs from the shingle table:
     (id_a, id_b, jaccard). Intersection via shingle equi-join; union by
     inclusion-exclusion on per-id shingle counts (no giant set union).
-    ``broadcast_pairs`` only when the candidate set is seed-sized; corpus-wide
-    candidate sets must shuffle-join (let AQE decide).
+    Candidate sets grow with the corpus, so no join here is hinted: AQE
+    picks each strategy from the sizes it sees.
 
     The shingle table is first semi-joined down to ids that appear in a
     candidate pair — near-dup candidates are a vanishing fraction of the
     corpus, so the (id, shingle) equi-join shuffles only the candidates'
     shingles, not the whole table."""
-    maybe_bc = F.broadcast if broadcast_pairs else (lambda d: d)
     cand_ids = (
         pairs.select(F.col("id_a").alias("id"))
         .unionByName(pairs.select(F.col("id_b").alias("id")))
@@ -297,12 +294,10 @@ def jaccard_on_pairs(
     # the intersection join's two sides materialize concurrently. sh_c is
     # candidate-sized (near-dup rate × shingles/doc), so the checkpoint
     # stores a vanishing fraction of the corpus at any scale.
-    sh_c = sh.join(maybe_bc(cand_ids), "id", "left_semi").localCheckpoint(
-        eager=True
-    )
+    sh_c = sh.join(cand_ids, "id", "left_semi").localCheckpoint(eager=True)
     inter = (
         sh_c.withColumnRenamed("id", "id_a")
-        .join(maybe_bc(pairs), "id_a")
+        .join(pairs, "id_a")
         .join(
             sh_c.withColumnsRenamed({"id": "id_b"}),
             ["id_b", "shingle"],
@@ -414,8 +409,8 @@ def _verified_pairs(
     Jaccard verification, so it is pinned once instead of re-running the
     explode per consumer. Candidate pairs are a vanishing fraction of the
     corpus but their plan embeds the whole signature pipeline, so they are
-    materialized once and the two broadcast consumers in the verification
-    (pairs, candidate ids) don't each re-run the LSH stages. The verified
+    materialized once and the two consumers in the verification (pairs,
+    candidate ids) don't each re-run the LSH stages. The verified
     pair list is tiny and is checkpointed eagerly, so it is computed from
     the pinned shingles before they go."""
     with pinned(sh):

@@ -76,13 +76,17 @@ class Violation:
     subtree_head: str
 
 
-def plan_string(df: DataFrame) -> str:
+def plan_of(df: DataFrame, mode: str = "formatted") -> str:
+    """What ``df.explain(mode)`` prints; builds the plan, runs no job."""
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode="extended")
-    text = buf.getvalue()
+        df.explain(mode=mode)
+    return buf.getvalue()
+
+
+def plan_string(df: DataFrame) -> str:
     # the final section is the physical plan (pre-AQE, full operator args)
-    return text.split("== Physical Plan ==")[-1]
+    return plan_of(df, "extended").split("== Physical Plan ==")[-1]
 
 
 def _depth(line: str) -> int:

@@ -103,10 +103,11 @@ def release_blocks(spark: SparkSession) -> None:
     (``indexing.extract_and_build``) and, once a query engine has served
     from a handle, the checkpoints that handle's tables were replaced with
     (``SparkGraphTables.materialize``): a retrieve on such a handle after
-    the release fails. A harness that constructs
-    many queries sequentially in one session (bench.py: 87, tools/check.py:
-    279) must release each query's blocks before the next, or they pile up
-    in the block manager: storage claims up to spark.memory.storageFraction
+    the release fails. ``measure.sweep``, which every registry harness
+    (bench.py: 87 queries, tools/check.py: 279, the audits, the oracle
+    test) runs its queries through, calls this after each query: built one
+    after another in one session, the queries' blocks would otherwise pile
+    up in the block manager: storage claims up to spark.memory.storageFraction
     of the unified pool that execution cannot evict (optimization guide §5
     "cached data competes with execution memory; unpersist when done").
     Measured on ann_ivf_pq_topk, 5 back-to-back constructions in one

@@ -1135,8 +1135,7 @@ def minhash_jaccard_error_documents(spark: SparkSession, sf_dir: str) -> DataFra
             ),
         )
     )
-    # corpus-wide candidates: shuffle-joined unless AQE sees them small
-    exact = dedup.jaccard_on_pairs(sh, cand, broadcast_pairs=False)
+    exact = dedup.jaccard_on_pairs(sh, cand)
     return (
         est.join(exact, ["id_a", "id_b"], "left")
         .select(

@@ -1,9 +1,8 @@
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
+from graphrag_toolkit_spark.measure import measured
 from graphrag_toolkit_spark.session import build_session
 
 
@@ -21,18 +20,13 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def jobs_submitted(spark):
-    """``jobs_submitted(fn)``: the Spark jobs ``fn()`` submits, counted
-    under a fresh job group."""
-    sc = spark.sparkContext
+    """``jobs_submitted(fn)``: the Spark jobs ``fn()`` submits, counted by
+    ``measure.measured``; an exception from ``fn`` is raised."""
 
     def count(fn) -> int:
-        group = f"jobs-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        rec = measured(spark, "jobs_submitted", fn, lambda _: None)
+        if rec.error is not None:
+            raise rec.error
+        return rec.jobs
 
     return count

@@ -209,3 +209,74 @@ class TestWarmUp:
         assert any(
             "fixture table region" in r.getMessage() for r in caplog.records
         ), [r.getMessage() for r in caplog.records]
+
+
+class TestMeasure:
+    """`measure.measured` counts what a run submitted and leaves the
+    caller's job group as it was; `measure.sweep` releases each query's
+    blocks and goes on past a failed query."""
+
+    def test_counts_jobs_stages_and_tasks(self, spark):
+        from operator import add
+
+        from graphrag_toolkit_spark.measure import measured
+
+        sc = spark.sparkContext
+        rec = measured(
+            spark, "two-collects",
+            lambda: sc.parallelize(range(8), 4).map(lambda x: (x % 2, x)).reduceByKey(add, 2),
+            lambda rdd: (rdd.collect(), rdd.collect()),
+        )
+        assert rec.error is None and sorted(rec.result[0]) == [(0, 12), (1, 16)]
+        # the second collect skips the 4-task map stage the first one ran
+        assert (rec.jobs, rec.stages, rec.tasks) == (2, 3, 8)
+        assert rec.construct_s >= 0 and rec.action_s > 0
+
+    def test_restores_the_callers_job_group(self, spark):
+        from graphrag_toolkit_spark.measure import measured
+
+        sc = spark.sparkContext
+
+        def failing_build():
+            raise ValueError("build failed")
+
+        sc.setJobGroup("caller-group", "caller description")
+        try:
+            ok = measured(spark, "ok", lambda: spark.range(3), lambda df: df.count())
+            bad = measured(spark, "bad", failing_build, lambda df: df.count())
+            assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+            assert sc.getLocalProperty("spark.job.description") == "caller description"
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert ok.error is None and ok.result == 3 and ok.jobs >= 1
+        assert isinstance(bad.error, ValueError) and bad.result is None
+        assert (bad.jobs, bad.action_s) == (0, 0)
+
+    def test_sweep_releases_eager_checkpoints(self, spark, sf_dir):
+        from graphrag_toolkit_spark.measure import sweep
+        from graphrag_toolkit_spark.session import release_blocks
+
+        def live_rdds() -> int:
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        release_blocks(spark)
+        before = live_rdds()
+        recs = list(sweep(
+            spark, sf_dir, lambda df: (df.count(), live_rdds()),
+            ["minhash_neardup_documents", "typo_pairs_customers"],
+        ))
+        assert [r.error for r in recs] == [None, None]
+        # each query held checkpoint blocks while its frame was read
+        assert all(r.result[1] > before for r in recs), [r.result for r in recs]
+        assert live_rdds() == before
+
+    def test_sweep_goes_on_after_a_failed_query(self, spark, sf_dir):
+        from graphrag_toolkit_spark.measure import sweep
+
+        first, second = sweep(
+            spark, sf_dir, lambda df: df.count(),
+            ["no_such_query", "q1_pricing_summary"],
+        )
+        assert isinstance(first.error, KeyError) and first.jobs == 0
+        assert second.error is None and second.result > 0 and second.jobs > 0

@@ -8,9 +8,7 @@ regression here is a 100 TB performance bug even while sf0.01 stays green.
 
 from __future__ import annotations
 
-import io
 import re
-from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
@@ -22,15 +20,9 @@ from graphrag_toolkit_spark.filters import (
     to_column,
 )
 from graphrag_toolkit_spark.operators import bfs, vss
+from graphrag_toolkit_spark.planguard import plan_of
 from graphrag_toolkit_spark.session import load
 from graphrag_toolkit_spark.workload import relational
-
-
-def plan_of(df, mode: str = "formatted") -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain(mode=mode)
-    return buf.getvalue()
 
 
 def read_schemas(plan: str) -> list[set[str]]:
@@ -533,53 +525,53 @@ def test_rank_family_job_counts(spark, jobs_submitted):
         assert n <= bound, (name, n, bound)
 
 
-def _assert_query_job_bounds(spark, sf_dir, jobs_submitted, bounds):
+def _assert_query_job_bounds(spark, sf_dir, bounds):
     """Each registry query in ``bounds`` submits at most its bound of jobs
     (build plus collect) at sf0.001. Cached tables left by other tests would
-    change the plans, so the cache is cleared first; blocks are released
-    between queries as the harnesses do. AQE's stage submission is
-    timing-dependent: now and then an identical call takes one job more. A
-    real rise shows in every call, so each query gets up to five calls to
+    change the plans, so the cache is cleared first; the queries run
+    through ``measure.sweep``, as the harnesses do. AQE's stage submission
+    is timing-dependent: now and then an identical call takes one job more.
+    A real rise shows in every call, so each query gets up to five calls to
     come within its bound."""
-    from graphrag_toolkit_spark.session import release_blocks
-    from graphrag_toolkit_spark.workload import all_queries
+    from graphrag_toolkit_spark.measure import sweep
 
-    queries = all_queries()
     spark.catalog.clearCache()
     for name, bound in bounds.items():
-        for _ in range(5):
-            n = jobs_submitted(lambda: queries[name](spark, sf_dir).collect())
-            release_blocks(spark)
-            if n <= bound:
+        for rec in sweep(spark, sf_dir, lambda df: df.collect(), [name] * 5):
+            if rec.error is not None:
+                raise rec.error
+            if rec.jobs <= bound:
                 break
-        assert n <= bound, (name, n, bound)
+        assert rec.jobs <= bound, (name, rec.jobs, bound)
 
 
-def test_near_dup_family_job_counts(spark, sf_dir, jobs_submitted):
+def test_near_dup_family_job_counts(spark, sf_dir):
     """Jobs per registry query (build plus collect) of the near-duplicate
     family at sf0.001; the bounds are the counts measured before the family
-    shared its pair kernels."""
-    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
-        "neardup_clusters_documents": 42,
-        "minhash_neardup_documents": 18,
-        "incremental_neardup_documents": 19,
+    shared its pair kernels, plus one job for the four MinHash-verified
+    queries since their verification joins are left to AQE (no broadcast
+    hint on corpus-wide candidates)."""
+    _assert_query_job_bounds(spark, sf_dir, {
+        "neardup_clusters_documents": 43,
+        "minhash_neardup_documents": 19,
+        "incremental_neardup_documents": 20,
         "ngram_jaccard_neardup": 18,
         "containment_pairs_documents": 15,
         "embedding_neardup_pairs": 3,
         "embedding_neardup_lsh": 4,
         "embedding_neardup_recall": 10,
         "semantic_dedup_embeddings": 43,
-        "soft_dedup_weights_documents": 47,
+        "soft_dedup_weights_documents": 48,
         "semantic_decontaminate_embeddings": 5,
     })
 
 
-def test_keyword_family_job_counts(spark, sf_dir, jobs_submitted):
+def test_keyword_family_job_counts(spark, sf_dir):
     """Jobs per registry query (build plus collect) of the TF-IDF/BM25
     family at sf0.001; the bounds are the counts measured with the scorers
     as lazy plans (before: tfidf 19, bm25 15, hybrid_rrf 29,
     retrieval_eval 35, top_terms 9)."""
-    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
+    _assert_query_job_bounds(spark, sf_dir, {
         "tfidf_documents": 12,
         "bm25_documents": 12,
         "hybrid_rrf_documents": 19,
@@ -588,14 +580,14 @@ def test_keyword_family_job_counts(spark, sf_dir, jobs_submitted):
     })
 
 
-def test_loop_family_job_counts(spark, sf_dir, jobs_submitted):
+def test_loop_family_job_counts(spark, sf_dir):
     """Jobs per registry query (build plus collect) of the operators that
     run on `functions.loop.fixpoint`, at sf0.001; the bounds are the counts
     measured with the round driver. Before it the k-core and k-truss peels
     checkpointed each round eagerly (kcore_parts 15, ktruss_parts 27) and
     raking re-joined a marginal aggregate per half-pass
     (ipf_rake_documents 14)."""
-    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
+    _assert_query_job_bounds(spark, sf_dir, {
         "kcore_parts": 12,
         "ktruss_parts": 25,
         "label_propagation_parts": 22,
@@ -606,7 +598,7 @@ def test_loop_family_job_counts(spark, sf_dir, jobs_submitted):
     })
 
 
-def test_checkpointed_intermediate_job_counts(spark, sf_dir, jobs_submitted):
+def test_checkpointed_intermediate_job_counts(spark, sf_dir):
     """Jobs per registry query (build plus collect) of the queries whose
     shared intermediate is a lazy local checkpoint, at sf0.001; the bounds
     are the counts measured with it. When these queries persisted it and
@@ -614,7 +606,7 @@ def test_checkpointed_intermediate_job_counts(spark, sf_dir, jobs_submitted):
     persisted relation and the return checkpoint cost jobs of their own
     (pmi 15, chi_square 16, unigram_kl 9, dau_mau 13, markov 11,
     entity_context 23, beam 21 and 27, minhash_jaccard_error 22)."""
-    _assert_query_job_bounds(spark, sf_dir, jobs_submitted, {
+    _assert_query_job_bounds(spark, sf_dir, {
         "pmi_collocations_documents": 10,
         "chi_square_documents": 11,
         "unigram_kl_documents": 6,

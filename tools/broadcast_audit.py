@@ -12,8 +12,8 @@ bounded-key aggregates, literal tables) or carry a written bound in
 
 Usage: python tools/broadcast_audit.py [sf_dir] [query ...]
 
-Plan-only — queries are never executed (eager localCheckpoints inside a
-handful of builders do run small jobs at the fixture SF)."""
+Plan-only: queries are built through ``measure.sweep``, never executed (it
+releases the blocks of the small jobs eager checkpoints run in a few builders)."""
 
 from __future__ import annotations
 
@@ -27,6 +27,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
+    from graphrag_toolkit_spark.measure import sweep
     from graphrag_toolkit_spark.session import build_session
 
     spark = build_session("broadcast-audit")
@@ -42,17 +43,18 @@ def main() -> int:
     )
 
     bad = 0
-    for name, fn in entrymod.queries().items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
-        try:
-            df = fn(spark, sf_dir)
-            v = hinted_broadcast_violations(df, query_name=name)
-        except Exception as exc:  # noqa: BLE001
-            print(f"  {name:45s} ERROR {type(exc).__name__}: {exc}")
+        (rec,) = sweep(
+            spark, sf_dir,
+            lambda df: hinted_broadcast_violations(df, query_name=name), [name],
+        )
+        v = rec.result
+        if rec.error is not None:
+            print(f"  {name:45s} ERROR {type(rec.error).__name__}: {rec.error}")
             bad += 1
-            continue
-        if v and name in BROADCAST_CONTRACT:
+        elif v and name in BROADCAST_CONTRACT:
             # request/construction-bounded sites the plan can't prove; the
             # site count stays visible so growth in a contract query is
             # noticed at review time

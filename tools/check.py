@@ -6,6 +6,9 @@ names, and an order-insensitive value hash. Float columns are compared
 bit-exactly — the workload's decimal/double discipline is supposed to make
 them identical; any drift is a bug to fix in the query, not the harness.
 
+Queries run through ``measure.sweep``; one that raises prints ERROR and
+fails the run. tests/test_workload_oracle.py calls the same ``compare``.
+
 Usage: python tools/check.py [sf_dir] [query ...]
 """
 
@@ -41,12 +44,13 @@ def _canon(v) -> str:
     return str(v)
 
 
+def _row_key(row: dict) -> str:
+    return "|".join(_canon(row[k]) for k in sorted(row.keys()))
+
+
 def value_hash(rows: list[dict]) -> str:
-    canon_rows = sorted(
-        "|".join(_canon(r[k]) for k in sorted(r.keys())) for r in rows
-    )
     h = sha256()
-    for row in canon_rows:
+    for row in sorted(map(_row_key, rows)):
         h.update(row.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
@@ -62,12 +66,49 @@ RISKY_DUCKDB_TYPES = {
 }
 
 
-def risky_oracle_types(rel) -> list[tuple[str, str]]:
-    return [
-        (c, str(t))
-        for c, t in zip(rel.columns, rel.types)
-        if str(t).split("(")[0] in RISKY_DUCKDB_TYPES
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with a view over each fixture table at ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def collect_rows(df) -> tuple[list[str], list[dict]]:
+    """The sweep action of an oracle compare: column names and rows."""
+    return df.columns, [r.asDict(recursive=True) for r in df.collect()]
+
+
+def compare(con, sql: str, columns: list[str], rows: list[dict]) -> tuple[bool, list[str]]:
+    """Compare a Spark result (``collect_rows``) with the oracle ``sql``:
+    risky oracle types, sorted column names, row count and value hash.
+    Returns ``(ok, lines)``: the status after the query name, then on a
+    hash mismatch with equal columns and counts up to three spark-only and
+    three oracle-only rows."""
+    rel = con.sql(sql)
+    risky = [(c, str(t)) for c, t in zip(rel.columns, rel.types)
+             if str(t).split("(")[0] in RISKY_DUCKDB_TYPES]
+    if risky:
+        return False, [f"FAIL risky oracle types {risky} — CAST them"]
+    rel = con.execute(sql)
+    ocols = [d[0] for d in rel.description]
+    orows = [dict(zip(ocols, row)) for row in rel.fetchall()]
+    scols, ocols = sorted(columns), sorted(ocols)
+    sh, oh = value_hash(rows), value_hash(orows)
+    ok_shape = scols == ocols and len(rows) == len(orows)
+    ok = ok_shape and sh == oh
+    lines = [
+        f"{'OK ' if ok else 'FAIL'} rows={len(rows):6d}/{len(orows):<6d} "
+        f"cols={'=' if scols == ocols else f'{scols} vs {ocols}'} "
+        f"hash={'=' if sh == oh else f'{sh} vs {oh}'}"
     ]
+    if ok_shape and sh != oh:
+        skeys, okeys = set(map(_row_key, rows)), set(map(_row_key, orows))
+        for keys, tag in ((skeys - okeys, "spark-only"), (okeys - skeys, "oracle-only")):
+            lines += [f"{tag}: {row[:200]}" for row in sorted(keys)[:3]]
+    return ok, lines
 
 
 def main() -> int:
@@ -77,73 +118,34 @@ def main() -> int:
     import pyspark
 
     import __spark_entry__ as entrymod
-    from graphrag_toolkit_spark.session import build_session, release_blocks
+    from graphrag_toolkit_spark.measure import sweep
+    from graphrag_toolkit_spark.session import build_session
 
     print(f"gate env: duckdb={duckdb.__version__} pyspark={pyspark.__version__} "
           f"python={sys.version.split()[0]}")
     spark = build_session("check")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    queries = entrymod.queries()
+    con = oracle_connection(sf_dir)
     oracles = entrymod.oracle_sql()
-    failures = []
-    for name, fn in queries.items():
-        if only and name not in only:
+    names = [n for n in entrymod.queries() if n in only] if only else None
+    failures = 0
+    for rec in sweep(spark, sf_dir, collect_rows, names):
+        name, t = rec.name, rec.seconds
+        if rec.error is not None:
+            print(f"  {name:45s} ERROR {type(rec.error).__name__}: {rec.error}")
+            failures += 1
             continue
-        import time
-
-        t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        srows = [r.asDict(recursive=True) for r in sdf.collect()]
-        t_spark = time.time() - t0
-        # collected — release this query's operator-internal checkpoint/
-        # persist blocks before building the next one (279 queries in one
-        # session otherwise accumulate storage that execution can't evict)
-        release_blocks(spark)
+        columns, rows = rec.result
         if name not in oracles:
-            print(f"  {name:45s} rows={len(srows):6d}  (no oracle — rows-only) {t_spark:5.1f}s")
-            if not srows:
-                failures.append((name, "empty result, no oracle"))
+            print(f"  {name:45s} rows={len(rows):6d}  (no oracle — rows-only) {t:5.1f}s")
+            failures += not rows
             continue
-        risky = risky_oracle_types(con.sql(oracles[name]))
-        if risky:
-            print(f"  {name:45s} FAIL risky oracle types {risky} — CAST them")
-            failures.append((name, f"risky oracle types {risky}"))
-            continue
-        orel = con.execute(oracles[name])
-        ocols = [d[0] for d in orel.description]
-        orows = [dict(zip(ocols, row)) for row in orel.fetchall()]
-
-        scols = sorted(sdf.columns)
-        ocols_sorted = sorted(ocols)
-        ok_cols = scols == ocols_sorted
-        ok_count = len(srows) == len(orows)
-        sh, oh = value_hash(srows), value_hash(orows)
-        ok_hash = sh == oh
-        status = "OK " if (ok_cols and ok_count and ok_hash) else "FAIL"
-        print(
-            f"  {name:45s} {status} rows={len(srows):6d}/{len(orows):<6d} "
-            f"cols={'=' if ok_cols else f'{scols} vs {ocols_sorted}'} "
-            f"hash={'=' if ok_hash else f'{sh} vs {oh}'} {t_spark:5.1f}s"
-        )
-        if status == "FAIL":
-            failures.append((name, f"cols={ok_cols} count={ok_count} hash={ok_hash}"))
-            if not ok_hash and ok_cols and ok_count:
-                skeys = {
-                    "|".join(_canon(r[k]) for k in sorted(r.keys())) for r in srows
-                }
-                okeys = {
-                    "|".join(_canon(r[k]) for k in sorted(r.keys())) for r in orows
-                }
-                for diff, tag in ((skeys - okeys, "spark-only"), (okeys - skeys, "oracle-only")):
-                    for row in sorted(diff)[:3]:
-                        print(f"      {tag}: {row[:200]}")
+        ok, lines = compare(con, oracles[name], columns, rows)
+        print(f"  {name:45s} {lines[0]} {t:5.1f}s")
+        for line in lines[1:]:
+            print(f"      {line}")
+        failures += not ok
     spark.stop()
-    print(f"\n{len(failures)} failures" if failures else "\nall green")
+    print(f"\n{failures} failures" if failures else "\nall green")
     return 1 if failures else 0
 
 

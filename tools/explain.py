@@ -2,15 +2,15 @@
 PLANS.md — the reviewable evidence behind SCALE.md's claims (pushed filters,
 pruned ReadSchema, broadcast joins, TakeOrderedAndProject, WindowGroupLimit).
 
+Queries are built through ``measure.sweep``; a failed build stops the run.
+
 Usage: python tools/explain.py [sf_dir]  (default /root/testdata/sf0.001)
 """
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -112,20 +112,17 @@ assertions that keep these shapes from regressing). What to look for:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
+    from graphrag_toolkit_spark.measure import sweep
+    from graphrag_toolkit_spark.planguard import plan_of
     from graphrag_toolkit_spark.session import build_session
-    from graphrag_toolkit_spark.workload import all_queries
 
     spark = build_session("explain")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-
     out = [HEADER]
-    for name in SHOWN:
-        df = queries[name](spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain(mode="formatted")
-        out.append(f"\n## {name}\n\n```\n{buf.getvalue().rstrip()}\n```\n")
+    for rec in sweep(spark, sf_dir, plan_of, SHOWN):
+        if rec.error is not None:
+            raise rec.error
+        out.append(f"\n## {rec.name}\n\n```\n{rec.result.rstrip()}\n```\n")
     spark.stop()
 
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")

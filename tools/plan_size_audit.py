@@ -17,16 +17,14 @@ Prints every query over --threshold formatted lines (default 400) and the
 Note: frames behind an EAGER localCheckpoint show only their tail (the
 rounds of iterative operators execute during construction), so this audit
 measures the plan Catalyst actually has to optimize per action — which is
-exactly the cost being bounded.
+exactly the cost being bounded. Queries are built through ``measure.sweep``.
 """
 
 from __future__ import annotations
 
 import argparse
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -38,26 +36,21 @@ def main() -> int:
     ap.add_argument("--threshold", type=int, default=400)
     args = ap.parse_args()
 
+    from graphrag_toolkit_spark.measure import sweep
+    from graphrag_toolkit_spark.planguard import plan_of
     from graphrag_toolkit_spark.session import build_session
     from graphrag_toolkit_spark.workload import all_queries
 
     spark = build_session("plan_size_audit")
     spark.sparkContext.setLogLevel("ERROR")
     rows = []
-    for name, fn in sorted(all_queries().items()):
-        try:
-            df = fn(spark, args.sf_dir)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain(mode="formatted")
-            plan = buf.getvalue()
-        except Exception as exc:  # construction failure = audit failure
-            print(f"  {name:45s} ERROR {type(exc).__name__}: {exc}")
-            rows.append((name, 10**9, -1))
-            continue
-        lines = plan.count("\n") + 1
-        exchanges = plan.count("Exchange")
-        rows.append((name, lines, exchanges))
+    for rec in sweep(spark, args.sf_dir, plan_of, sorted(all_queries())):
+        if rec.error is not None:  # construction failure = audit failure
+            print(f"  {rec.name:45s} ERROR {type(rec.error).__name__}: {rec.error}")
+            rows.append((rec.name, 10**9, -1))
+        else:
+            rows.append((rec.name, rec.result.count("\n") + 1,
+                         rec.result.count("Exchange")))
     rows.sort(key=lambda r: -r[1])
     over = [r for r in rows if r[1] > args.threshold]
     print(f"\n== top {args.top} plans by formatted lines ==")

@@ -4,6 +4,9 @@ evidence for SCALE.md's "linear in input" claims. A slope near 1.0 means
 doubling the data doubles the time; ≫1 flags a super-linear (pair/sort)
 stage; ≪1 means fixed overheads still dominate at these sizes (fine).
 
+Queries run through ``measure.sweep`` (time = build + collect); a failed
+query stops the probe.
+
 Writes SCALING.md and prints one JSON line.
 
 Usage: python tools/scale_probe.py [query ...]   (defaults below)
@@ -14,8 +17,8 @@ from __future__ import annotations
 import json
 import math
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -71,41 +74,33 @@ DEFAULT = [
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT
+    from graphrag_toolkit_spark.measure import sweep
     from graphrag_toolkit_spark.session import TESTDATA_TABLES, build_session, load
-    from graphrag_toolkit_spark.workload import all_queries
 
     spark = build_session("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
 
     rows_at: dict[str, int] = {}
     timings: dict[str, dict[str, float]] = {n: {} for n in names}
     for sf in SFS:
         sf_dir = f"/root/testdata/{sf}"
-        total = 0
-        for t in TESTDATA_TABLES:
-            try:
-                total += load(spark, sf_dir, t).count()
-            except Exception:
-                pass
-        rows_at[sf] = total
-        # warm-up per sf: run each query once untimed (JIT/footers), then time
-        for n in names:
-            queries[n](spark, sf_dir).count()
-        for n in names:
-            t0 = time.time()
-            queries[n](spark, sf_dir).collect()
-            timings[n][sf] = round(time.time() - t0, 3)
+        rows_at[sf] = sum(
+            load(spark, sf_dir, t).count()
+            for t in TESTDATA_TABLES
+            if os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
+        )
+        # every query twice per sf: the second run's time overwrites the
+        # first's, which paid the JIT and parquet footers
+        for rec in sweep(spark, sf_dir, lambda df: len(df.collect()), names * 2):
+            if rec.error is not None:
+                raise rec.error
+            timings[rec.name][sf] = round(rec.seconds, 3)
 
+    xs = [math.log10(rows_at[sf]) for sf in SFS]
     report: dict[str, dict] = {}
     for n in names:
-        xs = [math.log10(rows_at[sf]) for sf in SFS]
         ys = [math.log10(max(timings[n][sf], 1e-3)) for sf in SFS]
-        k = len(xs)
-        sx, sy = sum(xs), sum(ys)
-        sxx = sum(x * x for x in xs)
-        sxy = sum(x * y for x, y in zip(xs, ys))
-        slope = (k * sxy - sx * sy) / (k * sxx - sx * sx)
+        slope = statistics.linear_regression(xs, ys).slope
         report[n] = {"times": timings[n], "loglog_slope": round(slope, 3)}
 
     spark.stop()

@@ -4,8 +4,8 @@ over unbounded input (the 100 TB parallelism-ceiling anti-pattern).
 Usage: python tools/window_audit.py [sf_dir] [query ...]
 
 Prints one line per query: OK, or VIOLATION with the offending nodes.
-Plan-only — queries are never executed (eager localCheckpoints inside a
-handful of builders do run small jobs at the fixture SF)."""
+Plan-only: queries are built through ``measure.sweep``, never executed (it
+releases the blocks of the small jobs eager checkpoints run in a few builders)."""
 
 from __future__ import annotations
 
@@ -20,6 +20,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from graphrag_toolkit_spark.measure import sweep
     from graphrag_toolkit_spark.planguard import (
         CONTRACT_BOUNDED,
         singlepartition_window_violations,
@@ -28,20 +29,18 @@ def main() -> int:
 
     spark = build_session("window-audit")
     bad = 0
-    for name, fn in entrymod.queries().items():
+    for name in entrymod.queries():
         if only and name not in only:
             continue
         if name in CONTRACT_BOUNDED:
             print(f"  {name:45s} OK (contract: result-set-bounded window)")
             continue
-        try:
-            df = fn(spark, sf_dir)
-            v = singlepartition_window_violations(df)
-        except Exception as exc:  # noqa: BLE001
-            print(f"  {name:45s} ERROR {type(exc).__name__}: {exc}")
+        (rec,) = sweep(spark, sf_dir, singlepartition_window_violations, [name])
+        v = rec.result
+        if rec.error is not None:
+            print(f"  {name:45s} ERROR {type(rec.error).__name__}: {rec.error}")
             bad += 1
-            continue
-        if v:
+        elif v:
             bad += 1
             print(f"  {name:45s} VIOLATION x{len(v)}")
             for x in v:
